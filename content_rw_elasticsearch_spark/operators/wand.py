@@ -86,7 +86,11 @@ _TJOB_CACHE: dict[str, float] = {}
 # as prune_min_postings, applied one level down: tiny queries are served
 # by a bounded pyarrow read of the SAME parquet segments (never a cache
 # — every query re-reads storage), big queries take the distributed
-# plan unchanged. Memory bound: 2M postings ≈ 50 MB of int64 arrays.
+# plan unchanged. The bound admits searches, θ-seeds and phrase /
+# phrase_prefix queries at every slop; the phrase kernel also bails to
+# the distributed plan past 4x the bound in decoded positions or slop
+# tuples. Memory bound: 2M postings ≈ 50 MB of int64 arrays (4x that
+# for phrase positions).
 DRIVER_MAX_POSTINGS = 2_000_000
 
 _META_COLS = ["term", "salt", "nb", "count", "max_tf", "min_dl"]
@@ -855,34 +859,17 @@ class SegmentIndex:
                                after=after, filter_ids=filter_ids)
 
         # ---- block-max pruning math (driver-side, metadata only) ----
-        nb_all = self.nb_max
-        ub = np.zeros(nb_all)                      # score upper bound per class
-        present = np.ones(nb_all, dtype=bool)      # AND feasibility per class
-        present_cnt = np.zeros(nb_all, dtype=int)  # msm feasibility per class
-        cnt_min = np.full(nb_all, np.inf)
-        cnt_max = np.zeros(nb_all)
-        g = np.arange(nb_all)
-        for t, tgrp in meta.groupby("term"):
-            idf = self._idf(term_df[t], n_docs)
-            mp_full = np.zeros(nb_all)
-            ct_full = np.zeros(nb_all)
-            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
-                nb_t = int(nb_t)
-                mp = np.zeros(nb_t)
-                ct = np.zeros(nb_t)
-                part = _partial_np(grp["max_tf"].to_numpy(),
-                                   grp["min_dl"].to_numpy(), avgdl)
-                mp[grp["salt"].to_numpy()] = part
-                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
-                mp_full = np.maximum(mp_full, mp[g % nb_t])
-                ct_full += ct[g % nb_t]
-            ub += idf * mp_full
+        ub = np.zeros(self.nb_max)                  # score upper bound per class
+        present_cnt = np.zeros(self.nb_max, dtype=int)  # terms present per class
+        cnt_min = np.full(self.nb_max, np.inf)
+        cnt_max = np.zeros(self.nb_max)
+        for t, (ct_full, mp_full) in self._class_lattice(meta, avgdl).items():
+            ub += self._idf(term_df[t], n_docs) * mp_full
             cnt_min = np.minimum(cnt_min, ct_full)
             cnt_max = np.maximum(cnt_max, ct_full)
-            present &= ct_full > 0
-            present_cnt += (ct_full > 0).astype(int)
+            present_cnt += ct_full > 0
         if is_and:
-            feasible = present
+            feasible = present_cnt == len(terms)
         elif msm is not None:
             # a doc matching >= msm terms lives in a class where >= msm
             # of the terms have postings — same lattice, looser corner
@@ -943,6 +930,34 @@ class SegmentIndex:
             after=after, filter_ids=filter_ids,
         )
 
+    def _class_lattice(self, meta: pd.DataFrame, avgdl: "float | None" = None
+                       ) -> "dict[str, tuple[np.ndarray, np.ndarray]]":
+        """Per term: (posting count, block-max BM25 partial) of each global
+        salt class 0..nb_max-1, summed (counts) and maxed (partials) over
+        generations. Salting is aligned — block salt s of a term with nb_t
+        blocks holds exactly the docs of the classes g with g % nb_t == s —
+        so every block value broadcasts onto its classes with one gather.
+        The partials (the scorer's upper bound) are computed only when
+        ``avgdl`` is given; phrase feasibility needs the counts alone."""
+        g = np.arange(self.nb_max)
+        out = {}
+        for t, tgrp in meta.groupby("term"):
+            ct_full = np.zeros(self.nb_max)
+            mp_full = np.zeros(self.nb_max)
+            for (_gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
+                nb_t = int(nb_t)
+                salt = grp["salt"].to_numpy()
+                ct = np.zeros(nb_t)
+                ct[salt] = grp["count"].to_numpy()
+                ct_full += ct[g % nb_t]
+                if avgdl is not None:
+                    mp = np.zeros(nb_t)
+                    mp[salt] = _partial_np(grp["max_tf"].to_numpy(),
+                                           grp["min_dl"].to_numpy(), avgdl)
+                    mp_full = np.maximum(mp_full, mp[g % nb_t])
+            out[t] = (ct_full, mp_full)
+        return out
+
     @staticmethod
     def _keys_volume(meta: pd.DataFrame,
                      keys: "set[tuple[str, int, int]]") -> int:
@@ -954,84 +969,105 @@ class SegmentIndex:
             if (t, int(g), int(s)) in keys
         ))
 
-    def _phrase_local(self, terms: list[str],
+    def _phrase_local(self, slots: "list[list[str]]", slop: int,
                       keys: "set[tuple[str, int, int]]",
                       within_classes: "list[int] | None"
                       ) -> "list[tuple[int, int]] | None":
-        """Driver twin of the slop-0 phrase chain: decode the phrase
-        terms' positions from the AND-feasible blocks via pyarrow +
-        codec, then count adjacency tuples with sorted-key set
-        intersections — (doc_id << log2(M)) | pos keys, one np.isin per
-        adjacent term. Exactly the equi-join chain's semantics (the
-        distributed plan re-executes the python decode subtree once per
-        join branch; here positions decode ONCE). Returns None when the
-        packing would overflow or the decoded volume exceeds the bound —
-        the caller falls back to the distributed plan. Parity pinned by
-        tests/test_fast_path.py."""
-        uniq_terms = sorted(set(terms))
+        """Driver slot kernel for every phrase shape: slot i may be filled
+        by any of the terms ``slots[i]`` (one term for an exact phrase,
+        the expansion list for the phrase_prefix slot). Counts, per doc,
+        the tuples the distributed join chain in _phrase counts:
+        p_i == p0 + i at slop 0, else p_{i-1} < p_i <= p0 + i + slop.
+
+        Positions decode once per term from the AND-feasible blocks (the
+        distributed chain re-runs its python decode once per join
+        branch). Doc ids map to dense ordinals, so the sorted keys
+        ordinal*M + pos cannot overflow for any id width: ordinals stay
+        under the position volume cap and M under the longest doc plus
+        the phrase window. Slop 0 intersects keys with one np.isin per
+        slot; slop > 0 expands each partial tuple over its np.searchsorted
+        range. Rows come back doc-ordered, like the chain's orderBy.
+
+        Returns None — the caller then runs the distributed plan — when
+        positions are missing on disk, the position volume exceeds 4x
+        driver_max_postings (admission only knows posting counts, so this
+        catches tf-skewed data), or a slop > 0 expansion would hold more
+        than 4x driver_max_postings intermediate tuples."""
+        terms = sorted({t for slot in slots for t in slot})
+        code = {t: i for i, t in enumerate(terms)}
         blocks = self._blocks_local(
-            uniq_terms, keys,
-            cols=["term", "docs_vb", "tfs_vb", "pos_vb"])
-        per_term: dict[str, list] = {t: [] for t in uniq_terms}
-        total_pos = 0
+            terms, keys, cols=["term", "docs_vb", "tfs_vb", "pos_vb"])
+        cap = 4 * self.driver_max_postings
+        docs_l, pos_l, tcode_l = [], [], []
+        volume = 0
         for i in range(len(blocks)):
             pvb = blocks["pos_vb"].iat[i]
             if not pvb:
-                return None  # positions missing on disk: distributed path
-            docs = codec.delta_decode(
-                blocks["docs_vb"].iat[i]).astype(np.int64)
+                return None
             tfs = codec.varbyte_decode(blocks["tfs_vb"].iat[i])
-            total_pos += int(tfs.sum())
-            if total_pos > 4 * self.driver_max_postings:
-                return None  # tf-skewed volume: fall back
-            flat = codec.positions_decode(pvb, tfs).astype(np.int64)
-            drep = np.repeat(docs, tfs.astype(np.int64))
-            per_term[blocks["term"].iat[i]].append((drep, flat))
-        arrs = {}
-        max_pos, max_doc = 0, 0
-        for t in uniq_terms:
-            if per_term[t]:
-                d = np.concatenate([x[0] for x in per_term[t]])
-                p = np.concatenate([x[1] for x in per_term[t]])
-            else:
-                d, p = np.empty(0, np.int64), np.empty(0, np.int64)
-            if within_classes is not None and d.size:
-                cls = xxh64_long_np(d) % np.int64(self.nb_max)
-                m = np.isin(cls, np.asarray(sorted(within_classes),
-                                            dtype=np.int64))
-                d, p = d[m], p[m]
-            if d.size == 0:
-                return []  # a phrase term has no surviving positions
-            arrs[t] = (d, p)
-            max_pos = max(max_pos, int(p.max()))
-            max_doc = max(max_doc, abs(int(d.min())), abs(int(d.max())))
-        M = max_pos + len(terms) + 2
-        if max_doc > (1 << 62) // M:
-            return None  # key packing overflow: distributed path
-        keysets = {t: np.sort(arrs[t][0] * M + arrs[t][1])
-                   for t in set(terms)}
-        S = keysets[terms[0]]
-        for i, t in enumerate(terms[1:], start=1):
-            if S.size == 0:
-                return []
-            S = S[np.isin(S + i, keysets[t], assume_unique=True)]
-        if S.size == 0:
+            volume += int(tfs.sum())
+            if volume > cap:
+                return None
+            pos_l.append(codec.positions_decode(pvb, tfs).astype(np.int64))
+            docs_l.append(np.repeat(
+                codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64),
+                tfs.astype(np.int64)))
+            tcode_l.append(np.full(pos_l[-1].size,
+                                   code[blocks["term"].iat[i]]))
+        if not docs_l:
             return []
-        docs_u, counts = np.unique(S // M, return_counts=True)
-        return [(int(d), int(c)) for d, c in zip(docs_u, counts)]
+        doc_ids, ords = np.unique(np.concatenate(docs_l), return_inverse=True)
+        pos = np.concatenate(pos_l)
+        tcode = np.concatenate(tcode_l)
+        if within_classes is not None:
+            cls = xxh64_long_np(doc_ids) % np.int64(self.nb_max)
+            m = np.isin(cls, np.asarray(within_classes, dtype=np.int64))[ords]
+            ords, pos, tcode = ords[m], pos[m], tcode[m]
+        if pos.size == 0:
+            return []
+        slop = max(int(slop), 0)
+        M = int(pos.max()) + len(slots) + slop + 1
+        key = ords.astype(np.int64) * M + pos
+        # positions are unique per doc (one token each), so every slot's
+        # key set is duplicate-free
+        ks = [np.sort(key[np.isin(tcode, [code[t] for t in slot])])
+              for slot in slots]
+        first, weight = ks[0], None
+        if slop == 0:
+            for i in range(1, len(ks)):
+                first = first[np.isin(first + i, ks[i], assume_unique=True)]
+        else:
+            prev = first
+            for i in range(1, len(ks)):
+                lo = np.searchsorted(ks[i], prev, side="right")
+                cnt = np.searchsorted(ks[i], first + i + slop,
+                                      side="right") - lo
+                if i == len(ks) - 1:
+                    weight = cnt  # last slot: count, don't expand
+                    break
+                n = int(cnt.sum())
+                if n > cap:
+                    return None
+                row = np.repeat(np.arange(cnt.size), cnt)
+                prev = ks[i][np.arange(n) + (lo - np.cumsum(cnt) + cnt)[row]]
+                first = first[row]
+        tf = np.bincount(first // M, weights=weight,
+                         minlength=doc_ids.size).astype(np.int64)
+        hit = np.flatnonzero(tf)
+        return list(zip(doc_ids[hit].tolist(), tf[hit].tolist()))
 
     def phrase_search(self, phrase: str, field: str | None = None,
                       slop: int = 0,
                       within_classes: "list[int] | None" = None
                       ) -> DataFrame:
         """Phrase match over the positional segment store →
-        (doc_id, phrase_tf). Decodes positions ONLY for the phrase's
-        terms, restricted to salt classes where every term is present
-        (AND feasibility over the aligned salting — the same pruning
-        lattice the scorer uses), then chains adjacency equi-joins.
-        Requires an index built with with_positions=True. On a fielded
-        index the match is scoped to ``field`` (positions are per-field
-        token offsets, so phrases never span fields).
+        (doc_id, phrase_tf) ordered by doc_id. Decodes positions ONLY for
+        the phrase's terms, restricted to salt classes where every term is
+        present (AND feasibility over the aligned salting — the same
+        pruning lattice the scorer uses). Requires an index built with
+        with_positions=True. On a fielded index the match is scoped to
+        ``field`` (positions are per-field token offsets, so phrases never
+        span fields).
 
         ``slop`` > 0 is the proximity query (ES match_phrase slop, ordered
         form): a match is any tuple of strictly increasing positions —
@@ -1039,11 +1075,17 @@ class SegmentIndex:
         ``len(terms) - 1 + slop`` tokens of the first, i.e. up to ``slop``
         extra tokens interleave. phrase_tf counts such tuples. slop == 0
         is exactly the adjacency chain (strictly increasing positions with
-        last == first + n - 1 pigeonholes every gap to 1), kept as
-        equi-joins for the tighter physical plan. Each intermediate join
-        is bounded by ``p_i <= p0 + i + slop`` — implied by the final
-        window bound plus strict increase (p_{n-1} >= p_i + (n-1-i)), so
-        the per-step pruning never changes results.
+        last == first + n - 1 pigeonholes every gap to 1). Each
+        intermediate step is bounded by ``p_i <= p0 + i + slop`` — implied
+        by the final window bound plus strict increase
+        (p_{n-1} >= p_i + (n-1-i)), so the per-step pruning never changes
+        results.
+
+        Every slop takes the driver fast path when the index is base-only
+        and local and the candidate postings fit under
+        driver_max_postings (the slot kernel, _phrase_local); deltas, URI
+        stores, bigger candidate sets and the kernel's volume guards run
+        the distributed decode + adjacency-join chain.
 
         ``within_classes`` restricts the result to docs whose salt class
         is in the list (intersected with the AND-feasibility lattice;
@@ -1058,50 +1100,47 @@ class SegmentIndex:
             )
         prefix, _, _ = self._resolve_field(field)
         terms = [prefix + t for t in analyze_query_py(phrase, self.analyzer)]
-        empty = self._empty_df("doc_id long, phrase_tf long")
         if not terms:
-            return empty
+            return self._empty_df("doc_id long, phrase_tf long")
         meta = self._meta(sorted(set(terms)))
         if meta.empty or set(meta["term"].unique()) != set(terms):
-            return empty
-        # AND-feasible classes only
-        nb_all = self.nb_max
-        g = np.arange(nb_all)
-        present = np.ones(nb_all, dtype=bool)
-        for t, tgrp in meta.groupby("term"):
-            ct_full = np.zeros(nb_all)
-            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
-                nb_t = int(nb_t)
-                ct = np.zeros(nb_t)
-                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
-                ct_full += ct[g % nb_t]
-            present &= ct_full > 0
+            return self._empty_df("doc_id long, phrase_tf long")
+        return self._phrase([[t] for t in terms], meta, slop, within_classes)
+
+    def _phrase(self, slots: "list[list[str]]", meta: pd.DataFrame,
+                slop: int, within_classes: "list[int] | None") -> DataFrame:
+        """Shared body of phrase_search and phrase_prefix_search: slot i
+        is filled by any term of ``slots[i]``; ``meta`` covers them all.
+        → (doc_id, phrase_tf) ordered by doc_id.
+
+        The positional decode reads only the blocks of salt classes where
+        every slot has postings (AND over slots, OR within a slot — the
+        scorer's feasibility lattice), cut further to ``within_classes``.
+        On a fast-path eligible index whose candidate postings fit under
+        driver_max_postings the driver slot kernel (_phrase_local)
+        answers; every other case, and every guard the kernel trips,
+        runs the distributed decode + join chain."""
+        empty = self._empty_df("doc_id long, phrase_tf long")
+        lattice = self._class_lattice(meta)
+        present = np.ones(self.nb_max, dtype=bool)
+        for slot in slots:
+            present &= sum(lattice[t][0] for t in slot) > 0
         if within_classes is not None:
-            mask = np.zeros(nb_all, dtype=bool)
-            mask[[c for c in within_classes if 0 <= c < nb_all]] = True
+            mask = np.zeros(self.nb_max, dtype=bool)
+            mask[[c for c in within_classes if 0 <= c < self.nb_max]] = True
             present &= mask
         classes = [int(x) for x in np.flatnonzero(present)]
         if not classes:
             return empty
         keys = self._keys_for_classes(meta, classes)
-        # driver fast path (slop-0 only; slop chains and delta/tombstone
-        # state keep the distributed plan): the blocks are bounded by the
-        # AND-feasibility cut, and the distributed join chain re-executes
-        # its python decode subtree once per adjacency branch — measured
-        # 2-8 s for a two-term phrase at sf1.0 vs ~50 ms here.
-        # admission on POSTING count (known from metadata); the decoder
-        # itself re-checks the actual POSITION volume (sum tf, unknown
-        # here) against 4x the bound and bails to the distributed plan
-        # on tf-skewed data — so admission and runtime guard agree at
-        # avg tf <= 4, and heavier docs degrade to a safe fallback
-        if (self.driver_max_postings > 0 and slop <= 0
-                and self._fast_eligible(None)
+        if (self.driver_max_postings > 0 and self._fast_eligible(None)
                 and self._keys_volume(meta, keys)
                 <= self.driver_max_postings):
-            rows = self._phrase_local(terms, keys, within_classes)
+            rows = self._phrase_local(slots, slop, keys, within_classes)
             if rows is not None:
                 return self._values_df(rows, "doc_id long, phrase_tf long")
-        segs = self._filter_keys(self._segments(sorted(set(terms))), keys)
+        terms = sorted({t for slot in slots for t in slot})
+        segs = self._filter_keys(self._segments(terms), keys)
         par = self.spark.sparkContext.defaultParallelism
         decoded = segs.select("term", "gen", "docs_vb", "tfs_vb", "pos_vb") \
             .coalesce(max(1, par)) \
@@ -1111,7 +1150,7 @@ class SegmentIndex:
             # nb_t < nb_max (one block salt covers several global
             # classes); this columnar re-derivation makes the cut exact
             decoded = decoded.filter(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(nb_all))
+                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.nb_max))
                 .cast("int").isin([int(c) for c in within_classes]))
         tomb = self._tombstones()
         if tomb is not None:
@@ -1120,9 +1159,10 @@ class SegmentIndex:
                 .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
                 .drop("tgen")
             )
-        cur = decoded.filter(F.col("term") == terms[0]).select("doc_id", F.col("pos").alias("p0"))
-        for i, t in enumerate(terms[1:], start=1):
-            nxt = decoded.filter(F.col("term") == t).select(
+        cur = decoded.filter(F.col("term").isin(slots[0])).select(
+            "doc_id", F.col("pos").alias("p0"))
+        for i in range(1, len(slots)):
+            nxt = decoded.filter(F.col("term").isin(slots[i])).select(
                 F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}")
             )
             if slop <= 0:
@@ -1141,6 +1181,21 @@ class SegmentIndex:
             .orderBy("doc_id")
         )
 
+    def _prefix_expansions_local(self, last: str,
+                                 max_expansions: int) -> list[str]:
+        """The first ``max_expansions`` distinct base-segment terms that
+        start with ``last``, in sorted order — the fast-path twin of the
+        Spark term-dictionary scan in phrase_prefix_search. Reads the
+        ``term`` column alone; ``term >= last`` lets the term-sorted
+        layout prune row groups."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        col = pq.read_table(self._local_seg_dir(), columns=["term"],
+                            filters=[("term", ">=", last)]).column("term")
+        hits = pc.unique(col.filter(pc.starts_with(col, last)))
+        return sorted(hits.to_pylist())[:max(int(max_expansions), 0)]
+
     def phrase_prefix_search(self, phrase: str, field: str | None = None,
                              max_expansions: int = 50) -> DataFrame:
         """ES ``match_phrase_prefix`` (the autocomplete query): exact
@@ -1148,15 +1203,19 @@ class SegmentIndex:
         to the first ``max_expansions`` term-dictionary entries in
         lexicographic order (Lucene's expansion order and default cap),
         then matched as a MultiPhraseQuery — a position tuple counts if
-        the last slot holds ANY expansion. → (doc_id, phrase_tf).
+        the last slot holds ANY expansion. → (doc_id, phrase_tf) ordered
+        by doc_id.
 
-        Cost shape: the expansion is a METADATA-ONLY term-dictionary
-        scan (the term-sorted segment layout row-group-prunes the range,
-        like prefix_postings) with a bounded collect of <= max_expansions
-        terms; the positional decode then reads only the exact terms +
-        expansions, restricted to salt classes where every exact term AND
-        at least one expansion is present — the same feasibility lattice
-        phrase_search uses, with an OR corner for the expansion slot."""
+        Cost shape: the expansion is a term-dictionary scan that reads
+        only the term column (the term-sorted segment layout
+        row-group-prunes the range) — a pyarrow read on a fast-path
+        eligible index, otherwise a Spark job with a bounded collect of
+        <= max_expansions terms. The positional decode then reads only
+        the exact terms + expansions, restricted to salt classes where
+        every exact term AND at least one expansion is present — the
+        feasibility lattice phrase_search uses, with an OR corner for the
+        expansion slot — and takes the same driver fast path or
+        distributed chain as phrase_search at slop 0."""
         if not self.positions:
             raise ValueError(
                 "phrase_prefix_search requires a positional index — "
@@ -1169,85 +1228,22 @@ class SegmentIndex:
             return empty
         exact = [prefix + t for t in toks[:-1]]
         last = prefix + toks[-1]
-        expansions = [
-            r["term"] for r in
-            self._all_segments().filter(F.col("term").startswith(last))
-            .select("term").distinct()
-            .orderBy("term").limit(int(max_expansions)).collect()
-        ]
+        if self.driver_max_postings > 0 and self._fast_eligible(None):
+            expansions = self._prefix_expansions_local(last, max_expansions)
+        else:
+            expansions = [
+                r["term"] for r in
+                self._all_segments().filter(F.col("term").startswith(last))
+                .select("term").distinct()
+                .orderBy("term").limit(int(max_expansions)).collect()
+            ]
         if not expansions:
             return empty
-        all_terms = sorted(set(exact) | set(expansions))
-        meta = self._meta(all_terms)
+        meta = self._meta(sorted(set(exact) | set(expansions)))
         if meta.empty or not set(exact) <= set(meta["term"].unique()):
             return empty
-        nb_all = self.nb_max
-        g = np.arange(nb_all)
-        present = np.ones(nb_all, dtype=bool)
-        exp_present = np.zeros(nb_all, dtype=bool)
-        exact_set = set(exact)
-        for t, tgrp in meta.groupby("term"):
-            ct_full = np.zeros(nb_all)
-            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
-                nb_t = int(nb_t)
-                ct = np.zeros(nb_t)
-                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
-                ct_full += ct[g % nb_t]
-            if t in exact_set:
-                present &= ct_full > 0
-            else:
-                exp_present |= ct_full > 0
-        present &= exp_present
-        classes = [int(x) for x in np.flatnonzero(present)]
-        if not classes:
-            return empty
-        keys = self._keys_for_classes(meta, classes)
-        segs = self._filter_keys(self._segments(all_terms), keys)
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = segs.select("term", "gen", "docs_vb", "tfs_vb",
-                              "pos_vb") \
-            .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
-        n = len(toks)
-        if n == 1:
-            # bare prefix phrase: every occurrence of any expansion counts
-            return (
-                decoded.filter(F.col("term").isin(expansions))
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("phrase_tf"))
-                .orderBy("doc_id")
-            )
-        cur = decoded.filter(F.col("term") == exact[0]).select(
-            "doc_id", F.col("pos").alias("p0"))
-        for i, t in enumerate(exact[1:], start=1):
-            nxt = decoded.filter(F.col("term") == t).select(
-                F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}"))
-            cur = cur.join(
-                nxt,
-                (F.col("doc_id") == F.col(f"d{i}"))
-                & (F.col(f"p{i}") == F.col("p0") + i),
-            ).drop(f"d{i}")
-        i = n - 1
-        lastdf = decoded.filter(F.col("term").isin(expansions)).select(
-            F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}"))
-        cur = cur.join(
-            lastdf,
-            (F.col("doc_id") == F.col(f"d{i}"))
-            & (F.col(f"p{i}") == F.col("p0") + i),
-        ).drop(f"d{i}")
-        return (
-            cur.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("phrase_tf"))
-            .orderBy("doc_id")
-        )
+        return self._phrase([[t] for t in exact] + [expansions], meta, 0,
+                            None)
 
     def highlight(self, query: str, docs: DataFrame,
                   text_col: str = "content", doc_col: str = "doc_id",

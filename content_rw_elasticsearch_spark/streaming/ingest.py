@@ -130,6 +130,8 @@ def apply_upserts(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct("doc_id").alias("nd"),
             F.count(F.when(is_deleted, 1)).alias("ndel"),
+            # not n - ndel: a NULL flag is neither, and `live` drops it
+            F.count(F.when(~is_deleted, 1)).alias("nup"),
         ).collect()[0]
         if int(r["n"]) == 0:
             return None
@@ -139,7 +141,7 @@ def apply_upserts(
                 "pass ts_col= to reduce to last-writer-wins or pre-dedupe"
             )
         n_deletes = int(r["ndel"])
-        n_upserts = int(r["n"]) - n_deletes
+        n_upserts = int(r["nup"])
     gen = max(_committed_gens(fs, index_dir) + [int(m.get("min_gen", 0))]) + 1
     t0 = time.time()
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")

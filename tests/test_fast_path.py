@@ -1,11 +1,14 @@
 """Driver fast-path parity (round 6): the bounded pyarrow read + numpy
 scoring path must return EXACTLY what the distributed plan returns, for
 every branch of search() — exhaustive, forced-prune (θ-seed + keep
-decode), AND/OR/msm, search_after cursors, and the empty corner. The
-distributed twin is forced with driver_max_postings = 0."""
+decode), AND/OR/msm, search_after cursors, and the empty corner — and
+for the phrase slot kernel behind phrase_search (any slop) and
+phrase_prefix_search, including its volume guards. The distributed twin
+is forced with driver_max_postings = 0."""
 
 from __future__ import annotations
 
+import itertools
 import shutil
 
 import numpy as np
@@ -17,6 +20,10 @@ from content_rw_elasticsearch_spark.functions.hashing import (
 )
 from content_rw_elasticsearch_spark.operators.segments import build_segments
 from content_rw_elasticsearch_spark.operators.wand import SegmentIndex
+from content_rw_elasticsearch_spark.sources.corpus import (
+    synthesize_corpus,
+    with_doc_id,
+)
 
 SF_CORRECT = "/root/testdata/sf0.01"
 
@@ -176,3 +183,147 @@ def test_phrase_fast_path_within_classes(pos_idx):
     finally:
         pos_idx.driver_max_postings = 2_000_000
     assert fast == slow
+
+
+# -- the phrase slot kernel over 63-bit doc ids ---------------------------
+# with_doc_id ids are 63-bit hashes: before dense doc ordinals, the
+# (doc_id * M + pos) packing overflowed on them and every phrase left the
+# fast path, which the small sf0.01 ids above never showed.
+
+
+@pytest.fixture(scope="module")
+def hashed_pos_idx(spark):
+    corpus = with_doc_id(synthesize_corpus(spark, 600, seed=7))
+    out = "/tmp/test_fast_path_hashed_pos_idx"
+    shutil.rmtree(out, ignore_errors=True)
+    build_segments(corpus.select("doc_id", "content"), out,
+                   text_col="content", doc_col="doc_id", n_buckets=4,
+                   target_block=128, nb_max=64, snapshot_id="fast-path-63",
+                   with_positions=True)
+    yield SegmentIndex.load(spark, out)
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def _phrase_rows(df):
+    return [(r["doc_id"], r["phrase_tf"]) for r in df.collect()]
+
+
+def _spy_kernel(monkeypatch, idx):
+    """Record every return value of the instance's slot kernel."""
+    seen = []
+    kernel = idx._phrase_local
+
+    def spy(*args):
+        seen.append(kernel(*args))
+        return seen[-1]
+    monkeypatch.setattr(idx, "_phrase_local", spy)
+    return seen
+
+
+def _fast_and_distributed(monkeypatch, idx, call):
+    """(fast-path rows, distributed-arm rows) of one phrase call. The
+    fast call must be answered by the slot kernel, not a guard fallback."""
+    seen = _spy_kernel(monkeypatch, idx)
+    fast = _phrase_rows(call())
+    assert None not in seen
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    slow = _phrase_rows(call())
+    return fast, slow
+
+
+@pytest.mark.parametrize("phrase,slop", [
+    ("return self", 0),
+    ("return self", 1),
+    ("return self", 2),
+    ("tokenizer posting longdoc", 0),
+    ("import return self", 1),
+    ("import return self", 2),
+    ("return return", 0),
+    ("return return", 2),
+    ("zzzabsent return", 1),
+])
+def test_phrase_kernel_matches_distributed(monkeypatch, hashed_pos_idx,
+                                           phrase, slop):
+    fast, slow = _fast_and_distributed(
+        monkeypatch, hashed_pos_idx,
+        lambda: hashed_pos_idx.phrase_search(phrase, slop=slop))
+    assert fast == slow
+    assert fast or phrase.startswith("zzzabsent")
+    assert fast == sorted(fast)
+
+
+@pytest.mark.parametrize("phrase,max_expansions", [
+    ("ret", 50),        # one token: occurrence counts of every expansion
+    ("import re", 50),  # exact slot + prefix slot
+    ("return t", 2),    # cap below the number of matching terms
+])
+def test_phrase_prefix_kernel_matches_distributed(monkeypatch, hashed_pos_idx,
+                                                  phrase, max_expansions):
+    last = phrase.split()[-1]
+    if max_expansions == 2:
+        assert len(hashed_pos_idx._prefix_expansions_local(last, 100)) > 2
+    fast, slow = _fast_and_distributed(
+        monkeypatch, hashed_pos_idx,
+        lambda: hashed_pos_idx.phrase_prefix_search(
+            phrase, max_expansions=max_expansions))
+    assert fast == slow and fast
+
+
+def test_phrase_kernel_within_classes_slop(monkeypatch, hashed_pos_idx):
+    wc = [1, 5, 9, 33]
+    fast, slow = _fast_and_distributed(
+        monkeypatch, hashed_pos_idx,
+        lambda: hashed_pos_idx.phrase_search("return self", slop=1,
+                                             within_classes=wc))
+    assert fast == slow and fast
+    cls = xxh64_long_np(np.array([d for d, _ in fast])) % 64
+    assert set(cls.tolist()) <= set(wc)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_launched(spark, call):
+    """Spark jobs launched while ``call`` runs."""
+    sc = spark.sparkContext
+    group = f"fast-path-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "fast-path job count")
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_phrase_fast_path_launches_no_spark_jobs(spark, hashed_pos_idx):
+    """Building the answer launches no job; these answers (< 600 rows)
+    are VALUES literals, so collecting them launches none either."""
+    idx = hashed_pos_idx
+    for call in (lambda: idx.phrase_search("return self"),
+                 lambda: idx.phrase_search("import return self", slop=2),
+                 lambda: idx.phrase_prefix_search("ret"),
+                 lambda: idx.phrase_prefix_search("import re")):
+        call().collect()  # warm
+        assert _jobs_launched(spark, call) == 0
+        assert _jobs_launched(spark, lambda: call().collect()) == 0
+
+
+@pytest.mark.parametrize("phrase,slop,bound", [
+    # "return" and "self" average ~11 and ~6.5 positions per posting:
+    # their ~1.2k postings admit under a bound of 1,500, their ~10k
+    # positions exceed 4 x 1,500
+    ("return self", 0, 1_500),
+    # 591 postings and ~6.5k positions fit under 2,000 and 4 x 2,000;
+    # the ~12k slop-12 pairs after slot 1 do not
+    ("return return return", 12, 2_000),
+])
+def test_phrase_kernel_guard_falls_back(monkeypatch, hashed_pos_idx,
+                                        phrase, slop, bound):
+    idx = hashed_pos_idx
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    want = _phrase_rows(idx.phrase_search(phrase, slop=slop))
+    seen = _spy_kernel(monkeypatch, idx)
+    monkeypatch.setattr(idx, "driver_max_postings", bound)
+    got = _phrase_rows(idx.phrase_search(phrase, slop=slop))
+    assert seen == [None]  # admitted, then the guard handed it back
+    assert got == want and got

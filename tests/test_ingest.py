@@ -93,6 +93,27 @@ def test_duplicate_doc_ids_in_batch(spark):
     shutil.rmtree(path)
 
 
+def test_null_deleted_row_is_not_an_upsert(spark):
+    """A row whose ``deleted`` flag is NULL never reaches the live set
+    (``~deleted`` is NULL, so the filter drops it); the manifest's
+    n_upserts must count only the rows that were written as new versions."""
+    path = BASE + "_nulldel"
+    _mk_index(spark, path)
+    updates = spark.createDataFrame(
+        [
+            (9_999_999_003, "zzzlive fresh document", False),
+            (9_999_999_004, "zzznullflag flagged document", None),
+        ],
+        "doc_id long, content string, deleted boolean",
+    )
+    man = ingest.apply_upserts(spark, path, updates, "content", "doc_id", "deleted")
+    assert man["n_upserts"] == 1 and man["n_deletes"] == 0
+    idx = SegmentIndex.load(spark, path)
+    assert set(_ids(idx.search("zzzlive", k=10))) == {9_999_999_003}
+    assert set(_ids(idx.search("zzznullflag", k=10))) == set()
+    shutil.rmtree(path)
+
+
 def test_fold_restores_exact_parity(spark):
     path = BASE + "_fold"
     corpus = _mk_index(spark, path)
