@@ -930,15 +930,15 @@ class SegmentIndex:
             after=after, filter_ids=filter_ids,
         )
 
-    def _class_lattice(self, meta: pd.DataFrame, avgdl: "float | None" = None
+    def _class_lattice(self, meta: pd.DataFrame, avgdl: float
                        ) -> "dict[str, tuple[np.ndarray, np.ndarray]]":
         """Per term: (posting count, block-max BM25 partial) of each global
         salt class 0..nb_max-1, summed (counts) and maxed (partials) over
         generations. Salting is aligned — block salt s of a term with nb_t
         blocks holds exactly the docs of the classes g with g % nb_t == s —
         so every block value broadcasts onto its classes with one gather.
-        The partials (the scorer's upper bound) are computed only when
-        ``avgdl`` is given; phrase feasibility needs the counts alone."""
+        The partials are the scorer's upper bound; phrase feasibility
+        reads the counts alone."""
         g = np.arange(self.nb_max)
         out = {}
         for t, tgrp in meta.groupby("term"):
@@ -950,11 +950,10 @@ class SegmentIndex:
                 ct = np.zeros(nb_t)
                 ct[salt] = grp["count"].to_numpy()
                 ct_full += ct[g % nb_t]
-                if avgdl is not None:
-                    mp = np.zeros(nb_t)
-                    mp[salt] = _partial_np(grp["max_tf"].to_numpy(),
-                                           grp["min_dl"].to_numpy(), avgdl)
-                    mp_full = np.maximum(mp_full, mp[g % nb_t])
+                mp = np.zeros(nb_t)
+                mp[salt] = _partial_np(grp["max_tf"].to_numpy(),
+                                       grp["min_dl"].to_numpy(), avgdl)
+                mp_full = np.maximum(mp_full, mp[g % nb_t])
             out[t] = (ct_full, mp_full)
         return out
 
@@ -981,12 +980,14 @@ class SegmentIndex:
 
         Positions decode once per term from the AND-feasible blocks (the
         distributed chain re-runs its python decode once per join
-        branch). Doc ids map to dense ordinals, so the sorted keys
-        ordinal*M + pos cannot overflow for any id width: ordinals stay
-        under the position volume cap and M under the longest doc plus
-        the phrase window. Slop 0 intersects keys with one np.isin per
-        slot; slop > 0 expands each partial tuple over its np.searchsorted
-        range. Rows come back doc-ordered, like the chain's orderBy.
+        branch). Doc ids map to dense ordinals and slop is clamped to the
+        largest position + 1, so the sorted keys ordinal*M + pos cannot
+        overflow for any id width or slop: ordinals stay under the
+        position volume cap and M under about twice the longest doc.
+        Each slot expands the partial tuples over their np.searchsorted
+        ranges (at slop 0 a range holds at most one key) and the last
+        slot only counts. Rows come back doc-ordered, like the chain's
+        orderBy.
 
         Returns None — the caller then runs the distributed plan — when
         positions are missing on disk, the position volume exceeds 4x
@@ -1025,32 +1026,29 @@ class SegmentIndex:
             ords, pos, tcode = ords[m], pos[m], tcode[m]
         if pos.size == 0:
             return []
-        slop = max(int(slop), 0)
+        # every slop >= the largest position admits the same tuples, so
+        # the clamp keeps M (and the keys) small without changing answers
+        slop = min(max(int(slop), 0), int(pos.max()) + 1)
         M = int(pos.max()) + len(slots) + slop + 1
         key = ords.astype(np.int64) * M + pos
         # positions are unique per doc (one token each), so every slot's
         # key set is duplicate-free
         ks = [np.sort(key[np.isin(tcode, [code[t] for t in slot])])
               for slot in slots]
-        first, weight = ks[0], None
-        if slop == 0:
-            for i in range(1, len(ks)):
-                first = first[np.isin(first + i, ks[i], assume_unique=True)]
-        else:
-            prev = first
-            for i in range(1, len(ks)):
-                lo = np.searchsorted(ks[i], prev, side="right")
-                cnt = np.searchsorted(ks[i], first + i + slop,
-                                      side="right") - lo
-                if i == len(ks) - 1:
-                    weight = cnt  # last slot: count, don't expand
-                    break
-                n = int(cnt.sum())
-                if n > cap:
-                    return None
-                row = np.repeat(np.arange(cnt.size), cnt)
-                prev = ks[i][np.arange(n) + (lo - np.cumsum(cnt) + cnt)[row]]
-                first = first[row]
+        first = prev = ks[0]
+        weight = None
+        for i in range(1, len(ks)):
+            lo = np.searchsorted(ks[i], prev, side="right")
+            cnt = np.searchsorted(ks[i], first + i + slop, side="right") - lo
+            if i == len(ks) - 1:
+                weight = cnt  # last slot: count, don't expand
+                break
+            n = int(cnt.sum())
+            if n > cap:
+                return None
+            row = np.repeat(np.arange(cnt.size), cnt)
+            prev = ks[i][np.arange(n) + (lo - np.cumsum(cnt) + cnt)[row]]
+            first = first[row]
         tf = np.bincount(first // M, weights=weight,
                          minlength=doc_ids.size).astype(np.int64)
         hit = np.flatnonzero(tf)
@@ -1098,17 +1096,19 @@ class SegmentIndex:
                 "build_segments(..., with_positions=True); this index was "
                 "built without positions"
             )
-        prefix, _, _ = self._resolve_field(field)
+        prefix, _, avgdl = self._resolve_field(field)
         terms = [prefix + t for t in analyze_query_py(phrase, self.analyzer)]
         if not terms:
             return self._empty_df("doc_id long, phrase_tf long")
         meta = self._meta(sorted(set(terms)))
         if meta.empty or set(meta["term"].unique()) != set(terms):
             return self._empty_df("doc_id long, phrase_tf long")
-        return self._phrase([[t] for t in terms], meta, slop, within_classes)
+        return self._phrase([[t] for t in terms], meta, avgdl, slop,
+                            within_classes)
 
     def _phrase(self, slots: "list[list[str]]", meta: pd.DataFrame,
-                slop: int, within_classes: "list[int] | None") -> DataFrame:
+                avgdl: float, slop: int,
+                within_classes: "list[int] | None") -> DataFrame:
         """Shared body of phrase_search and phrase_prefix_search: slot i
         is filled by any term of ``slots[i]``; ``meta`` covers them all.
         → (doc_id, phrase_tf) ordered by doc_id.
@@ -1121,7 +1121,7 @@ class SegmentIndex:
         answers; every other case, and every guard the kernel trips,
         runs the distributed decode + join chain."""
         empty = self._empty_df("doc_id long, phrase_tf long")
-        lattice = self._class_lattice(meta)
+        lattice = self._class_lattice(meta, avgdl)
         present = np.ones(self.nb_max, dtype=bool)
         for slot in slots:
             present &= sum(lattice[t][0] for t in slot) > 0
@@ -1186,13 +1186,21 @@ class SegmentIndex:
         """The first ``max_expansions`` distinct base-segment terms that
         start with ``last``, in sorted order — the fast-path twin of the
         Spark term-dictionary scan in phrase_prefix_search. Reads the
-        ``term`` column alone; ``term >= last`` lets the term-sorted
-        layout prune row groups."""
+        ``term`` column alone, filtered to ``last <= term < upper`` (upper:
+        ``last`` with its final character incremented, the least string
+        above every extension of ``last``), so the term-sorted layout
+        prunes row groups on both sides of the prefix range."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        filters = [("term", ">=", last)]
+        nxt = ord(last[-1]) + 1
+        if 0xD800 <= nxt <= 0xDFFF:
+            nxt = 0xE000  # surrogates never occur in a str term
+        if nxt <= 0x10FFFF:
+            filters.append(("term", "<", last[:-1] + chr(nxt)))
         col = pq.read_table(self._local_seg_dir(), columns=["term"],
-                            filters=[("term", ">=", last)]).column("term")
+                            filters=filters).column("term")
         hits = pc.unique(col.filter(pc.starts_with(col, last)))
         return sorted(hits.to_pylist())[:max(int(max_expansions), 0)]
 
@@ -1221,7 +1229,7 @@ class SegmentIndex:
                 "phrase_prefix_search requires a positional index — "
                 "rebuild with build_segments(..., with_positions=True)"
             )
-        prefix, _, _ = self._resolve_field(field)
+        prefix, _, avgdl = self._resolve_field(field)
         toks = analyze_query_py(phrase, self.analyzer)
         empty = self._empty_df("doc_id long, phrase_tf long")
         if not toks:
@@ -1242,8 +1250,8 @@ class SegmentIndex:
         meta = self._meta(sorted(set(exact) | set(expansions)))
         if meta.empty or not set(exact) <= set(meta["term"].unique()):
             return empty
-        return self._phrase([[t] for t in exact] + [expansions], meta, 0,
-                            None)
+        return self._phrase([[t] for t in exact] + [expansions], meta,
+                            avgdl, 0, None)
 
     def highlight(self, query: str, docs: DataFrame,
                   text_col: str = "content", doc_col: str = "doc_id",

@@ -241,6 +241,9 @@ def _fast_and_distributed(monkeypatch, idx, call):
     ("return return", 0),
     ("return return", 2),
     ("zzzabsent return", 1),
+    # a slop past every position: the kernel's key width must not grow
+    # with it (ordinal * M would wrap int64 here)
+    ("return self", 10**17),
 ])
 def test_phrase_kernel_matches_distributed(monkeypatch, hashed_pos_idx,
                                            phrase, slop):
