@@ -37,6 +37,15 @@ drops only remove score mass, and ub uses the max over generations — so
 dropped docs cannot be in the true top-k. Stray docs decoded via a coarse
 block that belong to a dropped class are filtered out by re-deriving their
 class from doc_id.
+
+Driver fast path (DRIVER_MAX_POSTINGS): on a local store, queries whose
+candidate postings fit under the bound skip Spark entirely. The same
+phases run as pyarrow reads of the base and every loaded delta
+generation's segment dirs, each posting tagged with its generation, and
+numpy scoring; the tombstone rule above is one np.searchsorted over the
+generations' tombstone ids. Base-only and delta indexes take the same
+code; URI stores, filter context and over-bound queries take the
+distributed plan.
 """
 
 from __future__ import annotations
@@ -84,9 +93,11 @@ _TJOB_CACHE: dict[str, float] = {}
 # varbyte parquet that pyarrow + the numpy codec decode and score in
 # tens of milliseconds. This is the same measured-crossover discipline
 # as prune_min_postings, applied one level down: tiny queries are served
-# by a bounded pyarrow read of the SAME parquet segments (never a cache
-# — every query re-reads storage), big queries take the distributed
-# plan unchanged. The bound admits searches, θ-seeds and phrase /
+# by a bounded pyarrow read of the SAME parquet segments — base and delta
+# generations, tombstones included (never a cache — every query re-reads
+# storage), big queries take the distributed plan unchanged. The bound
+# counts superseded delta postings too (the same Lucene-approximate
+# counts as df). The bound admits searches, θ-seeds and phrase /
 # phrase_prefix queries at every slop; the phrase kernel also bails to
 # the distributed plan past 4x the bound in decoded positions or slop
 # tuples. Memory bound: 2M postings ≈ 50 MB of int64 arrays (4x that
@@ -407,15 +418,13 @@ class SegmentIndex:
 
     def _meta(self, terms: list[str]) -> pd.DataFrame:
         """Metadata-only scan — binary columns never touched. On a local
-        base-only index the scan is a direct pyarrow read (row-group
-        pruned by the term-sorted layout, no Spark job — the same file
-        set and filters the Spark plan reads); delta generations and URI
-        stores keep the Spark path. Equivalence is pinned by
-        tests/test_fast_path.py."""
-        d = self._local_seg_dir()
-        if (d is not None and not self.generations
-                and self.driver_max_postings > 0):
-            return self._meta_local(d, terms)
+        index the scan is a direct pyarrow read of the base and every
+        loaded delta generation (row-group pruned by the term-sorted
+        layout, no Spark job — the same file set, filters and gen column
+        the Spark plan reads); URI stores keep the Spark path.
+        Equivalence is pinned by tests/test_fast_path.py."""
+        if self._local_seg_dirs() is not None and self.driver_max_postings > 0:
+            return self._meta_local(terms)
         return (
             self._segments(terms)
             .select("term", "gen", "salt", "nb", "count", "max_tf", "min_dl")
@@ -423,45 +432,66 @@ class SegmentIndex:
         )
 
     # -- driver fast path (bounded local reads; see DRIVER_MAX_POSTINGS) --
-    def _local_seg_dir(self) -> "str | None":
-        """Base-segment directory for the driver fast path, or None when
-        the store is not a plain local path (URI stores go through the
-        JVM Hadoop filesystem and the distributed plan)."""
+    def _local_seg_dirs(self) -> "list[tuple[int, str]] | None":
+        """(gen, segment dir) of the base (gen 0) and of every loaded delta
+        generation for the driver fast path — the file set _all_segments
+        reads — or None when the store is not a plain local path (URI
+        stores go through the JVM Hadoop filesystem and the distributed
+        plan). A delta dir that is gone (a handle loaded before a merge or
+        fold retired it) raises, as the Spark read of it would."""
         if "://" in self.path:
             return None
-        d = os.path.join(self.path, self.seg_dir)
-        return d if os.path.isdir(d) else None
+        base = os.path.join(self.path, self.seg_dir)
+        if not os.path.isdir(base):
+            return None
+        dirs = [(0, base)]
+        for g in self.generations:
+            d = os.path.join(self.path, "delta", f"gen={g}", "segments")
+            if not os.path.isdir(d):
+                raise FileNotFoundError(
+                    f"delta generation {g} is gone ({d}); reload the index")
+            dirs.append((g, d))
+        return dirs
 
     def _fast_eligible(self, filter_ids: "DataFrame | None") -> bool:
-        """Fast-path admission: base-only (delta generations carry
-        tombstones and per-gen stats — the distributed path owns that
-        logic), local storage, and no ES filter context (an arbitrary
-        DataFrame the driver cannot evaluate)."""
-        return (filter_ids is None and not self.generations
-                and self._local_seg_dir() is not None)
+        """Fast-path admission: local storage and no ES filter context (an
+        arbitrary DataFrame the driver cannot evaluate). Delta
+        generations are read like the base, their tombstones applied by
+        _live_mask."""
+        return filter_ids is None and self._local_seg_dirs() is not None
 
-    def _bucket_dirs(self, seg_dir: str, terms: list[str]) -> list[tuple]:
-        """(bucket_dir, terms_in_bucket) for the buckets the query terms
-        hash to — the same driver-side bucket pruning _segments does."""
+    def _bucket_dirs(self, terms: list[str]) -> "list[tuple[int, str, list[str]]]":
+        """(gen, bucket_dir, terms_in_bucket) over the base and delta
+        segment dirs, for the buckets the query terms hash to — the same
+        driver-side bucket pruning _segments does."""
         by_bucket: dict[int, list[str]] = {}
         for t in terms:
             by_bucket.setdefault(pmod(xxh64_string(t), self.n_buckets),
                                  []).append(t)
         out = []
-        for b, ts in sorted(by_bucket.items()):
-            bd = os.path.join(seg_dir, f"bucket={b}")
-            if os.path.isdir(bd):
-                out.append((bd, sorted(ts)))
+        for gen, seg_dir in self._local_seg_dirs():
+            for b, ts in sorted(by_bucket.items()):
+                bd = os.path.join(seg_dir, f"bucket={b}")
+                if os.path.isdir(bd):
+                    out.append((gen, bd, sorted(ts)))
         return out
 
-    def _meta_local(self, seg_dir: str, terms: list[str]) -> pd.DataFrame:
+    @staticmethod
+    def _with_gen(tab, gen: int):
+        """Arrow table + an int32 ``gen`` column (the Spark F.lit(g) type)."""
+        import pyarrow as pa
+
+        return tab.append_column(
+            "gen", pa.array(np.full(tab.num_rows, gen, dtype=np.int32)))
+
+    def _meta_local(self, terms: list[str]) -> pd.DataFrame:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         tabs = [
-            pq.read_table(bd, columns=_META_COLS,
-                          filters=[("term", "in", ts)])
-            for bd, ts in self._bucket_dirs(seg_dir, terms)
+            self._with_gen(pq.read_table(bd, columns=_META_COLS,
+                                         filters=[("term", "in", ts)]), gen)
+            for gen, bd, ts in self._bucket_dirs(terms)
         ]
         tabs = [t for t in tabs if t.num_rows]
         if not tabs:
@@ -469,50 +499,90 @@ class SegmentIndex:
                 {c: pd.Series(dtype="int64") if c != "term"
                  else pd.Series(dtype="object")
                  for c in ["term", "gen"] + _META_COLS[1:]})
-        pdf = pa.concat_tables(tabs).to_pandas()
-        pdf.insert(1, "gen", np.int32(0))
-        return pdf
+        return pa.concat_tables(tabs).to_pandas()[
+            ["term", "gen"] + _META_COLS[1:]]
 
     def _blocks_local(self, terms: list[str],
                       keys: "set[tuple[str, int, int]] | None" = None,
                       cols: "list[str] | None" = None) -> pd.DataFrame:
-        """Base segment rows WITH binary columns via pyarrow, filtered to
-        the query terms (and, for the pruned plan, to the (term, salt)
-        block keys) — the fast-path twin of _segments/_filter_keys."""
+        """Base and delta segment rows WITH binary columns via pyarrow,
+        plus their ``gen``, filtered to the query terms (and, for the
+        pruned plan, to the (term, gen, salt) block keys) — the fast-path
+        twin of _segments/_filter_keys."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if cols is None:
             cols = ["term", "salt", "count", "docs_vb", "tfs_vb",
                     "dlens_vb"]
-        by_term: "dict[str, list[int]] | None" = None
+        by_key: "dict[tuple[str, int], list[int]] | None" = None
         if keys is not None:
-            by_term = {}
-            for t, _gen, s in keys:
-                by_term.setdefault(t, []).append(int(s))
+            by_key = {}
+            for t, g, s in keys:
+                by_key.setdefault((t, int(g)), []).append(int(s))
         tabs = []
-        for bd, ts in self._bucket_dirs(self._local_seg_dir(), terms):
-            if by_term is None:
+        for gen, bd, ts in self._bucket_dirs(terms):
+            if by_key is None:
                 filters = [("term", "in", ts)]
             else:
                 filters = [
-                    [("term", "=", t), ("salt", "in", sorted(by_term[t]))]
-                    for t in ts if t in by_term
+                    [("term", "=", t), ("salt", "in", sorted(by_key[t, gen]))]
+                    for t in ts if (t, gen) in by_key
                 ]
                 if not filters:
                     continue
             tab = pq.read_table(bd, columns=cols, filters=filters)
             if tab.num_rows:
-                tabs.append(tab)
+                tabs.append(self._with_gen(tab, gen))
         if not tabs:
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=cols + ["gen"])
         return pa.concat_tables(tabs).to_pandas()
+
+    def _tombstones_local(self) -> "tuple[np.ndarray, np.ndarray]":
+        """(doc_id, tgen) of the loaded generations' tombstones as numpy
+        arrays sorted by doc_id, tgen the max tombstone generation per
+        doc — the pyarrow twin of _tombstones. Re-read on every call,
+        like every other fast-path read."""
+        import pyarrow.parquet as pq
+
+        ids_l, gen_l = [], []
+        for g in self.generations:
+            col = pq.read_table(
+                os.path.join(self.path, "delta", f"gen={g}", "tombstones"),
+                columns=["doc_id"]).column("doc_id").drop_null()
+            ids_l.append(col.to_numpy().astype(np.int64))
+            gen_l.append(np.full(len(col), g, dtype=np.int64))
+        if not ids_l:
+            z = np.empty(0, np.int64)
+            return z, z
+        # generations are ascending, so after a stable sort by id the last
+        # row of each id run holds its max tombstone generation
+        ids = np.concatenate(ids_l)
+        order = np.argsort(ids, kind="stable")
+        ids, gens = ids[order], np.concatenate(gen_l)[order]
+        last = np.append(ids[1:] != ids[:-1], True)
+        return ids[last], gens[last]
+
+    def _live_mask(self, doc_ids: np.ndarray, blocks: pd.DataFrame,
+                   sizes: "list[int]") -> "np.ndarray | None":
+        """Mask of the decoded postings no later tombstone kills — the
+        distributed rule ``tgen IS NULL OR tgen <= gen`` as one
+        np.searchsorted over _tombstones_local — or None when there is no
+        tombstone. ``doc_ids`` concatenates the blocks' decoded rows,
+        ``sizes[i]`` of them from block i."""
+        t_ids, t_gen = self._tombstones_local()
+        if t_ids.size == 0:
+            return None
+        gens = np.repeat(blocks["gen"].to_numpy(np.int64), sizes)
+        i = np.minimum(np.searchsorted(t_ids, doc_ids), t_ids.size - 1)
+        return (t_ids[i] != doc_ids) | (t_gen[i] <= gens)
 
     def _decode_local(self, blocks: pd.DataFrame
                       ) -> "tuple[np.ndarray, ...]":
         """Decode fast-path block rows → flat (doc_ids, tfs, dls,
-        term_idx, uniq_terms) numpy arrays — the same codec the
-        distributed decoder runs, minus the Arrow boundary."""
+        term_idx, uniq_terms) numpy arrays of the live postings — the same
+        codec the distributed decoder runs, minus the Arrow boundary, and
+        the same tombstone drop the distributed scorer applies."""
         terms_b = blocks["term"].to_numpy(object)
         uniq, tcodes = np.unique(terms_b, return_inverse=True)
         docs_l, tfs_l, dls_l, tidx_l = [], [], [], []
@@ -527,8 +597,11 @@ class SegmentIndex:
         if not docs_l:
             z = np.empty(0, np.int64)
             return z, z, z, z, uniq
-        return (np.concatenate(docs_l), np.concatenate(tfs_l),
-                np.concatenate(dls_l), np.concatenate(tidx_l), uniq)
+        out = [np.concatenate(a) for a in (docs_l, tfs_l, dls_l, tidx_l)]
+        live = self._live_mask(out[0], blocks, [d.size for d in docs_l])
+        if live is not None:
+            out = [a[live] for a in out]
+        return (*out, uniq)
 
     def _score_local(self, blocks: pd.DataFrame, term_df: dict,
                      required: "int | None", k: "int | None",
@@ -987,7 +1060,8 @@ class SegmentIndex:
         Each slot expands the partial tuples over their np.searchsorted
         ranges (at slop 0 a range holds at most one key) and the last
         slot only counts. Rows come back doc-ordered, like the chain's
-        orderBy.
+        orderBy. Positions of superseded postings (a later generation's
+        tombstone) are dropped before any key is built.
 
         Returns None — the caller then runs the distributed plan — when
         positions are missing on disk, the position volume exceeds 4x
@@ -1017,9 +1091,13 @@ class SegmentIndex:
                                    code[blocks["term"].iat[i]]))
         if not docs_l:
             return []
-        doc_ids, ords = np.unique(np.concatenate(docs_l), return_inverse=True)
+        docs = np.concatenate(docs_l)
         pos = np.concatenate(pos_l)
         tcode = np.concatenate(tcode_l)
+        live = self._live_mask(docs, blocks, [p.size for p in pos_l])
+        if live is not None:
+            docs, pos, tcode = docs[live], pos[live], tcode[live]
+        doc_ids, ords = np.unique(docs, return_inverse=True)
         if within_classes is not None:
             cls = xxh64_long_np(doc_ids) % np.int64(self.nb_max)
             m = np.isin(cls, np.asarray(within_classes, dtype=np.int64))[ords]
@@ -1079,11 +1157,11 @@ class SegmentIndex:
         (p_{n-1} >= p_i + (n-1-i)), so the per-step pruning never changes
         results.
 
-        Every slop takes the driver fast path when the index is base-only
-        and local and the candidate postings fit under
-        driver_max_postings (the slot kernel, _phrase_local); deltas, URI
-        stores, bigger candidate sets and the kernel's volume guards run
-        the distributed decode + adjacency-join chain.
+        Every slop takes the driver fast path when the index is local
+        (base-only or with delta generations) and the candidate postings
+        fit under driver_max_postings (the slot kernel, _phrase_local);
+        URI stores, bigger candidate sets and the kernel's volume guards
+        run the distributed decode + adjacency-join chain.
 
         ``within_classes`` restricts the result to docs whose salt class
         is in the list (intersected with the AND-feasibility lattice;
@@ -1116,10 +1194,11 @@ class SegmentIndex:
         The positional decode reads only the blocks of salt classes where
         every slot has postings (AND over slots, OR within a slot — the
         scorer's feasibility lattice), cut further to ``within_classes``.
-        On a fast-path eligible index whose candidate postings fit under
+        On a fast-path eligible (local) index whose candidate postings —
+        base and delta generations together — fit under
         driver_max_postings the driver slot kernel (_phrase_local)
-        answers; every other case, and every guard the kernel trips,
-        runs the distributed decode + join chain."""
+        answers, tombstones applied; every other case, and every guard
+        the kernel trips, runs the distributed decode + join chain."""
         empty = self._empty_df("doc_id long, phrase_tf long")
         lattice = self._class_lattice(meta, avgdl)
         present = np.ones(self.nb_max, dtype=bool)
@@ -1183,13 +1262,14 @@ class SegmentIndex:
 
     def _prefix_expansions_local(self, last: str,
                                  max_expansions: int) -> list[str]:
-        """The first ``max_expansions`` distinct base-segment terms that
-        start with ``last``, in sorted order — the fast-path twin of the
-        Spark term-dictionary scan in phrase_prefix_search. Reads the
-        ``term`` column alone, filtered to ``last <= term < upper`` (upper:
-        ``last`` with its final character incremented, the least string
-        above every extension of ``last``), so the term-sorted layout
-        prunes row groups on both sides of the prefix range."""
+        """The first ``max_expansions`` distinct terms of the base and
+        delta segments that start with ``last``, in sorted order — the
+        fast-path twin of the Spark term-dictionary scan over
+        _all_segments in phrase_prefix_search. Reads the ``term`` column
+        alone, filtered to ``last <= term < upper`` (upper: ``last`` with
+        its final character incremented, the least string above every
+        extension of ``last``), so the term-sorted layout prunes row
+        groups on both sides of the prefix range."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -1199,10 +1279,16 @@ class SegmentIndex:
             nxt = 0xE000  # surrogates never occur in a str term
         if nxt <= 0x10FFFF:
             filters.append(("term", "<", last[:-1] + chr(nxt)))
-        col = pq.read_table(self._local_seg_dir(), columns=["term"],
-                            filters=filters).column("term")
-        hits = pc.unique(col.filter(pc.starts_with(col, last)))
-        return sorted(hits.to_pylist())[:max(int(max_expansions), 0)]
+        hits: set[str] = set()
+        for _gen, d in self._local_seg_dirs():
+            # a delete-only delta has no bucket dirs (nothing to read)
+            if not any(n.startswith("bucket=") for n in os.listdir(d)):
+                continue
+            col = pq.read_table(d, columns=["term"],
+                                filters=filters).column("term")
+            hits.update(pc.unique(col.filter(pc.starts_with(col, last)))
+                        .to_pylist())
+        return sorted(hits)[:max(int(max_expansions), 0)]
 
     def phrase_prefix_search(self, phrase: str, field: str | None = None,
                              max_expansions: int = 50) -> DataFrame:
@@ -1214,11 +1300,11 @@ class SegmentIndex:
         the last slot holds ANY expansion. → (doc_id, phrase_tf) ordered
         by doc_id.
 
-        Cost shape: the expansion is a term-dictionary scan that reads
-        only the term column (the term-sorted segment layout
-        row-group-prunes the range) — a pyarrow read on a fast-path
-        eligible index, otherwise a Spark job with a bounded collect of
-        <= max_expansions terms. The positional decode then reads only
+        Cost shape: the expansion is a term-dictionary scan of the base
+        and delta segments that reads only the term column (the
+        term-sorted segment layout row-group-prunes the range) — a
+        pyarrow read on a fast-path eligible (local) index, otherwise a
+        Spark job with a bounded collect of <= max_expansions terms. The positional decode then reads only
         the exact terms + expansions, restricted to salt classes where
         every exact term AND at least one expansion is present — the
         feasibility lattice phrase_search uses, with an OR corner for the

@@ -426,11 +426,17 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     for name in fs.listdir(index_dir):
         if name.startswith("delta_manifest_") and name.endswith(".json"):
             fs.rmtree(pjoin(index_dir, name))
+    min_gen = m["min_gen"]
+    delta_root = pjoin(index_dir, "delta")
 
     def _gc():
         fs.rmtree(pjoin(index_dir, old_seg_dir))
         fs.rmtree(pjoin(index_dir, old_stats))
-        fs.rmtree(pjoin(index_dir, "delta"))
+        # only the folded generations: an apply_upserts that runs while
+        # this thread does commits delta/gen=min_gen+1 under the same root
+        for name in fs.listdir(delta_root) if fs.isdir(delta_root) else []:
+            if name.startswith("gen=") and int(name[4:]) <= min_gen:
+                fs.rmtree(pjoin(delta_root, name))
 
     import threading
 

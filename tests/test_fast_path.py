@@ -330,3 +330,196 @@ def test_phrase_kernel_guard_falls_back(monkeypatch, hashed_pos_idx,
     got = _phrase_rows(idx.phrase_search(phrase, slop=slop))
     assert seen == [None]  # admitted, then the guard handed it back
     assert got == want and got
+
+
+# -- delta generations on the fast path -----------------------------------
+# An index with committed apply_upserts generations is answered in the
+# driver like a base-only one: pyarrow reads of base + delta segment dirs,
+# and the tombstone rule (a posting of generation g dies when its doc has
+# a tombstone of a later generation) as a numpy cut. Three handles cover
+# the delta states a reader can load: both generations live, as_of_gen=1
+# time travel, and the two generations squashed by merge_delta_tier.
+
+DELTA_ONLY = "zzqdeltaonly"  # a term no base document holds
+DELTA_STATES = ["latest", "as_of_1", "merged"]
+
+
+@pytest.fixture(scope="module")
+def delta_idx(spark):
+    from content_rw_elasticsearch_spark.streaming import ingest
+
+    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
+    out = "/tmp/test_fast_path_delta_idx"
+    merged = out + "_merged"
+    for d in (out, merged):
+        shutil.rmtree(d, ignore_errors=True)
+    build_segments(docs, out, text_col="text", doc_col="doc_id",
+                   n_buckets=4, target_block=512, nb_max=64,
+                   snapshot_id="fast-path-delta", with_positions=True)
+    top, dropped, reupd = [r["doc_id"] for r in SegmentIndex.load(
+        spark, out).search("hash join", k=3).collect()]
+
+    def upsert(rows):
+        ingest.apply_upserts(
+            spark, out,
+            spark.createDataFrame(
+                rows, "doc_id long, content string, deleted boolean"),
+            "content", "doc_id", "deleted")
+
+    # gen 1: the second "hash join" hit loses "join"; three inserts, one
+    # holding the delta-only term
+    upsert([
+        (dropped, "hash table probe value key", False),
+        (1001, "hash join hash join merge sort window", False),
+        (1002, f"vector batch scan hash {DELTA_ONLY} join", False),
+        (1003, "join hash row scan small dup customer data group", False),
+    ])
+    # gen 2: the top hit is deleted, a gen-1 insert and a base doc are
+    # re-written, and one more insert extends the delta-only prefix
+    upsert([
+        (top, "", True),
+        (1001, "hash join window hash merge", False),
+        (reupd, "customer data group hash join hash join", False),
+        (1004, f"hash {DELTA_ONLY}s vector batch", False),
+    ])
+    shutil.copytree(out, merged)
+    ingest.merge_delta_tier(spark, merged)
+    yield {
+        "latest": SegmentIndex.load(spark, out),
+        "as_of_1": SegmentIndex.load(spark, out, as_of_gen=1),
+        "merged": SegmentIndex.load(spark, merged),
+        "hits": (top, dropped),
+    }
+    for d in (out, merged):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_delta_fixture_shape(delta_idx):
+    """The fixture holds what the parity matrix needs: live generations
+    in every state, the deleted top hit and the updated doc that lost a
+    query term both gone, and a prefix expansion no base term has."""
+    import dataclasses
+
+    top, dropped = delta_idx["hits"]
+    assert delta_idx["latest"].generations == [1, 2]
+    assert delta_idx["as_of_1"].generations == [1]
+    assert delta_idx["merged"].generations == [3]
+    for state in DELTA_STATES:
+        idx = delta_idx[state]
+        hits = [d for d, _ in _run(idx, "hash join", "AND", 10)]
+        assert dropped not in hits
+        assert (top in hits) == (state == "as_of_1"), state
+        assert DELTA_ONLY in idx._prefix_expansions_local("zzqd", 50)
+    base = dataclasses.replace(delta_idx["latest"], generations=[])
+    assert base._prefix_expansions_local("zzqd", 50) == []
+    assert [d for d, _ in _run(base, "hash join", "AND", 2)] == [top, dropped]
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+@pytest.mark.parametrize("q,mode,k,msm", CASES)
+@pytest.mark.parametrize("forced", [False, True])
+def test_delta_fast_path_matches_distributed(monkeypatch, delta_idx, state,
+                                             q, mode, k, msm, forced):
+    idx = delta_idx[state]
+    fast = _run(idx, q, mode, k, msm=msm, forced=forced)
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    assert fast == _run(idx, q, mode, k, msm=msm, forced=forced)
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+def test_delta_search_after_parity(monkeypatch, delta_idx, state):
+    idx = delta_idx[state]
+    p1 = _run(idx, "hash join", "OR", 5)
+    after = (p1[-1][1], p1[-1][0])
+    fast = _run(idx, "hash join", "OR", 5, after=after, forced=True)
+    assert p1 + fast == _run(idx, "hash join", "OR", 10)
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    assert fast == _run(idx, "hash join", "OR", 5, after=after, forced=True)
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+@pytest.mark.parametrize("phrase", ["hash join", "customer data group"])
+@pytest.mark.parametrize("slop", [0, 1, 2])
+def test_delta_phrase_kernel_matches_distributed(monkeypatch, delta_idx,
+                                                 state, phrase, slop):
+    idx = delta_idx[state]
+    fast, slow = _fast_and_distributed(
+        monkeypatch, idx, lambda: idx.phrase_search(phrase, slop=slop))
+    assert fast == slow and fast
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+def test_delta_phrase_kernel_within_classes(monkeypatch, delta_idx, state):
+    idx = delta_idx[state]
+    wc = [1, 5, 9, 33]
+    fast, slow = _fast_and_distributed(
+        monkeypatch, idx,
+        lambda: idx.phrase_search("hash join", within_classes=wc))
+    assert fast == slow
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+def test_delta_phrase_prefix_matches_distributed(monkeypatch, delta_idx,
+                                                 state):
+    """The expansion slot holds terms only a delta generation has."""
+    idx = delta_idx[state]
+    fast, slow = _fast_and_distributed(
+        monkeypatch, idx, lambda: idx.phrase_prefix_search("hash zzqd"))
+    assert fast == slow and fast
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+def test_delta_meta_local_matches_spark(delta_idx, state):
+    idx = delta_idx[state]
+    terms = ["hash", "join", "scan", DELTA_ONLY]
+    local = idx._meta(terms)
+    spark_meta = (
+        idx._segments(terms)
+        .select("term", "gen", "salt", "nb", "count", "max_tf", "min_dl")
+        .toPandas()
+    )
+    assert set(local["gen"]) == {0, *idx.generations}
+    key = ["term", "gen", "salt"]
+    a = local.sort_values(key).reset_index(drop=True)
+    b = spark_meta.sort_values(key).reset_index(drop=True)
+    assert list(a.columns) == list(b.columns)
+    assert list(a.dtypes) == list(b.dtypes)
+    for c in a.columns:
+        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+def test_delta_fast_path_launches_no_spark_jobs(spark, delta_idx, state):
+    idx = delta_idx[state]
+    for call in (lambda: idx.search("hash join"),
+                 lambda: idx.search("vector batch scan", mode="OR"),
+                 lambda: idx.phrase_search("hash join"),
+                 lambda: idx.phrase_prefix_search("hash zzqd")):
+        call().collect()  # warm
+        assert _jobs_launched(spark, call) == 0
+        assert _jobs_launched(spark, lambda: call().collect()) == 0
+
+
+def test_delta_delete_only_generation(monkeypatch, spark, tmp_path):
+    """A delete-only batch writes a generation with tombstones but no
+    segment rows (no bucket dirs): the fast path reads it like any other
+    generation, including the prefix expansion's term scan."""
+    from content_rw_elasticsearch_spark.streaming import ingest
+
+    out = str(tmp_path / "delete_only")
+    corpus = with_doc_id(synthesize_corpus(spark, 200, seed=5))
+    build_segments(corpus.select("doc_id", "content"), out,
+                   text_col="content", doc_col="doc_id", n_buckets=4,
+                   target_block=64, nb_max=16, with_positions=True)
+    idx = SegmentIndex.load(spark, out)
+    victim = _phrase_rows(idx.phrase_prefix_search("return se"))[0][0]
+    ingest.apply_upserts(spark, out, spark.createDataFrame(
+        [(victim, "", True)], "doc_id long, content string, deleted boolean"),
+        "content", "doc_id", "deleted")
+    idx = SegmentIndex.load(spark, out)
+    assert idx.generations == [1]
+    fast, slow = _fast_and_distributed(
+        monkeypatch, idx, lambda: idx.phrase_prefix_search("return se"))
+    assert fast == slow and fast and victim not in dict(fast)
+    monkeypatch.setattr(idx, "driver_max_postings", 2_000_000)
+    assert victim not in dict(_run(idx, "return self", "OR", 1000))

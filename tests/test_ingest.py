@@ -295,3 +295,56 @@ def test_time_travel_load_as_of_generation(spark):
     with pytest.raises(ValueError, match="folded"):
         SegmentIndex.load(spark, path, as_of_gen=1)
     shutil.rmtree(path)
+
+
+def test_fold_gc_spares_generation_committed_after_fold(spark, monkeypatch):
+    """Fold's background GC removes only the folded delta generations.
+    The GC thread is held until a following
+    apply_upserts has committed delta/gen=min_gen+1 under the same
+    delta/ root; a GC of the whole root would delete that committed
+    generation's segments and tombstones."""
+    import threading
+
+    path = BASE + "_gc_race"
+    corpus = _mk_index(spark, path)
+    ids = [r["doc_id"] for r in
+           corpus.select("doc_id").orderBy("doc_id").limit(3).collect()]
+    rows = "doc_id long, content string, deleted boolean"
+    ingest.apply_upserts(spark, path, spark.createDataFrame(
+        [(ids[0], "folded generation body", False)], rows),
+        "content", "doc_id", "deleted")
+
+    release = threading.Event()
+    held = []
+
+    class HeldGC(threading.Thread):
+        def __init__(self, *args, target=None, **kwargs):
+            if getattr(target, "__name__", None) == "_gc":
+                gc = target
+
+                def target():
+                    release.wait()
+                    gc()
+                held.append(self)
+            super().__init__(*args, target=target, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(threading, "Thread", HeldGC)
+        ingest.fold_deltas(spark, path)
+    assert len(held) == 1
+    try:
+        man = ingest.apply_upserts(spark, path, spark.createDataFrame(
+            [(ids[1], "zzzgcmarker updated body", False),
+             (9_999_999_010, "zzzgcmarker inserted body", False),
+             (ids[2], "", True)], rows),
+            "content", "doc_id", "deleted")
+    finally:
+        release.set()
+        held[0].join(timeout=60)
+    assert not held[0].is_alive()
+    assert man["gen"] == 2
+    idx = SegmentIndex.load(spark, path)
+    assert idx.generations == [2]
+    got = sorted(_ids(idx.search("zzzgcmarker", k=10, mode="OR")))
+    assert got == sorted([ids[1], 9_999_999_010])
+    shutil.rmtree(path)
