@@ -174,9 +174,9 @@ def build_postings_doclocal(tok_df: DataFrame) -> DataFrame:
     78-84 s (agg) -> 59.6-60.5 s, and the doc-grouped row order
     compresses the staging parquet 748 -> 469 MB. The round-6 2-vs-8
     core A/B closed the open scaling question (faster in absolute terms
-    at every core count measured — see build_segments), so this is now
-    build_segments' DEFAULT staging path; SPARK_GRAFT_STAGING=agg
-    restores the declarative form."""
+    at every core count measured — OPTIMIZATION_r06.md), so this is
+    build_segments' only non-positional staging path; build_postings
+    stays as the declarative reference (ingest, InMemoryIndex)."""
     return _doc_local_postings(tok_df, with_positions=False)
 
 

@@ -51,7 +51,6 @@ new one lands; see storage.swap_dir/restore_swap).
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -128,10 +127,8 @@ def _slice_stream(buf: bytes, nb: np.ndarray, starts: np.ndarray,
 
 def _encode_groups(pdf: pd.DataFrame, with_positions: bool,
                    carry_cols: list[str]):
-    """Shared encoder core: group a MATERIALIZED postings frame by
-    (term, salt) and yield encoded segment-row DataFrames. Used by both
-    the shuffle-fed encoder (_encode_stream_fn) and the storage-spill
-    encoder (_encode_from_spill_fn).
+    """Encoder core of _encode_stream_fn: group a MATERIALIZED postings
+    frame by (term, salt) and yield encoded segment-row DataFrames.
 
     Round-5 rewrite — WHOLE-PARTITION vectorized, no per-group calls:
     one np.lexsort by (group key, doc_id) replaces the key argsort plus
@@ -282,43 +279,6 @@ def _encode_stream_fn(with_positions: bool = False,
     return run
 
 
-def _encode_from_spill_fn(spill_dir: str, with_positions: bool,
-                          pos_col: str = "pos_vb"):
-    """Storage-spill encoder: the input rows are tiny EPART IDS, not
-    postings — each python worker reads its epart's postings DIRECTLY
-    from parquet via pyarrow (C++ vectorized reader, zero JVM work) and
-    runs the same numpy grouping + codec as the shuffle-fed path.
-
-    Why: thread dumps pinned the encode stage's residual JVM CPU (2.89x
-    inflation at 8 cores, the one stage below ~0.9 scaling efficiency)
-    on per-value Arrow batch construction (ArrowFieldWriter) feeding
-    mapInPandas after the row shuffle — BENCH/BASELINE.md (j). Routing
-    the postings through a partitionBy(epart) parquet write (map-only,
-    vectorized JVM columnar encode, the same write path whose staging
-    stage measures 0.9-1.0 scaling) and a pyarrow read removes BOTH the
-    row shuffle and the per-value Arrow boundary from the hot path."""
-    cols = ["term", "salt", "doc_id", "tf", "doc_len"] + (
-        [pos_col] if with_positions else []
-    )
-
-    def run(batches):
-        import os
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for ep in pdf["epart"]:
-                path = os.path.join(spill_dir, f"epart={int(ep)}")
-                if not os.path.isdir(path):  # hash gap: no postings here
-                    continue
-                gpdf = pq.read_table(path, columns=cols).to_pandas()
-                if gpdf.empty:
-                    continue
-                yield from _encode_groups(gpdf, with_positions, [])
-
-    return run
-
-
 ENCODE_PARTITION_FACTOR = 4  # partitions per core: straggler smoothing —
 # with exactly one partition per core the slowest (term,salt)-hash
 # partition stalls the whole encode stage; 4x gives the scheduler slack
@@ -405,63 +365,6 @@ def encode_segments(salted: DataFrame, with_positions: bool = False,
     )
 
 
-
-
-def encode_segments_spill(salted: DataFrame, spill_dir: str,
-                          with_positions: bool = False,
-                          est_postings: int | None = None) -> DataFrame:
-    """Storage-spill variant of encode_segments (the 100 TB path; see
-    _encode_from_spill_fn for the measured why). Dataflow:
-
-      1. map-only JVM job: salted postings → parquet, partitionBy(epart)
-         where epart = xxhash64(term, salt) % n_eparts — NO row shuffle;
-         each map task appends its rows to per-epart files. tf/doc_len/
-         salt are cast to int32 (all bounded well below 2^31) to halve
-         the spill bytes.
-      2. a tiny epart-id DataFrame (one row per epart, round-robin
-         repartitioned to exactly one id per task) drives mapInPandas:
-         each python worker pyarrow-reads its epart directory and runs
-         the shared numpy grouping + codec. The only data crossing the
-         JVM↔python Arrow boundary is the block-count-sized OUTPUT.
-
-    The per-worker memory bound is the epart size — the same
-    POSTINGS_PER_ENCODE_PARTITION sizing as the shuffle path. On a real
-    cluster ``spill_dir`` must be on shared storage readable by pyarrow
-    from the executors (HDFS/S3/NFS — the same contract the two-phase
-    MR-style shuffle-on-storage systems use); the caller (build_segments)
-    auto-routes here only for non-URI paths and can be forced either way
-    with encode_path=."""
-    spark = salted.sparkSession
-    try:
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        session_parts = 0
-    eparts = _sized_encode_parts(spark, session_parts, with_positions,
-                                 est_postings)
-    pos_col = ("pos_vb" if "pos_vb" in salted.columns else "positions")
-    lean = salted.select(
-        "term",
-        F.col("salt").cast("int").alias("salt"),
-        "doc_id",
-        F.col("tf").cast("int").alias("tf"),
-        F.col("doc_len").cast("int").alias("doc_len"),
-        *([pos_col] if with_positions else []),
-        F.pmod(F.xxhash64("term", "salt"), F.lit(eparts)).cast("int")
-        .alias("epart"),
-    )
-    lean.write.partitionBy("epart").mode("overwrite").parquet(spill_dir)
-    ids = spark.createDataFrame(
-        [(i,) for i in range(eparts)], "epart int"
-    ).repartition(eparts)  # round-robin: exactly one epart per task
-    schema = StructType(
-        [StructField("term", salted.schema["term"].dataType)]
-        + [f for f in list(SEGMENT_SCHEMA.fields)[1:] if f.name != "nb"]
-    )
-    return ids.mapInPandas(
-        _encode_from_spill_fn(spill_dir, with_positions, pos_col), schema
-    )
-
-
 def build_segments(
     corpus: DataFrame,
     out_dir: str,
@@ -475,23 +378,9 @@ def build_segments(
     overwrite: bool = False,
     with_positions: bool = False,
     fields: "dict | None" = None,
-    encode_path: "str | None" = None,
 ) -> dict:
     """Build (or resume) the segment index at ``out_dir``. Returns the
     global manifest dict.
-
-    ``encode_path`` picks the stage-2 encode route: "spill" (storage-
-    spill encode — partitionBy(epart) parquet write + pyarrow-fed
-    encoder, see encode_segments_spill) or anything else (default) =
-    the shuffle-fed inline mapInPandas encoder. Inline is the default
-    because same-window A/Bs measured spill at parity at 8 cores and
-    slower at 2, for non-positional (BENCH/BASELINE.md (k)) AND
-    positional (section (m): 233.6/232.4 s then 252.2/259.6 s) builds —
-    the Arrow input boundary it removes is already pipelined behind the
-    python encoder. Spill remains the explicit election for
-    memory-bound deployments (the pandas encoder cannot spill
-    mid-partition). The SPARK_GRAFT_ENCODE_PATH env var overrides (A/B
-    knob for the scaling campaigns).
 
     ``fields`` (name -> Column/str) builds a FIELD-SCOPED index (the ES
     schema's per-field analyzed indexes, referenceSchema.json:50-59):
@@ -560,31 +449,14 @@ def build_segments(
             tok = P.tokenized(corpus, text_col, doc_col, analyzer)
             sent_tok = F.lit("\x00")
         tok = tok.withColumn("tokens", F.concat("tokens", F.array(sent_tok)))
-        # positional staging uses the DOC-LOCAL vb builder: grouping per
-        # (doc, term) never needed the exchange the declarative
-        # explode+groupBy+collect_list form pays, and the positions leave
-        # the python worker already varbyte-encoded per posting — 3M-doc
-        # staging 139 s (agg) -> 66-82 s (vb), same window interleaved
-        # (BENCH/BASELINE.md (m)). The non-positional doc-local form also
-        # wins wall-clock (78-84 -> ~60 s, staging 748 -> 469 MB) but
-        # adds an Arrow crossing to the stage that today CPU-scales at
-        # ~1.0 — SPARK_GRAFT_STAGING=doclocal opts in until its 2-vs-8
-        # scaling is measured (see (m)).
-        # Doc-local staging is the round-6 default: the declarative
-        # explode+groupBy form pays a full exchange of token rows plus a
-        # ~|postings|-group hash agg for grouping that is provably
-        # doc-local. Closing round 5's open caveat, the same-window A/B
-        # (OPTIMIZATION_r06.md) measured doclocal faster at EVERY core
-        # count — 300k synth docs: 32.2 vs 41.9 s at 2 cores, 22.6 vs
-        # 30.8 s at 8; sf1.0 local[32]: 7.7 vs 13.9 s median-of-3 —
-        # so the absolute win holds from 2 cores up even though the
-        # staging stage's own CPU-scaling ratio is lower (it starts from
-        # a much faster base). SPARK_GRAFT_STAGING=agg restores the old
-        # declarative path (A/B knob).
+        # Doc-local staging: grouping per (doc, term) is provably
+        # doc-local, so it needs neither the full exchange of token rows
+        # nor the ~|postings|-group hash agg of the declarative
+        # explode+groupBy form, and positions leave the python worker
+        # already varbyte-encoded per posting. Measured faster at every
+        # core count (OPTIMIZATION_r06.md; BENCH/BASELINE.md (m)).
         if with_positions:
             post = P.build_positional_postings_vb(tok)
-        elif os.environ.get("SPARK_GRAFT_STAGING") == "agg":
-            post = P.build_postings(tok)
         else:
             post = P.build_postings_doclocal(tok)
         post = post.withColumn(
@@ -726,10 +598,10 @@ def build_segments(
     # was the dominant per-build Amdahl term (measured ~1.8x stage-2
     # wall-clock at 300k docs, local[8]).
     #
-    # Per-bucket posting counts come from the (small) stats parquet — the
-    # encoder preserves posting counts exactly and Σ df per bucket equals
-    # them — and block counts from parquet footers via pyarrow: no extra
-    # Spark jobs per bucket.
+    # Per-bucket posting counts come from the staging manifest (Σ df per
+    # bucket over the stats parquet — the encoder preserves posting
+    # counts exactly) and block counts from parquet footers via pyarrow:
+    # no extra Spark jobs per bucket.
     t2 = time.time()
     nb = stage1["n_buckets"]
     missing = [
@@ -737,18 +609,10 @@ def build_segments(
         if not fs.exists(pjoin(out_dir, f"manifest_bucket_{i}.json"))
     ]
     if missing:
-        # per-bucket posting counts: from the staging manifest (stage 1
-        # precomputes them) — a Spark job only for pre-round-4 manifests
-        if "bucket_postings" in stage1:
-            bucket_postings = {
-                int(k): int(v) for k, v in stage1["bucket_postings"].items()
-            }
-        else:
-            bucket_postings = {
-                int(r["bucket"]): int(r["n"])
-                for r in spark.read.parquet(stats_path)
-                .groupBy("bucket").agg(F.sum("df").alias("n")).collect()
-            }
+        # per-bucket posting counts: precomputed by stage 1
+        bucket_postings = {
+            int(k): int(v) for k, v in stage1["bucket_postings"].items()
+        }
         for i in missing:
             fs.rmtree(pjoin(out_dir, "segments", f"bucket={i}"))  # partial write
         # always filter to the missing buckets: directory pruning both
@@ -773,38 +637,13 @@ def build_segments(
         # broadcast join against the same stats dim. Guard: a 64-bit id
         # collision would merge two terms' postings, so fall back to the
         # string path unless ids are collision-free over this build's
-        # vocabulary (one vocab-sized aggregate; P(collision) ~ V^2/2^65).
-        if "tids_unique" in stage1:  # precomputed by stage 1
-            use_ids = bool(stage1["tids_unique"])
-        else:
-            idrow = nbs.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("tid").alias("nid"),
-            ).collect()[0]
-            use_ids = int(idrow["n"]) == int(idrow["nid"])
-        # pos_vb = pre-encoded per-posting varbyte (current staging);
-        # "positions" array form accepted for staging written by older
-        # versions (cache dirs are version-keyed, so only an in-place
-        # resume would ever see it)
-        if stage1.get("positions", False):
-            pos_cols = (["pos_vb"] if "pos_vb" in staged.columns
-                        else ["positions"])
-        else:
-            pos_cols = []
+        # vocabulary (stage 1's vocab-sized aggregate; P(collision) ~
+        # V^2/2^65).
+        use_ids = bool(stage1["tids_unique"])
+        # positions arrive pre-encoded per posting (pos_vb)
+        pos_cols = ["pos_vb"] if stage1["positions"] else []
         est_missing = sum(bucket_postings.get(i, 0) for i in missing)
-        choice = encode_path or os.environ.get("SPARK_GRAFT_ENCODE_PATH")
-        # Inline-first: the same-window A/B at 3M docs (BENCH/BASELINE.md
-        # (k)) measured the spill route at parity at 8 cores and 6-21%
-        # SLOWER at 2 — the Arrow input boundary it removes was already
-        # pipelined behind the python encoder. Spill is an explicit
-        # election for memory-bound deployments (the pandas encoder
-        # cannot spill mid-partition); it also needs the lean tid stream
-        # and a spill dir pyarrow can read (plain paths, no URI schemes).
-        use_spill = use_ids and choice == "spill"
-        spill_dir = pjoin(out_dir, "espill")
         if use_ids:
-            if "tid" not in staged.columns:  # staging from a pre-tid build
-                staged = staged.withColumn("tid", F.xxhash64("term"))
             # LEAN posting stream into the encode shuffle: nb is needed
             # only to COMPUTE salt (map side, pre-shuffle) and bucket is
             # constant per term — both are restored on the block-count-
@@ -820,17 +659,9 @@ def build_segments(
                 "salt",
                 F.pmod(F.xxhash64("doc_id"), F.col("nb").cast("long")).cast("int"),
             ).drop("nb").withColumnRenamed("tid", "term")
-            if use_spill:
-                fs.rmtree(spill_dir)  # stale spill of a crashed stage 2
-                segs = encode_segments_spill(
-                    salted, spill_dir, stage1.get("positions", False),
-                    est_postings=est_missing,
-                )
-            else:
-                segs = encode_segments(
-                    salted, stage1.get("positions", False),
-                    est_postings=est_missing,
-                )
+            segs = encode_segments(
+                salted, stage1["positions"], est_postings=est_missing,
+            )
             restore = nbs.select(
                 "tid", "term", "nb",
                 F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int").alias("bucket"),
@@ -847,7 +678,7 @@ def build_segments(
                 F.pmod(F.xxhash64("doc_id"), F.col("nb").cast("long")).cast("int"),
             )
             segs = encode_segments(
-                salted, stage1.get("positions", False), carry_cols=["bucket"],
+                salted, stage1["positions"], carry_cols=["bucket"],
                 est_postings=est_missing,
             )
         # the encoded blocks are tiny relative to the postings (compressed
@@ -868,17 +699,6 @@ def build_segments(
         )
         spark.sparkContext.setJobDescription(None)
         encode_secs = round(time.time() - t2, 3)
-        if use_spill:
-            # derived data — the segments are committed, so clean up in
-            # the background: the rmtree of an O(10^4)-file spill dir is
-            # otherwise a flat driver-serial tail (~seconds) on every
-            # build, and a crash mid-cleanup is safe because the next
-            # stage 2 rmtree-s any stale spill dir before reusing it
-            import threading
-
-            threading.Thread(
-                target=fs.rmtree, args=(spill_dir,), daemon=True
-            ).start()
         for i in missing:
             seg_dir = pjoin(out_dir, "segments", f"bucket={i}")
             seg_files = (

@@ -172,12 +172,16 @@ def apply_upserts(
         "salt", F.pmod(F.xxhash64("doc_id"), F.col("nb").cast("long")).cast("int")
     )
     # Three INDEPENDENT writes (delta segments, tombstones, docs-table
-    # merge) overlap via driver threads (guide §2.6: concurrent jobs
-    # back-fill each other's stage tails — job descriptions are
-    # thread-local, so each is labelled). Crash safety is unchanged: a
-    # retry rmtree-s the whole uncommitted delta dir first, the docs
-    # swap stays crash-safe, and the manifest commit remains the LAST,
-    # strictly-sequential step.
+    # merge into docs.tmp) overlap via driver threads (guide §2.6:
+    # concurrent jobs back-fill each other's stage tails — job
+    # descriptions are thread-local, so each is labelled). The live
+    # docs/ swap runs only after all three succeed, so a batch whose
+    # segment or tombstone write raises leaves docs/ (and with it
+    # n_docs/avgdl) untouched. A crash between the swap and the manifest
+    # commit still leaves the batch's rows in docs/; retrying the batch
+    # is idempotent (it rmtree-s the uncommitted delta dir and re-merges
+    # docs/ with the same anti-join). The manifest commit remains the
+    # LAST, strictly-sequential step.
     def job_segments():
         spark.sparkContext.setJobDescription("ingest: delta segments")
         segs = encode_segments(salted, with_pos, partitions=2)
@@ -196,6 +200,7 @@ def apply_upserts(
 
     # docs table: exact N/avgdl (crash-safe swap; Iceberg MERGE analog)
     docs_path = pjoin(index_dir, "docs")
+    docs_tmp = docs_path + ".tmp"
     doc_cols = ["doc_id"] + (["field"] if fielded else []) + ["doc_len"]
 
     def job_docs():
@@ -209,9 +214,7 @@ def apply_upserts(
         # replaces the whole document, so every (doc, field) row dies
         merged = old.join(upd_ids, "doc_id", "left_anti") \
             .unionByName(new_rows)
-        tmp = docs_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        storage.swap_dir(fs, tmp, docs_path)
+        merged.write.mode("overwrite").parquet(docs_tmp)
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -219,6 +222,7 @@ def apply_upserts(
         for f_ in [pool.submit(job_segments), pool.submit(job_tombstones),
                    pool.submit(job_docs)]:
             f_.result()
+    storage.swap_dir(fs, docs_tmp, docs_path)
 
     # follow-up aggregates (docs stats need the merged docs table; the
     # posting count needs the written segments) — independent of each
@@ -420,9 +424,8 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     # listdir-then-read would race a background delete into a
     # FileNotFoundError (they are tiny files — removing them is cheap).
     # Only the big directory trees move to a background thread, so the
-    # driver-serial rmtree tail never sits on the fold's critical path
-    # (same pattern as the spill-dir cleanup in build_segments); once
-    # the manifests are gone no reader can reach those dirs.
+    # driver-serial rmtree tail never sits on the fold's critical path;
+    # once the manifests are gone no reader can reach those dirs.
     for name in fs.listdir(index_dir):
         if name.startswith("delta_manifest_") and name.endswith(".json"):
             fs.rmtree(pjoin(index_dir, name))

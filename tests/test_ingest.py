@@ -348,3 +348,44 @@ def test_fold_gc_spares_generation_committed_after_fold(spark, monkeypatch):
     got = sorted(_ids(idx.search("zzzgcmarker", k=10, mode="OR")))
     assert got == sorted([ids[1], 9_999_999_010])
     shutil.rmtree(path)
+
+
+def test_failed_segment_encode_leaves_docs_table_unchanged(spark, monkeypatch):
+    """apply_upserts swaps the docs table only after the segment,
+    tombstone and docs writes all succeed. A batch whose segment encode
+    raises must leave docs/ as it was; ghost rows there would skew
+    n_docs/avgdl in every later manifest."""
+    path = BASE + "_failed_encode"
+    corpus = _mk_index(spark, path)
+    ids = [r["doc_id"] for r in
+           corpus.select("doc_id").orderBy("doc_id").limit(2).collect()]
+    rows = "doc_id long, content string, deleted boolean"
+
+    def docs_rows():
+        return sorted(tuple(r) for r in spark.read.parquet(
+            f"{path}/docs").collect())
+
+    before = docs_rows()
+    n_docs = SegmentIndex.load(spark, path).n_docs
+
+    def broken_encode(*args, **kwargs):
+        raise RuntimeError("segment encode failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ingest, "encode_segments", broken_encode)
+        with pytest.raises(RuntimeError, match="segment encode failed"):
+            ingest.apply_upserts(spark, path, spark.createDataFrame(
+                [(ids[0], "zzzghost updated body", False),
+                 (9_999_999_020, "zzzghost inserted body", False),
+                 (ids[1], "", True)], rows),
+                "content", "doc_id", "deleted")
+    assert docs_rows() == before
+    assert SegmentIndex.load(spark, path).n_docs == n_docs
+
+    # the next batch counts the corpus without the failed batch's rows
+    man = ingest.apply_upserts(spark, path, spark.createDataFrame(
+        [(9_999_999_021, "zzzafter inserted body", False)], rows),
+        "content", "doc_id", "deleted")
+    assert man["gen"] == 1 and man["n_docs"] == n_docs + 1
+    assert _ids(SegmentIndex.load(spark, path).search("zzzghost", k=10)) == []
+    shutil.rmtree(path)

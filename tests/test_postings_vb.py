@@ -43,7 +43,7 @@ def test_positional_vb_builder_equals_agg(spark):
 
 def test_doclocal_builder_equals_agg(spark):
     """The non-positional doc-local form must match build_postings
-    row-for-row (it is the SPARK_GRAFT_STAGING=doclocal staging path)."""
+    row-for-row (it is build_segments' non-positional staging path)."""
     corpus = with_doc_id(synthesize_corpus(spark, 500, seed=3, parts=4)) \
         .select("doc_id", "content")
     tok = P.tokenized(corpus, "content", "doc_id")
@@ -53,32 +53,6 @@ def test_doclocal_builder_equals_agg(spark):
     got = {(r["term"], r["doc_id"]): (r["tf"], r["doc_len"])
            for r in P.build_postings_doclocal(tok).collect()}
     assert ref == got
-
-
-def test_doclocal_staging_builds_identical_index(spark, tmp_path):
-    """SPARK_GRAFT_STAGING=doclocal must produce a store that answers
-    queries identically to the default agg staging."""
-    import os
-
-    from content_rw_elasticsearch_spark.operators.segments import build_segments
-    from content_rw_elasticsearch_spark.operators.wand import SegmentIndex
-
-    corpus = with_doc_id(synthesize_corpus(spark, 400, seed=5, parts=4)) \
-        .select("doc_id", "content")
-    a, b = str(tmp_path / "agg"), str(tmp_path / "dl")
-    build_segments(corpus, a, text_col="content", n_buckets=4,
-                   target_block=128, snapshot_id="t")
-    os.environ["SPARK_GRAFT_STAGING"] = "doclocal"
-    try:
-        build_segments(corpus, b, text_col="content", n_buckets=4,
-                       target_block=128, snapshot_id="t")
-    finally:
-        del os.environ["SPARK_GRAFT_STAGING"]
-    ia, ib = SegmentIndex.load(spark, a), SegmentIndex.load(spark, b)
-    for q, mode in (("query batch", "AND"), ("data merge shuffle", "OR")):
-        ra = [(r["doc_id"], r["score"]) for r in ia.search(q, k=10, mode=mode).collect()]
-        rb = [(r["doc_id"], r["score"]) for r in ib.search(q, k=10, mode=mode).collect()]
-        assert ra == rb and ra
 
 
 def test_vb_builder_concat_equals_group_encode(spark):

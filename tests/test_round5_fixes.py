@@ -9,7 +9,8 @@
    n_docs == 0 (never drops the key) and queries return empty instead of
    scoring against stale base-manifest norms (ADVICE r4).
 4. encode_segments enforces the python-worker memory bound from
-   est_postings (ADVICE r4: the pandas encoder cannot spill).
+   est_postings, a quarter of it for positional streams (ADVICE r4: the
+   pandas encoder cannot spill).
 """
 
 from __future__ import annotations
@@ -78,6 +79,14 @@ def test_encode_partitions_scale_with_est_postings(spark):
     segs = segments.encode_segments(df, est_postings=40_000_000)
     assert segs.rdd.getNumPartitions() >= (
         40_000_000 // segments.POSTINGS_PER_ENCODE_PARTITION
+    )
+    # positional streams carry a pos_vb blob per posting: the bound is a
+    # quarter of the postings per partition
+    pos = df.withColumn("pos_vb", F.lit(b"\x00").cast("binary"))
+    segs = segments.encode_segments(pos, with_positions=True,
+                                    est_postings=400_000_000)
+    assert segs.rdd.getNumPartitions() >= (
+        400_000_000 // (segments.POSTINGS_PER_ENCODE_PARTITION // 4)
     )
 
 

@@ -152,3 +152,55 @@ def test_merge_preserves_results(spark, built):
             naive.search(query, k=k, mode=mode)
         ), query
     shutil.rmtree(dst)
+
+
+def _blocks(spark, out):
+    return {
+        (r["term"], r["salt"]): (
+            r["nb"], r["count"], r["max_tf"], r["min_dl"],
+            bytes(r["docs_vb"]), bytes(r["tfs_vb"]), bytes(r["dlens_vb"]),
+            bytes(r["pos_vb"] or b""), r["bucket"],
+        )
+        for r in spark.read.parquet(os.path.join(out, "segments")).collect()
+    }
+
+
+def test_staging_carries_stage2_inputs(spark, tmp_path):
+    """Stage 2 reads its inputs from stage 1 with no fallback: the staging
+    manifest must carry bucket_postings and tids_unique, and the staging
+    parquet a tid column plus, for positional builds, pos_vb (never the
+    array `positions`). The tid-collision string path (tids_unique False)
+    must encode the same blocks as the tid path."""
+    corpus = with_doc_id(synthesize_corpus(spark, 60, seed=3)) \
+        .select("doc_id", "content")
+    for with_positions in (False, True):
+        out = str(tmp_path / f"pos{int(with_positions)}")
+        manifest = segments.build_segments(
+            corpus, out, "content", "doc_id", n_buckets=3, target_block=16,
+            nb_max=8, with_positions=with_positions,
+        )
+        with open(os.path.join(out, "_staging_manifest.json")) as f:
+            stage1 = json.load(f)
+        assert stage1["positions"] is with_positions
+        assert stage1["tids_unique"] is True
+        assert set(stage1["bucket_postings"]) == {"0", "1", "2"}
+        assert sum(stage1["bucket_postings"].values()) \
+            == manifest["posting_count"] > 0
+        cols = set(spark.read.parquet(os.path.join(out, "staging")).columns)
+        assert "tid" in cols and "positions" not in cols
+        assert ("pos_vb" in cols) is with_positions
+
+        # rerun stage 2 through the string-keyed path
+        for name in os.listdir(out):
+            if name == "index.json" or name.startswith("manifest_bucket_"):
+                os.remove(os.path.join(out, name))
+        expected = _blocks(spark, out)
+        shutil.rmtree(os.path.join(out, "segments"))
+        stage1["tids_unique"] = False
+        with open(os.path.join(out, "_staging_manifest.json"), "w") as f:
+            json.dump(stage1, f)
+        segments.build_segments(
+            corpus, out, "content", "doc_id", n_buckets=3, target_block=16,
+            nb_max=8, with_positions=with_positions,
+        )
+        assert _blocks(spark, out) == expected
