@@ -1,16 +1,24 @@
-"""Phase-isolating micro-bench for the optimization round (guide §1.4).
+"""Two-arm, phase-isolating micro-bench (guide §1.4).
 
 NOT the driver's bench — bench.py stays frozen. This harness builds the
-same segment index once, then times each reference query repeatedly with
-its phases split out (metadata scan / exhaustive decode+score / forced-
-pruned two-phase plan), labelling jobs so the timings attribute cleanly.
+same segment index once, then times each reference query repeatedly on
+BOTH query arms: as routed (small queries run the kernels on the driver)
+and with ``driver_max_postings = 0`` (the same kernels per salt-class
+group on the distributed executor), each exhaustive and forced-pruned.
+A positional build adds slop-0 / slop-1 ``phrase_search`` and
+``phrase_prefix_search`` on both arms. Every timing reports min, median
+and the Spark jobs one call launches (job group + status tracker), so a
+change that trades a job for driver work shows up either way.
 
-Usage:  SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [reps]
-Prints one JSON line with per-query {exhaustive, pruned, meta} min/median.
+Usage:  SPARK_GRAFT_SF_DIR=<dir holding documents.parquet> \\
+        SPARK_GRAFT_CPUS=4 python bench_extra.py [reps]
+Prints one JSON line: per query {arm: {exhaustive, pruned}, meta}, per
+phrase kind {arm: timing}; arm is "routed" or "distributed".
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -26,10 +34,45 @@ from content_rw_elasticsearch_spark.operators.wand import SegmentIndex  # noqa: 
 from content_rw_elasticsearch_spark.queries import REFERENCE_QUERIES  # noqa: E402
 from content_rw_elasticsearch_spark.session import get_spark  # noqa: E402
 
+ARMS = {"routed": None, "distributed": 0}  # driver_max_postings override
+PHRASES = {
+    "phrase0": lambda ix: ix.phrase_search("hash join"),
+    "phrase1": lambda ix: ix.phrase_search("hash join", slop=1),
+    "phrase_prefix": lambda ix: ix.phrase_prefix_search("hash jo"),
+}
+_GROUPS = itertools.count()
 
-def mm(xs):
-    return {"min": round(min(xs), 4), "med": round(statistics.median(xs), 4),
-            "n": len(xs)}
+
+def timed(spark, call, reps: int) -> dict:
+    """min / median seconds of ``reps`` calls after one warm-up call,
+    plus the Spark jobs the last call launched."""
+    sc = spark.sparkContext
+    call()
+    secs = []
+    for _ in range(reps):
+        group = f"bx-{next(_GROUPS)}"
+        sc.setJobGroup(group, "bench_extra")
+        t = time.time()
+        call()
+        secs.append(time.time() - t)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {"min": round(min(secs), 4),
+            "med": round(statistics.median(secs), 4), "n": len(secs),
+            "jobs": jobs}
+
+
+def on_arm(ix: SegmentIndex, arm: str, call):
+    """``call`` with the index's driver_max_postings set for ``arm``."""
+    def run():
+        saved = ix.driver_max_postings
+        if ARMS[arm] is not None:
+            ix.driver_max_postings = ARMS[arm]
+        try:
+            return call()
+        finally:
+            ix.driver_max_postings = saved
+    return run
 
 
 def main():
@@ -57,45 +100,52 @@ def main():
         build_secs.append(round(time.time() - t0, 3))
 
     idx = SegmentIndex.load(spark, out_dir)
-    hot = (
-        spark.read.parquet(f"{out_dir}/stats.parquet")
-        .orderBy("df", ascending=False).limit(1).collect()[0]["term"]
-    )
-    idx.search(hot, k=10).collect()  # warm
-
-    res: dict = {"sf": sf_dir, "build_secs": build_secs,
+    res: dict = {"sf": sf_dir, "cpus": cpus, "build_secs": build_secs,
                  "build_metrics": manifest.get("build_metrics"),
                  "prune_min_postings": idx.prune_min_postings}
     qres: dict = {}
     for name, spec in REFERENCE_QUERIES.items():
         sc = spark.sparkContext
-        ex, pr, meta_t = [], [], []
         terms = sorted(set(spec["query"].lower().split()))
-        sum_df = None
-        for _ in range(reps):
-            sc.setJobDescription(f"{name}: meta")
-            t = time.time()
-            m = idx._meta(terms)
-            meta_t.append(time.time() - t)
-            if sum_df is None and not m.empty:
-                sum_df = int(m["count"].sum())
-            sc.setJobDescription(f"{name}: exhaustive")
-            t = time.time()
-            idx.search(spec["query"], k=spec["k"], mode=spec["mode"],
-                       prune=False).collect()
-            ex.append(time.time() - t)
-            sc.setJobDescription(f"{name}: pruned")
+        meta = idx._meta(terms)
+        row = {"sum_df": int(meta["count"].sum()) if not meta.empty else None,
+               "meta": timed(spark, lambda: idx._meta(terms), reps)}
+
+        def search(prune: bool):
+            return lambda: idx.search(spec["query"], k=spec["k"],
+                                      mode=spec["mode"],
+                                      prune=prune).collect()
+
+        def pruned():
             saved = idx.prune_min_postings
             idx.prune_min_postings = 0
-            t = time.time()
-            idx.search(spec["query"], k=spec["k"], mode=spec["mode"],
-                       prune=True).collect()
-            pr.append(time.time() - t)
-            idx.prune_min_postings = saved
-            sc.setJobDescription(None)
-        qres[name] = {"meta": mm(meta_t), "exhaustive": mm(ex),
-                      "pruned": mm(pr), "sum_df": sum_df}
+            try:
+                return search(True)()
+            finally:
+                idx.prune_min_postings = saved
+
+        for arm in ARMS:
+            sc.setJobDescription(f"{name}: {arm}")
+            row[arm] = {
+                "exhaustive": timed(spark, on_arm(idx, arm, search(False)),
+                                    reps),
+                "pruned": timed(spark, on_arm(idx, arm, pruned), reps),
+            }
+        sc.setJobDescription(None)
+        qres[name] = row
     res["queries"] = qres
+
+    pos_dir = "/tmp/bx_pos_idx"
+    shutil.rmtree(pos_dir, ignore_errors=True)
+    build_segments(corpus, pos_dir, text_col="text", doc_col="doc_id",
+                   n_buckets=8, snapshot_id=sf_dir, with_positions=True)
+    pix = SegmentIndex.load(spark, pos_dir)
+    res["phrases"] = {
+        kind: {arm: timed(spark, on_arm(pix, arm,
+                                        lambda: call(pix).collect()), reps)
+               for arm in ARMS}
+        for kind, call in PHRASES.items()
+    }
     spark.stop()
     print(json.dumps(res))
 

@@ -86,11 +86,6 @@ def snapshot_index(index_dir: str, dest: str, spark=None) -> dict:
         raise FileNotFoundError(f"no committed index at {index_dir}")
     if dst_fs.exists(dest) and dst_fs.listdir(dest):
         raise FileExistsError(f"snapshot destination not empty: {dest}")
-    # heal a docs-table swap a crashed ingest left mid-flight, the same
-    # guard SegmentIndex.load applies — only when the live dir is missing
-    docs_dir = pjoin(index_dir, "docs")
-    if not src_fs.exists(docs_dir):
-        storage.restore_swap(src_fs, docs_dir)
 
     def commit_points():
         m = json.loads(src_fs.read_bytes(pjoin(index_dir, "index.json")))
@@ -106,12 +101,18 @@ def snapshot_index(index_dir: str, dest: str, spark=None) -> dict:
     # copy, then re-read them — a concurrent ingest that commits (or
     # swaps the docs table) mid-copy changes the commit points, and the
     # copy is discarded and retried from the new cut instead of shipping
-    # a ghost mix of pre- and post-ingest state.
+    # a ghost mix of pre- and post-ingest state. A missing docs/ is an
+    # ingest's docs-table swap in flight (docs.bak is not copied): the
+    # same transient, never healed from here — a rename on this read
+    # path would break the ingest's own rename of docs.tmp.
     last_err = None
     for _ in range(3):
         manifest, gens = commit_points()
         try:
             n_files = _copy_tree(src_fs, dst_fs, index_dir, dest)
+            if not dst_fs.exists(pjoin(dest, "docs")):
+                raise FileNotFoundError(
+                    f"{pjoin(index_dir, 'docs')} missing (docs-table swap)")
         except FileNotFoundError as e:  # file vanished mid-copy (swap)
             last_err = e
             dst_fs.rmtree(dest)

@@ -129,13 +129,6 @@ def segment_bool_topk(
         return empty
     term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
     decoded = index._decode(live, None)
-    tomb = index._tombstones()
-    if tomb is not None:
-        decoded = (
-            decoded.join(F.broadcast(tomb), "doc_id", "left")
-            .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-            .drop("tgen")
-        )
     stats = spark.createDataFrame(
         [(t, d) for t, d in term_df.items()], "term string, df long")
     cand = decoded.join(F.broadcast(stats), "term")

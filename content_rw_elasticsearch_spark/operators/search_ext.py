@@ -23,11 +23,11 @@ collapse_topk (ES `collapse` on a field)
   best score. NOT a window function: a window over hits partitioned by
   the group column shuffles every hit row and concentrates hot groups on
   single tasks. Instead the per-group argmax is ONE hash aggregation —
-  max(struct(score, -doc_id)) — which partial-aggregates map-side
-  (each task emits ≤ #groups rows), so a 10^9-hit, 10^3-group collapse
-  shuffles ~#tasks·#groups tiny rows. Lexicographic struct max gives
-  (max score, then min doc_id) — the engine-wide deterministic
-  tie-break. Scores are rounded BEFORE the argmax so group winners are
+  max over (score, -doc_id) packed into one decimal — which
+  partial-aggregates map-side (each task emits ≤ #groups rows), so a
+  10^9-hit, 10^3-group collapse shuffles ~#tasks·#groups tiny rows. The
+  packed max gives (max score, then min doc_id) — the engine-wide
+  deterministic tie-break. Scores are rounded BEFORE the argmax so group winners are
   chosen from the same values the oracle compares.
 
 Both emit (…, doc_id, score) rounded/ordered rank-identically to the
@@ -35,6 +35,8 @@ DuckDB oracles in oracle.more_like_this_sql / oracle.collapse_topk_sql.
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -221,22 +223,32 @@ def collapse_scored(scored: DataFrame, meta: DataFrame, group_col: str,
     persisted (SegmentIndex.collapse) paths: join (doc_id, score) hits
     to ``meta[group_col]``, take the single best hit per group as ONE
     partial-aggregable hash agg (see module docstring for why not a
-    window): struct compares lexicographically, so
-    max(struct(score, -doc_id)) = (best score, smallest doc_id) — the
-    engine-wide tie-break. Scores must arrive already rounded."""
+    window): the max of (score, -doc_id) in lexicographic order is
+    (best score, smallest doc_id) — the engine-wide tie-break. Scores
+    must arrive already rounded."""
     hits = scored.join(
         meta.select(F.col(doc_col).alias("doc_id"),
                     F.col(group_col).cast("string").alias("group_key")),
         "doc_id",
     )
+    # A hash aggregate needs fixed-width buffers (a struct max plans a
+    # SortAggregate), so the (score, -doc_id) order packs into one
+    # DECIMAL(38,0): round(score·10^4)·10^20 + (2^63-1 - doc_id), whose
+    # second term lies in [0, 2^64) < 10^20 — max(key) is the best score,
+    # then the smallest doc_id.
+    dec = "decimal(38,0)"
+    top_id = F.lit(Decimal(2 ** 63 - 1))
+    key = (F.round(F.col("score") * 10 ** 4).cast(dec)
+           * F.lit(Decimal(10 ** 20))
+           + (top_id - F.col("doc_id").cast(dec)))
     best = (
         hits.groupBy("group_key")
-        .agg(F.max(F.struct(F.col("score"),
-                            (-F.col("doc_id")).alias("neg_id"))).alias("m"))
+        .agg(F.max(key).alias("m"), F.max("score").alias("score"))
         .select(
             "group_key",
-            (-F.col("m.neg_id")).cast("long").alias("doc_id"),
-            F.col("m.score").alias("score"),
+            (top_id - F.col("m") % F.lit(Decimal(10 ** 20)))
+            .cast("long").alias("doc_id"),
+            "score",
         )
     )
     return best.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))

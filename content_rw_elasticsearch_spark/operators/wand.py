@@ -18,12 +18,11 @@ statistics). So:
            classes (highest upper bound) until ≥ k docs are fully scored;
            θ = k-th best true score (minus a half-ulp of the rounding).
   phase 2  prune: keep classes with ub(g) ≥ θ; decode only those blocks,
-           score exactly (same columnar BM25 expressions as the naive
-           path — no UDF in scoring), take top-k.
+           score exactly, take top-k.
 
 Incremental semantics (streaming/ingest.py writes the deltas):
   * every upsert/delete of doc d in generation g writes a tombstone (d,g);
-    postings of d from generations < g are dropped after decode
+    postings of d from generations < g are dropped at decode
     (last-writer-wins — the reference's idempotent uuid-keyed upsert,
     /root/reference/pkg/es/service.go:119-138).
   * N and avgdl are EXACT (maintained in the docs table per batch);
@@ -38,18 +37,23 @@ dropped docs cannot be in the true top-k. Stray docs decoded via a coarse
 block that belong to a dropped class are filtered out by re-deriving their
 class from doc_id.
 
-Driver fast path (DRIVER_MAX_POSTINGS): on a local store, queries whose
-candidate postings fit under the bound skip Spark entirely. The same
-phases run as pyarrow reads of the base and every loaded delta
-generation's segment dirs, each posting tagged with its generation, and
-numpy scoring; the tombstone rule above is one np.searchsorted over the
-generations' tombstone ids. Base-only and delta indexes take the same
-code; URI stores, filter context and over-bound queries take the
-distributed plan.
+One kernel, two executors. Live-posting decode (_decode_postings, the
+tombstone rule _live_mask), BM25 scoring (_bm25_kernel) and phrase
+matching (_phrase_kernel) exist once, as numpy functions over a frame of
+segment rows. The driver executor feeds them a pyarrow read of the base
+and every loaded delta generation's segment dirs: on a local store,
+queries whose candidate postings fit under DRIVER_MAX_POSTINGS skip Spark
+entirely. The distributed executor (SegmentIndex._grouped) routes the
+segment rows to salt-class groups — salting is aligned, so every doc's
+postings for every term meet in exactly one group — and runs the same
+kernel once per group in one groupBy(grp).applyInPandas. URI stores,
+filter context and over-bound queries take it. The tombstone arrays are
+read once per query (_read_tombstones) and shipped with the kernel.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
@@ -68,7 +72,7 @@ from pyspark.sql.types import (
 from .. import BM25_B, BM25_K1
 from .. import storage
 from ..functions.analyzer import analyze_query_py, analyzer_column
-from ..functions.hashing import pmod, xxh64_long_np, xxh64_string
+from ..functions.hashing import pmod, xxh64_long, xxh64_long_np, xxh64_string
 from ..storage import join as pjoin
 from . import codec
 from .bm25 import ROUND_DECIMALS, bm25_partial_col
@@ -84,7 +88,7 @@ from .segments import SEGMENT_READ_SCHEMA
 # inherit a stale T_job (ADVICE r4); app ids are unique per context.
 _TJOB_CACHE: dict[str, float] = {}
 
-# Driver fast-path postings bound (round 6, guide §1.2/§5): below this
+# Driver executor postings bound (round 6, guide §1.2/§5): below this
 # many candidate postings the cheapest possible Spark plan can never beat
 # a bounded driver-side read — the SMALLEST python-boundary Spark job
 # measures ~0.2-0.35 s fixed at local[32] (bench_extra.py round-6
@@ -92,16 +96,17 @@ _TJOB_CACHE: dict[str, float] = {}
 # full decode+score job 0.5-0.75 s), while 2M postings are ~10-20 MB of
 # varbyte parquet that pyarrow + the numpy codec decode and score in
 # tens of milliseconds. This is the same measured-crossover discipline
-# as prune_min_postings, applied one level down: tiny queries are served
-# by a bounded pyarrow read of the SAME parquet segments — base and delta
-# generations, tombstones included (never a cache — every query re-reads
-# storage), big queries take the distributed plan unchanged. The bound
-# counts superseded delta postings too (the same Lucene-approximate
-# counts as df). The bound admits searches, θ-seeds and phrase /
-# phrase_prefix queries at every slop; the phrase kernel also bails to
-# the distributed plan past 4x the bound in decoded positions or slop
-# tuples. Memory bound: 2M postings ≈ 50 MB of int64 arrays (4x that
-# for phrase positions).
+# as prune_min_postings, applied one level down: tiny queries run the
+# kernels on a bounded pyarrow read of the SAME parquet segments — base
+# and delta generations, tombstones included (never a cache — every
+# query re-reads storage), big queries run the same kernels on the
+# distributed executor. The bound counts superseded delta postings too
+# (the same Lucene-approximate counts as df). The bound admits top-k
+# searches, θ-seeds and phrase / phrase_prefix queries at every slop; on
+# the driver the phrase kernel also hands a query to the distributed
+# executor past 4x the bound in decoded positions or slop tuples. Memory
+# bound: 2M postings ≈ 50 MB of int64 arrays (4x that for phrase
+# positions).
 DRIVER_MAX_POSTINGS = 2_000_000
 
 _META_COLS = ["term", "salt", "nb", "count", "max_tf", "min_dl"]
@@ -116,35 +121,6 @@ _DECODED_SCHEMA = StructType(
     ]
 )
 
-
-def _decode_blocks(iterator):
-    """mapInPandas decoder: segment rows → exploded postings. Arrow-batched,
-    numpy-vectorized; one Python call per batch of blocks."""
-    empty = pd.DataFrame(
-        {"term": pd.Series(dtype="str"), "gen": pd.Series(dtype="int32"),
-         "doc_id": pd.Series(dtype="int64"), "tf": pd.Series(dtype="int64"),
-         "doc_len": pd.Series(dtype="int64")}
-    )
-    for pdf in iterator:
-        outs = []
-        for docs_vb, tfs_vb, dlens_vb, term, gen in zip(
-            pdf["docs_vb"], pdf["tfs_vb"], pdf["dlens_vb"], pdf["term"], pdf["gen"]
-        ):
-            docs = codec.delta_decode(docs_vb).astype(np.int64)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term": term,
-                        "gen": np.int32(gen),
-                        "doc_id": docs,
-                        "tf": codec.varbyte_decode(tfs_vb).astype(np.int64),
-                        "doc_len": codec.varbyte_decode(dlens_vb).astype(np.int64),
-                    }
-                )
-            )
-        yield pd.concat(outs) if outs else empty
-
-
 _POS_SCHEMA = StructType(
     [
         StructField("term", StringType()),
@@ -154,36 +130,294 @@ _POS_SCHEMA = StructType(
     ]
 )
 
+# (doc_id, tgen) of an index without tombstones
+_NO_TOMB = (np.empty(0, np.int64), np.empty(0, np.int64))
 
-def _decode_blocks_positions(iterator):
-    """mapInPandas decoder for phrase queries: segment rows → exploded
-    (term, gen, doc_id, pos) rows. Positions reconstructed vectorized
-    (codec.positions_decode); doc ids repeated per tf."""
+
+def _read_tombstones(spark: SparkSession, path: str, gens: "list[int]"
+                     ) -> "tuple[np.ndarray, np.ndarray]":
+    """(doc_id, tgen) of the given delta generations' tombstones as numpy
+    arrays sorted by doc_id, tgen the max tombstone generation per doc —
+    the one tombstone read every live-posting decode applies. A pyarrow
+    read on a local path, one collected Spark read on a URI store;
+    re-read on every call (no cache), like every other query read."""
+    if not gens:
+        return _NO_TOMB
+    dirs = [(g, pjoin(path, "delta", f"gen={g}", "tombstones"))
+            for g in gens]
+    if "://" in path:
+        parts = [spark.read.parquet(d).select("doc_id", F.lit(g).alias("g"))
+                 for g, d in dirs]
+        cur = parts[0]
+        for p in parts[1:]:
+            cur = cur.unionByName(p)
+        pdf = cur.dropna().toPandas()
+        ids = pdf["doc_id"].to_numpy(np.int64)
+        tgen = pdf["g"].to_numpy(np.int64)
+    else:
+        import pyarrow.parquet as pq
+
+        cols = [pq.read_table(d, columns=["doc_id"]).column("doc_id")
+                .drop_null().to_numpy().astype(np.int64) for _g, d in dirs]
+        ids = np.concatenate(cols)
+        tgen = np.concatenate([np.full(c.size, g, np.int64)
+                               for (g, _d), c in zip(dirs, cols)])
+    # after a sort by (id, gen) the last row of each id run holds its max
+    # tombstone generation
+    order = np.lexsort((tgen, ids))
+    ids, tgen = ids[order], tgen[order]
+    last = np.append(ids[1:] != ids[:-1], True) if ids.size else ids
+    return ids[last], tgen[last]
+
+
+def _live_mask(doc_ids: np.ndarray, gens, tomb) -> "np.ndarray | None":
+    """The tombstone rule: a posting of generation ``gens`` (an array
+    aligned with ``doc_ids``, or one generation) is live unless its doc
+    has a tombstone of a LATER generation — one np.searchsorted over the
+    sorted tombstone ids. None when there is no tombstone."""
+    t_ids, t_gen = tomb
+    if t_ids.size == 0:
+        return None
+    i = np.minimum(np.searchsorted(t_ids, doc_ids), t_ids.size - 1)
+    return (t_ids[i] != doc_ids) | (t_gen[i] <= gens)
+
+
+def _class_mask(doc_ids: np.ndarray,
+                cuts: "list[tuple[int, list[int]]]") -> "np.ndarray | None":
+    """Mask of the docs whose salt class pmod(xxh64(doc), mod) is in
+    ``classes`` for every (mod, classes) cut; None without cuts."""
+    if not cuts:
+        return None
+    h = xxh64_long_np(doc_ids)
+    m = np.ones(doc_ids.size, dtype=bool)
+    for mod, classes in cuts:
+        m &= np.isin(h % np.int64(mod), np.asarray(classes, dtype=np.int64))
+    return m
+
+
+def _decode_blocks(iterator, tomb=_NO_TOMB, positions: bool = False):
+    """mapInPandas decoder: segment rows → exploded LIVE postings
+    (``tomb`` from _read_tombstones) as _DECODED_SCHEMA rows, or with
+    ``positions`` one _POS_SCHEMA row per token (doc ids repeated per tf;
+    blocks without positions are skipped). Arrow-batched,
+    numpy-vectorized; one Python call per batch of blocks."""
+    vb_col, names = (("pos_vb", ["pos"]) if positions
+                     else ("dlens_vb", ["tf", "doc_len"]))
     empty = pd.DataFrame(
         {"term": pd.Series(dtype="str"), "gen": pd.Series(dtype="int32"),
-         "doc_id": pd.Series(dtype="int64"), "pos": pd.Series(dtype="int64")}
-    )
+         **{c: pd.Series(dtype="int64") for c in ["doc_id", *names]}})
     for pdf in iterator:
         outs = []
-        for docs_vb, tfs_vb, pos_vb, term, gen in zip(
-            pdf["docs_vb"], pdf["tfs_vb"], pdf["pos_vb"], pdf["term"], pdf["gen"]
+        for docs_vb, tfs_vb, vb, term, gen in zip(
+            pdf["docs_vb"], pdf["tfs_vb"], pdf[vb_col], pdf["term"], pdf["gen"]
         ):
-            if not pos_vb:
-                continue
             docs = codec.delta_decode(docs_vb).astype(np.int64)
-            tfs = codec.varbyte_decode(tfs_vb)
-            flat = codec.positions_decode(pos_vb, tfs).astype(np.int64)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term": term,
-                        "gen": np.int32(gen),
-                        "doc_id": np.repeat(docs, tfs.astype(np.int64)),
-                        "pos": flat,
-                    }
-                )
-            )
+            tfs = codec.varbyte_decode(tfs_vb).astype(np.int64)
+            if not positions:
+                cols = {"doc_id": docs, "tf": tfs, "doc_len":
+                        codec.varbyte_decode(vb).astype(np.int64)}
+            elif vb:
+                cols = {"doc_id": np.repeat(docs, tfs),
+                        "pos": codec.positions_decode(vb, tfs).astype(np.int64)}
+            else:
+                continue
+            live = _live_mask(cols["doc_id"], gen, tomb)
+            if live is not None:
+                cols = {c: v[live] for c, v in cols.items()}
+            outs.append(pd.DataFrame({"term": term, "gen": np.int32(gen),
+                                      **cols}))
         yield pd.concat(outs) if outs else empty
+
+
+def _decode_postings(blocks: pd.DataFrame, tomb
+                     ) -> "tuple[np.ndarray, ...]":
+    """Segment rows (term, gen, docs_vb, tfs_vb, dlens_vb) → flat
+    (doc_ids, tfs, dls, term_idx, uniq_terms) numpy arrays of the live
+    postings. Blocks decode in term order, so each doc's partials reach
+    the scorer in one order whatever order the rows arrived in (the two
+    executors sum them bit-identically)."""
+    terms_b = blocks["term"].to_numpy(object)
+    uniq, tcodes = np.unique(terms_b, return_inverse=True)
+    order = np.argsort(tcodes, kind="stable")
+    docs_l, tfs_l, dls_l, tidx_l = [], [], [], []
+    for i in order:
+        d = codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64)
+        docs_l.append(d)
+        tfs_l.append(codec.varbyte_decode(
+            blocks["tfs_vb"].iat[i]).astype(np.int64))
+        dls_l.append(codec.varbyte_decode(
+            blocks["dlens_vb"].iat[i]).astype(np.int64))
+        tidx_l.append(np.full(d.size, tcodes[i], dtype=np.int64))
+    if not docs_l:
+        z = np.empty(0, np.int64)
+        return z, z, z, z, uniq
+    out = [np.concatenate(a) for a in (docs_l, tfs_l, dls_l, tidx_l)]
+    if tomb[0].size:  # per-posting generations only when they matter
+        gens = np.repeat(blocks["gen"].to_numpy(np.int64)[order],
+                         [d.size for d in docs_l])
+        live = _live_mask(out[0], gens, tomb)
+        out = [a[live] for a in out]
+    return (*out, uniq)
+
+
+def _bm25_kernel(blocks: pd.DataFrame, tomb, idf: "dict[str, float]",
+                 avgdl: float, required: "int | None", msm: "int | None",
+                 cuts: "list[tuple[int, list[int]]]"
+                 ) -> "tuple[np.ndarray, np.ndarray]":
+    """BM25 over segment rows → (doc_ids, raw scores) of the docs that
+    survive the class ``cuts`` (_class_mask) and the term-count filters:
+    exactly ``required`` distinct terms (AND) or at least ``msm``."""
+    doc_ids, tfs, dls, tidx, uniq = _decode_postings(blocks, tomb)
+    m = _class_mask(doc_ids, cuts)
+    if m is not None:
+        doc_ids, tfs, dls, tidx = doc_ids[m], tfs[m], dls[m], tidx[m]
+    if doc_ids.size == 0:
+        return doc_ids, np.empty(0, np.float64)
+    w = np.array([idf[t] for t in uniq])
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
+    denom = tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / avgdl)
+    partial = w[tidx] * (tf * (BM25_K1 + 1.0)) / denom
+    order = np.argsort(doc_ids, kind="stable")
+    ds = doc_ids[order]
+    starts = np.concatenate(([0], np.flatnonzero(ds[1:] != ds[:-1]) + 1))
+    raw = np.add.reduceat(partial[order], starts)
+    nterms = np.diff(np.concatenate((starts, [ds.size])))
+    docs_u = ds[starts]
+    keep = np.ones(docs_u.size, dtype=bool)
+    if required is not None:
+        keep &= nterms == required
+    if msm is not None:
+        keep &= nterms >= msm
+    return docs_u[keep], raw[keep]
+
+
+def _topk_rounded(docs_u: np.ndarray, raw: np.ndarray, k: "int | None",
+                  after: "tuple[float, int] | None"
+                  ) -> list[tuple[int, float]]:
+    """Exact rounded-order top-k over raw scores: the bulk is ranked
+    on raw values; HALF_UP rounding (the expensive repr-based exact
+    form) touches only the bounded candidate set around the k-th
+    score / the cursor boundary. Exactness: ROUND_DECIMALS quantizes
+    to q = 10^-4, |round(x) - x| <= q/2, so round is monotone up to a
+    q-wide band — candidates with raw >= kth_raw - q - eps are a
+    superset of the rounded-order top-k."""
+    from .similarity import _round_half_up
+
+    q = 10.0 ** (-ROUND_DECIMALS)
+    eps = 1e-9
+    if after is not None:
+        a_s, a_d = float(after[0]), int(after[1])
+        hi = raw > a_s + 0.5 * q + eps        # rounds above the cursor
+        border = (~hi) & (raw >= a_s - 0.5 * q - eps)
+        keep = ~hi
+        for i in np.flatnonzero(border):
+            r = _round_half_up(float(raw[i]), ROUND_DECIMALS)
+            if r > a_s or (r == a_s and int(docs_u[i]) <= a_d):
+                keep[i] = False
+        docs_u, raw = docs_u[keep], raw[keep]
+    if docs_u.size == 0:
+        return []
+    if k is not None and docs_u.size > k:
+        kth = np.partition(raw, docs_u.size - k)[docs_u.size - k]
+        m = raw >= kth - q - eps
+        docs_u, raw = docs_u[m], raw[m]
+    cand = sorted(
+        ((-_round_half_up(float(r), ROUND_DECIMALS), int(d))
+         for d, r in zip(docs_u, raw)),
+    )
+    if k is not None:
+        cand = cand[:k]
+    return [(d, -s) for s, d in cand]
+
+
+def _phrase_kernel(blocks: pd.DataFrame, slots: "list[list[str]]",
+                   slop: int, tomb, cuts: "list[tuple[int, list[int]]]",
+                   cap: "int | None"
+                   ) -> "tuple[np.ndarray, np.ndarray] | None":
+    """Slot kernel for every phrase shape over segment rows (term, gen,
+    docs_vb, tfs_vb, pos_vb) → (doc_ids, phrase_tf), doc-ordered. Slot i
+    may be filled by any of the terms ``slots[i]`` (one term for an exact
+    phrase, the expansion list for the phrase_prefix slot); a doc counts
+    the position tuples with p_i == p0 + i at slop 0, else
+    p_{i-1} < p_i <= p0 + i + slop. Positions of superseded postings (a
+    later generation's tombstone) and of docs outside the class ``cuts``
+    are dropped before any key is built; blocks without positions are
+    skipped.
+
+    Doc ids map to dense ordinals and slop is clamped to the largest
+    position + 1, so the sorted keys ordinal*M + pos cannot overflow for
+    any id width or slop: ordinals stay under the position volume and M
+    under about twice the longest doc. Each slot expands the partial
+    tuples over their np.searchsorted ranges (at slop 0 a range holds at
+    most one key) and the last slot only counts.
+
+    ``cap`` bounds the decoded positions and every slop > 0 expansion;
+    past it the kernel returns None (the driver executor then hands the
+    query to the distributed one). None disables the guard."""
+    terms = sorted({t for slot in slots for t in slot})
+    code = {t: i for i, t in enumerate(terms)}
+    docs_l, pos_l, tcode_l, used = [], [], [], []
+    volume = 0
+    for i in range(len(blocks)):
+        pvb = blocks["pos_vb"].iat[i]
+        if not pvb:
+            continue
+        used.append(i)
+        tfs = codec.varbyte_decode(blocks["tfs_vb"].iat[i])
+        volume += int(tfs.sum())
+        if cap is not None and volume > cap:
+            return None
+        pos_l.append(codec.positions_decode(pvb, tfs).astype(np.int64))
+        docs_l.append(np.repeat(
+            codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64),
+            tfs.astype(np.int64)))
+        tcode_l.append(np.full(pos_l[-1].size, code[blocks["term"].iat[i]]))
+    z = np.empty(0, np.int64)
+    if not docs_l:
+        return z, z
+    docs = np.concatenate(docs_l)
+    pos = np.concatenate(pos_l)
+    tcode = np.concatenate(tcode_l)
+    if tomb[0].size:
+        gens = np.repeat(blocks["gen"].to_numpy(np.int64)[used],
+                         [p.size for p in pos_l])
+        live = _live_mask(docs, gens, tomb)
+        docs, pos, tcode = docs[live], pos[live], tcode[live]
+    doc_ids, ords = np.unique(docs, return_inverse=True)
+    m = _class_mask(doc_ids, cuts)
+    if m is not None:
+        m = m[ords]
+        ords, pos, tcode = ords[m], pos[m], tcode[m]
+    if pos.size == 0:
+        return z, z
+    # every slop >= the largest position admits the same tuples, so
+    # the clamp keeps M (and the keys) small without changing answers
+    slop = min(max(int(slop), 0), int(pos.max()) + 1)
+    M = int(pos.max()) + len(slots) + slop + 1
+    key = ords.astype(np.int64) * M + pos
+    # positions are unique per doc (one token each), so every slot's
+    # key set is duplicate-free
+    ks = [np.sort(key[np.isin(tcode, [code[t] for t in slot])])
+          for slot in slots]
+    first = prev = ks[0]
+    weight = None
+    for i in range(1, len(ks)):
+        lo = np.searchsorted(ks[i], prev, side="right")
+        cnt = np.searchsorted(ks[i], first + i + slop, side="right") - lo
+        if i == len(ks) - 1:
+            weight = cnt  # last slot: count, don't expand
+            break
+        n = int(cnt.sum())
+        if cap is not None and n > cap:
+            return None
+        row = np.repeat(np.arange(cnt.size), cnt)
+        prev = ks[i][np.arange(n) + (lo - np.cumsum(cnt) + cnt)[row]]
+        first = first[row]
+    tf = np.bincount(first // M, weights=weight,
+                     minlength=doc_ids.size).astype(np.int64)
+    hit = np.flatnonzero(tf)
+    return doc_ids[hit], tf[hit]
 
 
 def _partial_np(tf: np.ndarray, dl: np.ndarray, avgdl: float,
@@ -400,22 +634,6 @@ class SegmentIndex:
         buckets = sorted({pmod(xxh64_string(t), self.n_buckets) for t in terms})
         return segs.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
-    def _tombstones(self) -> DataFrame | None:
-        """(doc_id, tgen) — max tombstone generation per doc."""
-        if not self.generations:
-            return None
-        parts = []
-        for g in self.generations:
-            parts.append(
-                self.spark.read.parquet(
-                    pjoin(self.path, "delta", f"gen={g}", "tombstones")
-                ).select("doc_id", F.lit(g).alias("tgen"))
-            )
-        t = parts[0]
-        for p in parts[1:]:
-            t = t.unionByName(p)
-        return t.groupBy("doc_id").agg(F.max("tgen").alias("tgen"))
-
     def _meta(self, terms: list[str]) -> pd.DataFrame:
         """Metadata-only scan — binary columns never touched. On a local
         index the scan is a direct pyarrow read of the base and every
@@ -507,8 +725,8 @@ class SegmentIndex:
                       cols: "list[str] | None" = None) -> pd.DataFrame:
         """Base and delta segment rows WITH binary columns via pyarrow,
         plus their ``gen``, filtered to the query terms (and, for the
-        pruned plan, to the (term, gen, salt) block keys) — the fast-path
-        twin of _segments/_filter_keys."""
+        pruned plan, to the (term, gen, salt) block keys) — the driver
+        executor's read."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -538,153 +756,9 @@ class SegmentIndex:
             return pd.DataFrame(columns=cols + ["gen"])
         return pa.concat_tables(tabs).to_pandas()
 
-    def _tombstones_local(self) -> "tuple[np.ndarray, np.ndarray]":
-        """(doc_id, tgen) of the loaded generations' tombstones as numpy
-        arrays sorted by doc_id, tgen the max tombstone generation per
-        doc — the pyarrow twin of _tombstones. Re-read on every call,
-        like every other fast-path read."""
-        import pyarrow.parquet as pq
-
-        ids_l, gen_l = [], []
-        for g in self.generations:
-            col = pq.read_table(
-                os.path.join(self.path, "delta", f"gen={g}", "tombstones"),
-                columns=["doc_id"]).column("doc_id").drop_null()
-            ids_l.append(col.to_numpy().astype(np.int64))
-            gen_l.append(np.full(len(col), g, dtype=np.int64))
-        if not ids_l:
-            z = np.empty(0, np.int64)
-            return z, z
-        # generations are ascending, so after a stable sort by id the last
-        # row of each id run holds its max tombstone generation
-        ids = np.concatenate(ids_l)
-        order = np.argsort(ids, kind="stable")
-        ids, gens = ids[order], np.concatenate(gen_l)[order]
-        last = np.append(ids[1:] != ids[:-1], True)
-        return ids[last], gens[last]
-
-    def _live_mask(self, doc_ids: np.ndarray, blocks: pd.DataFrame,
-                   sizes: "list[int]") -> "np.ndarray | None":
-        """Mask of the decoded postings no later tombstone kills — the
-        distributed rule ``tgen IS NULL OR tgen <= gen`` as one
-        np.searchsorted over _tombstones_local — or None when there is no
-        tombstone. ``doc_ids`` concatenates the blocks' decoded rows,
-        ``sizes[i]`` of them from block i."""
-        t_ids, t_gen = self._tombstones_local()
-        if t_ids.size == 0:
-            return None
-        gens = np.repeat(blocks["gen"].to_numpy(np.int64), sizes)
-        i = np.minimum(np.searchsorted(t_ids, doc_ids), t_ids.size - 1)
-        return (t_ids[i] != doc_ids) | (t_gen[i] <= gens)
-
-    def _decode_local(self, blocks: pd.DataFrame
-                      ) -> "tuple[np.ndarray, ...]":
-        """Decode fast-path block rows → flat (doc_ids, tfs, dls,
-        term_idx, uniq_terms) numpy arrays of the live postings — the same
-        codec the distributed decoder runs, minus the Arrow boundary, and
-        the same tombstone drop the distributed scorer applies."""
-        terms_b = blocks["term"].to_numpy(object)
-        uniq, tcodes = np.unique(terms_b, return_inverse=True)
-        docs_l, tfs_l, dls_l, tidx_l = [], [], [], []
-        for i in range(len(blocks)):
-            d = codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64)
-            docs_l.append(d)
-            tfs_l.append(codec.varbyte_decode(
-                blocks["tfs_vb"].iat[i]).astype(np.int64))
-            dls_l.append(codec.varbyte_decode(
-                blocks["dlens_vb"].iat[i]).astype(np.int64))
-            tidx_l.append(np.full(d.size, tcodes[i], dtype=np.int64))
-        if not docs_l:
-            z = np.empty(0, np.int64)
-            return z, z, z, z, uniq
-        out = [np.concatenate(a) for a in (docs_l, tfs_l, dls_l, tidx_l)]
-        live = self._live_mask(out[0], blocks, [d.size for d in docs_l])
-        if live is not None:
-            out = [a[live] for a in out]
-        return (*out, uniq)
-
-    def _score_local(self, blocks: pd.DataFrame, term_df: dict,
-                     required: "int | None", k: "int | None",
-                     keep_classes: "list[int] | None",
-                     n_docs: int, avgdl: float,
-                     msm: "int | None",
-                     after: "tuple[float, int] | None"
-                     ) -> list[tuple[int, float]]:
-        """Driver twin of _score(...).collect(): same BM25 partials, the
-        same HALF_UP rounding semantics (similarity._round_half_up — the
-        pinned Spark Round parity), the same (score desc, doc_id asc)
-        order and cursor/nterms filters. Returns [(doc_id, score)]."""
-        from .. import BM25_B, BM25_K1
-
-        doc_ids, tfs, dls, tidx, uniq = self._decode_local(blocks)
-        if doc_ids.size == 0:
-            return []
-        if keep_classes is not None:
-            cls = xxh64_long_np(doc_ids) % np.int64(self.nb_max)
-            m = np.isin(cls, np.asarray(keep_classes, dtype=np.int64))
-            doc_ids, tfs, dls, tidx = doc_ids[m], tfs[m], dls[m], tidx[m]
-            if doc_ids.size == 0:
-                return []
-        idf = np.array([self._idf(term_df[t], n_docs) for t in uniq])
-        tf = tfs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        denom = tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / avgdl)
-        partial = idf[tidx] * (tf * (BM25_K1 + 1.0)) / denom
-        order = np.argsort(doc_ids, kind="stable")
-        ds = doc_ids[order]
-        ps = partial[order]
-        starts = np.concatenate(
-            ([0], np.flatnonzero(ds[1:] != ds[:-1]) + 1))
-        raw = np.add.reduceat(ps, starts)
-        nterms = np.diff(np.concatenate((starts, [ds.size])))
-        docs_u = ds[starts]
-        if required is not None:
-            m = nterms == required
-            raw, docs_u, nterms = raw[m], docs_u[m], nterms[m]
-        if msm is not None:
-            m = nterms >= msm
-            raw, docs_u = raw[m], docs_u[m]
-        return self._topk_rounded(docs_u, raw, k, after)
-
-    @staticmethod
-    def _topk_rounded(docs_u: np.ndarray, raw: np.ndarray,
-                      k: "int | None",
-                      after: "tuple[float, int] | None"
-                      ) -> list[tuple[int, float]]:
-        """Exact rounded-order top-k over raw scores: the bulk is ranked
-        on raw values; HALF_UP rounding (the expensive repr-based exact
-        form) touches only the bounded candidate set around the k-th
-        score / the cursor boundary. Exactness: ROUND_DECIMALS quantizes
-        to q = 10^-4, |round(x) - x| <= q/2, so round is monotone up to a
-        q-wide band — candidates with raw >= kth_raw - q - eps are a
-        superset of the rounded-order top-k."""
-        from .similarity import _round_half_up
-
-        q = 10.0 ** (-ROUND_DECIMALS)
-        eps = 1e-9
-        if after is not None:
-            a_s, a_d = float(after[0]), int(after[1])
-            hi = raw > a_s + 0.5 * q + eps        # rounds above the cursor
-            border = (~hi) & (raw >= a_s - 0.5 * q - eps)
-            keep = ~hi
-            for i in np.flatnonzero(border):
-                r = _round_half_up(float(raw[i]), ROUND_DECIMALS)
-                if r > a_s or (r == a_s and int(docs_u[i]) <= a_d):
-                    keep[i] = False
-            docs_u, raw = docs_u[keep], raw[keep]
-        if docs_u.size == 0:
-            return []
-        if k is not None and docs_u.size > k:
-            kth = np.partition(raw, docs_u.size - k)[docs_u.size - k]
-            m = raw >= kth - q - eps
-            docs_u, raw = docs_u[m], raw[m]
-        cand = sorted(
-            ((-_round_half_up(float(r), ROUND_DECIMALS), int(d))
-             for d, r in zip(docs_u, raw)),
-        )
-        if k is not None:
-            cand = cand[:k]
-        return [(d, -s) for s, d in cand]
+    def _tomb(self) -> "tuple[np.ndarray, np.ndarray]":
+        """The loaded generations' tombstones (_read_tombstones)."""
+        return _read_tombstones(self.spark, self.path, self.generations)
 
     def _rows_df(self, rows: list[tuple[int, float]]) -> DataFrame:
         return self._values_df(rows, "doc_id long, score double")
@@ -788,80 +862,124 @@ class SegmentIndex:
 
     def _decode(self, terms: list[str],
                 keys: set[tuple[str, int, int]] | None) -> DataFrame:
+        """Live postings of ``terms`` (restricted to the (term, gen, salt)
+        block keys when given)."""
         segs = self._segments(terms)
         if keys is not None:
             segs = self._filter_keys(segs, keys)
+        return self._decoded(segs)
+
+    def _decoded(self, segs: DataFrame, positions: bool = False) -> DataFrame:
+        """mapInPandas decode of segment rows into live postings:
+        (term, gen, doc_id, tf, doc_len), or (term, gen, doc_id, pos)
+        with ``positions``. The tombstone arrays ride in the decoder, so
+        superseded postings never leave it."""
         # coalesce to core count: query-filtered segment sets are a few
         # small files per bucket; without this every tiny file-partition
         # spawns its own Python worker (decode-side worker storm)
         par = self.spark.sparkContext.defaultParallelism
-        return segs.select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb") \
+        return segs.select("term", "gen", "docs_vb", "tfs_vb",
+                           "pos_vb" if positions else "dlens_vb") \
             .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
+            .mapInPandas(functools.partial(_decode_blocks, tomb=self._tomb(),
+                                           positions=positions),
+                         _POS_SCHEMA if positions else _DECODED_SCHEMA)
 
-    # -- scoring ----------------------------------------------------------
-    def _score(self, decoded: DataFrame, term_df: dict[str, int],
-               n_terms_required: int | None, k: "int | None",
-               keep_classes: list[int] | None = None,
-               n_docs: int | None = None,
-               avgdl: float | None = None,
-               min_terms: int | None = None,
-               after: "tuple[float, int] | None" = None,
-               filter_ids: DataFrame | None = None) -> DataFrame:
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
-        if filter_ids is not None:
-            # ES filter context: restrict the candidate set WITHOUT touching
-            # scores — a left-semi join on doc_id applied before aggregation
-            # so filtered-out postings never reach the scorer. The filter
-            # set can be corpus-sized, so no broadcast hint: AQE picks the
-            # strategy (BHJ when the filter is small, SMJ/shuffled-hash when
-            # it isn't).
-            decoded = decoded.join(
-                filter_ids.select("doc_id"), "doc_id", "left_semi")
-        stats = self.spark.createDataFrame(
-            [(t, d) for t, d in term_df.items()], "term string, df long"
-        )
-        cand = decoded.join(F.broadcast(stats), "term")
-        if keep_classes is not None:
-            cand = cand.filter(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.nb_max))
-                .cast("int").isin(keep_classes)
-            )
-        partial = bm25_partial_col(
-            F.col("tf").cast("double"), F.col("doc_len").cast("double"),
-            F.col("df").cast("double"),
-            self.n_docs if n_docs is None else n_docs,
-            self.avgdl if avgdl is None else avgdl,
-        )
-        scored = (
-            cand.select("doc_id", partial.alias("partial"))
-            .groupBy("doc_id")
-            .agg(F.sum("partial").alias("raw"), F.count(F.lit(1)).alias("nterms"))
-        )
-        if n_terms_required is not None:
-            scored = scored.filter(F.col("nterms") == n_terms_required)
-        if min_terms is not None:
-            scored = scored.filter(F.col("nterms") >= min_terms)
-        res = scored.select(
-            "doc_id", F.round(F.col("raw"), ROUND_DECIMALS).alias("score"))
-        if after is not None:
-            # keyset cursor on the ROUNDED (score desc, doc_id asc) total
-            # order — the same order pages are served in, so pages never
-            # overlap or skip even across score ties
-            a_s, a_d = float(after[0]), int(after[1])
-            res = res.filter(
-                (F.col("score") < a_s)
-                | ((F.col("score") == a_s) & (F.col("doc_id") > a_d))
-            )
-        if k is None:  # full scored match set (facet/collapse consumers)
+    # -- executors ----------------------------------------------------------
+    def _grouped(self, terms: list[str], meta: pd.DataFrame,
+                 classes: "list[int] | None", cols: list[str],
+                 kernel, schema: str) -> DataFrame:
+        """The distributed executor: one groupBy(grp).applyInPandas over
+        the segment rows of ``terms``. With G = the largest block count
+        nb among the terms' blocks, block (t, gen, s, nb_t) goes to every
+        group g < G with g % nb_t == s; ``kernel(blocks, (G, [g]))`` then
+        keeps the postings of docs with pmod(xxh64(doc), G) == g. Salting
+        is aligned (nb_t are powers of two dividing G), so every doc's
+        postings for every term meet in exactly one group; only terms with
+        nb_t < G are replicated, and those are small by construction
+        (plan_block_counts). ``classes`` (global salt classes mod nb_max)
+        drops the groups — and so the blocks — no listed class maps to."""
+        G = int(meta["nb"].max())
+        grp = F.explode(F.sequence(F.col("salt"), F.lit(G - 1), F.col("nb")))
+        rows = self._segments(terms).select(*cols, grp.alias("grp"))
+        if classes is not None:
+            rows = rows.filter(
+                F.col("grp").isin(sorted({int(c) % G for c in classes})))
+        return rows.groupBy("grp").applyInPandas(
+            lambda key, blocks: kernel(blocks, (G, [int(key[0])])), schema)
+
+    def _bm25(self, meta: pd.DataFrame, terms: list[str],
+              term_df: dict[str, int], required: "int | None",
+              k: "int | None", classes: "list[int] | None",
+              n_docs: int, avgdl: float, msm: "int | None" = None,
+              after: "tuple[float, int] | None" = None,
+              filter_ids: DataFrame | None = None
+              ) -> "list[tuple[int, float]] | DataFrame":
+        """Rounded BM25 (doc_id, score) of ``terms`` — top-k in (score
+        desc, doc_id asc) order, or the full match set with k=None —
+        restricted to the global salt ``classes`` when given, after the
+        ``after`` cursor, within ``filter_ids``. One kernel
+        (_bm25_kernel), two executors: a top-k over candidate postings
+        (base and delta) under driver_max_postings on a local store runs
+        it on the driver and returns [(doc_id, score)]; everything else
+        runs it per salt-class group (_grouped) and returns a DataFrame.
+        There each group cuts its own exact rounded top-k (every doc
+        lives in one group, so the global top-k of the groups' top-k is
+        exact); with filter_ids or k=None the groups return raw scores,
+        semi-joined to the filter before Spark rounds and cuts (a filter
+        only removes docs)."""
+        idf = {t: self._idf(term_df[t], n_docs) for t in terms}
+        cuts, tomb = self._cuts(classes), self._tomb()
+        if (k is not None and self.driver_max_postings > 0
+                and self._fast_eligible(filter_ids)):
+            keys = (None if classes is None
+                    else self._keys_for_classes(meta, classes))
+            if self._keys_volume(meta, keys) <= self.driver_max_postings:
+                return _topk_rounded(*_bm25_kernel(
+                    self._blocks_local(terms, keys), tomb, idf, avgdl,
+                    required, msm, cuts), k, after)
+        cut = k is not None and filter_ids is None
+
+        def kernel(blocks, group_cut):
+            docs_u, raw = _bm25_kernel(blocks, tomb, idf, avgdl, required,
+                                       msm, cuts + [group_cut])
+            if cut:
+                top = _topk_rounded(docs_u, raw, k, after)
+                docs_u = np.array([d for d, _ in top], dtype=np.int64)
+                raw = np.array([s for _, s in top], dtype=np.float64)
+            return pd.DataFrame({"doc_id": docs_u, "score": raw})
+
+        res = self._grouped(
+            terms, meta, classes,
+            ["term", "gen", "docs_vb", "tfs_vb", "dlens_vb"], kernel,
+            "doc_id long, score double")
+        if not cut:
+            if filter_ids is not None:
+                res = res.join(filter_ids.select("doc_id"), "doc_id",
+                               "left_semi")
+            res = res.select(
+                "doc_id", F.round("score", ROUND_DECIMALS).alias("score"))
+            if after is not None:
+                # keyset cursor on the ROUNDED (score desc, doc_id asc)
+                # total order — the order pages are served in
+                a_s, a_d = float(after[0]), int(after[1])
+                res = res.filter(
+                    (F.col("score") < a_s)
+                    | ((F.col("score") == a_s) & (F.col("doc_id") > a_d)))
+        if k is None:
             return res
         return res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _as_df(self, res: "list[tuple[int, float]] | DataFrame"
+               ) -> DataFrame:
+        return self._rows_df(res) if isinstance(res, list) else res
+
+    @staticmethod
+    def _as_rows(res: "list[tuple[int, float]] | DataFrame"
+                 ) -> list[tuple[int, float]]:
+        if isinstance(res, list):
+            return res
+        return [(int(r["doc_id"]), float(r["score"])) for r in res.collect()]
 
     # -- public -----------------------------------------------------------
     def search(self, query: str, k: int = 10, mode: str = "AND",
@@ -918,18 +1036,14 @@ class SegmentIndex:
         # Lucene-faithful df: includes superseded postings until fold
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
         required = len(terms) if is_and else None
-
-        fast = (self.driver_max_postings > 0
-                and self._fast_eligible(filter_ids))
         total = sum(term_df.values())
+
+        def bm25(classes):
+            return self._bm25(meta, terms, term_df, required, k, classes,
+                              n_docs, avgdl, msm, after, filter_ids)
+
         if not prune or total <= self.prune_min_postings:
-            if fast and total <= self.driver_max_postings:
-                return self._rows_df(self._score_local(
-                    self._blocks_local(terms), term_df, required, k,
-                    None, n_docs, avgdl, msm, after))
-            return self._score(self._decode(terms, None), term_df, required, k,
-                               n_docs=n_docs, avgdl=avgdl, min_terms=msm,
-                               after=after, filter_ids=filter_ids)
+            return self._as_df(bm25(None))
 
         # ---- block-max pruning math (driver-side, metadata only) ----
         ub = np.zeros(self.nb_max)                  # score upper bound per class
@@ -962,26 +1076,12 @@ class SegmentIndex:
             if got >= k:
                 break
 
-        seed_keys = self._keys_for_classes(meta, seed)
         # θ-seeding: the seed classes' decode volume is bounded (classes
         # are added only until est >= k, blocks target TARGET_BLOCK
-        # postings), so on an eligible index the seed phase is a driver-
-        # side pyarrow read + numpy score — one Spark job round-trip
-        # (~0.2-0.75 s measured, bench_extra.py) removed from every
-        # pruned query. Fallback: the original distributed seed job.
-        if fast and self._keys_volume(meta, seed_keys) \
-                <= self.driver_max_postings:
-            seed_top = self._score_local(
-                self._blocks_local(terms, seed_keys), term_df, required,
-                k, seed, n_docs, avgdl, msm, after)
-        else:
-            seed_top = [
-                (int(r["doc_id"]), float(r["score"])) for r in self._score(
-                    self._decode(terms, seed_keys), term_df, required, k,
-                    keep_classes=seed, n_docs=n_docs, avgdl=avgdl,
-                    min_terms=msm, after=after, filter_ids=filter_ids,
-                ).collect()
-            ]
+        # postings), so on an eligible index the seed phase runs on the
+        # driver executor — no Spark job round-trip (~0.2-0.75 s
+        # measured, bench_extra.py) in a pruned query
+        seed_top = self._as_rows(bm25(seed))
         if len(seed_top) >= k:
             # θ is derived from a ROUNDED score; subtract a half-ulp of the
             # rounding so (a) rounding-up can't inflate θ past the true raw
@@ -991,17 +1091,7 @@ class SegmentIndex:
             keep = [c for c in order if ub[c] >= theta or c in set(seed)]
         else:
             keep = order  # not enough seeds: fall back to all feasible classes
-        keep_keys = self._keys_for_classes(meta, keep)
-        if fast and self._keys_volume(meta, keep_keys) \
-                <= self.driver_max_postings:
-            return self._rows_df(self._score_local(
-                self._blocks_local(terms, keep_keys), term_df, required,
-                k, keep, n_docs, avgdl, msm, after))
-        return self._score(
-            self._decode(terms, keep_keys), term_df, required, k,
-            keep_classes=keep, n_docs=n_docs, avgdl=avgdl, min_terms=msm,
-            after=after, filter_ids=filter_ids,
-        )
+        return self._as_df(bm25(keep))
 
     def _class_lattice(self, meta: pd.DataFrame, avgdl: float
                        ) -> "dict[str, tuple[np.ndarray, np.ndarray]]":
@@ -1032,9 +1122,12 @@ class SegmentIndex:
 
     @staticmethod
     def _keys_volume(meta: pd.DataFrame,
-                     keys: "set[tuple[str, int, int]]") -> int:
-        """Total posting count of the given (term, gen, salt) block keys
-        (from the already-fetched metadata — no extra scan)."""
+                     keys: "set[tuple[str, int, int]] | None") -> int:
+        """Total posting count of the given (term, gen, salt) block keys,
+        or of every block with keys=None (from the already-fetched
+        metadata — no extra scan)."""
+        if keys is None:
+            return int(meta["count"].sum())
         return int(sum(
             int(c) for t, g, s, c in zip(
                 meta["term"], meta["gen"], meta["salt"], meta["count"])
@@ -1045,92 +1138,24 @@ class SegmentIndex:
                       keys: "set[tuple[str, int, int]]",
                       within_classes: "list[int] | None"
                       ) -> "list[tuple[int, int]] | None":
-        """Driver slot kernel for every phrase shape: slot i may be filled
-        by any of the terms ``slots[i]`` (one term for an exact phrase,
-        the expansion list for the phrase_prefix slot). Counts, per doc,
-        the tuples the distributed join chain in _phrase counts:
-        p_i == p0 + i at slop 0, else p_{i-1} < p_i <= p0 + i + slop.
-
-        Positions decode once per term from the AND-feasible blocks (the
-        distributed chain re-runs its python decode once per join
-        branch). Doc ids map to dense ordinals and slop is clamped to the
-        largest position + 1, so the sorted keys ordinal*M + pos cannot
-        overflow for any id width or slop: ordinals stay under the
-        position volume cap and M under about twice the longest doc.
-        Each slot expands the partial tuples over their np.searchsorted
-        ranges (at slop 0 a range holds at most one key) and the last
-        slot only counts. Rows come back doc-ordered, like the chain's
-        orderBy. Positions of superseded postings (a later generation's
-        tombstone) are dropped before any key is built.
-
-        Returns None — the caller then runs the distributed plan — when
-        positions are missing on disk, the position volume exceeds 4x
-        driver_max_postings (admission only knows posting counts, so this
-        catches tf-skewed data), or a slop > 0 expansion would hold more
-        than 4x driver_max_postings intermediate tuples."""
+        """The driver executor of the phrase kernel: a pyarrow read of the
+        (term, gen, salt) ``keys`` blocks, _phrase_kernel under the
+        4x driver_max_postings volume guards (admission only knows
+        posting counts, so this catches tf-skewed data) → [(doc_id,
+        phrase_tf)], or None when a guard trips."""
         terms = sorted({t for slot in slots for t in slot})
-        code = {t: i for i, t in enumerate(terms)}
         blocks = self._blocks_local(
             terms, keys, cols=["term", "docs_vb", "tfs_vb", "pos_vb"])
-        cap = 4 * self.driver_max_postings
-        docs_l, pos_l, tcode_l = [], [], []
-        volume = 0
-        for i in range(len(blocks)):
-            pvb = blocks["pos_vb"].iat[i]
-            if not pvb:
-                return None
-            tfs = codec.varbyte_decode(blocks["tfs_vb"].iat[i])
-            volume += int(tfs.sum())
-            if volume > cap:
-                return None
-            pos_l.append(codec.positions_decode(pvb, tfs).astype(np.int64))
-            docs_l.append(np.repeat(
-                codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64),
-                tfs.astype(np.int64)))
-            tcode_l.append(np.full(pos_l[-1].size,
-                                   code[blocks["term"].iat[i]]))
-        if not docs_l:
-            return []
-        docs = np.concatenate(docs_l)
-        pos = np.concatenate(pos_l)
-        tcode = np.concatenate(tcode_l)
-        live = self._live_mask(docs, blocks, [p.size for p in pos_l])
-        if live is not None:
-            docs, pos, tcode = docs[live], pos[live], tcode[live]
-        doc_ids, ords = np.unique(docs, return_inverse=True)
-        if within_classes is not None:
-            cls = xxh64_long_np(doc_ids) % np.int64(self.nb_max)
-            m = np.isin(cls, np.asarray(within_classes, dtype=np.int64))[ords]
-            ords, pos, tcode = ords[m], pos[m], tcode[m]
-        if pos.size == 0:
-            return []
-        # every slop >= the largest position admits the same tuples, so
-        # the clamp keeps M (and the keys) small without changing answers
-        slop = min(max(int(slop), 0), int(pos.max()) + 1)
-        M = int(pos.max()) + len(slots) + slop + 1
-        key = ords.astype(np.int64) * M + pos
-        # positions are unique per doc (one token each), so every slot's
-        # key set is duplicate-free
-        ks = [np.sort(key[np.isin(tcode, [code[t] for t in slot])])
-              for slot in slots]
-        first = prev = ks[0]
-        weight = None
-        for i in range(1, len(ks)):
-            lo = np.searchsorted(ks[i], prev, side="right")
-            cnt = np.searchsorted(ks[i], first + i + slop, side="right") - lo
-            if i == len(ks) - 1:
-                weight = cnt  # last slot: count, don't expand
-                break
-            n = int(cnt.sum())
-            if n > cap:
-                return None
-            row = np.repeat(np.arange(cnt.size), cnt)
-            prev = ks[i][np.arange(n) + (lo - np.cumsum(cnt) + cnt)[row]]
-            first = first[row]
-        tf = np.bincount(first // M, weights=weight,
-                         minlength=doc_ids.size).astype(np.int64)
-        hit = np.flatnonzero(tf)
-        return list(zip(doc_ids[hit].tolist(), tf[hit].tolist()))
+        out = _phrase_kernel(blocks, slots, slop, self._tomb(),
+                             self._cuts(within_classes),
+                             4 * self.driver_max_postings)
+        return None if out is None else list(zip(out[0].tolist(),
+                                                 out[1].tolist()))
+
+    def _cuts(self, classes: "list[int] | None"
+              ) -> "list[tuple[int, list[int]]]":
+        """Kernel class cut for global salt ``classes`` (mod nb_max)."""
+        return [] if classes is None else [(self.nb_max, list(classes))]
 
     def phrase_search(self, phrase: str, field: str | None = None,
                       slop: int = 0,
@@ -1157,11 +1182,11 @@ class SegmentIndex:
         (p_{n-1} >= p_i + (n-1-i)), so the per-step pruning never changes
         results.
 
-        Every slop takes the driver fast path when the index is local
-        (base-only or with delta generations) and the candidate postings
-        fit under driver_max_postings (the slot kernel, _phrase_local);
-        URI stores, bigger candidate sets and the kernel's volume guards
-        run the distributed decode + adjacency-join chain.
+        Every slop runs one slot kernel (_phrase_kernel): on the driver
+        when the index is local (base-only or with delta generations) and
+        the candidate postings fit under driver_max_postings; URI
+        stores, bigger candidate sets and the driver's volume guards run
+        it per salt-class group on the distributed executor.
 
         ``within_classes`` restricts the result to docs whose salt class
         is in the list (intersected with the AND-feasibility lattice;
@@ -1196,9 +1221,10 @@ class SegmentIndex:
         scorer's feasibility lattice), cut further to ``within_classes``.
         On a fast-path eligible (local) index whose candidate postings —
         base and delta generations together — fit under
-        driver_max_postings the driver slot kernel (_phrase_local)
-        answers, tombstones applied; every other case, and every guard
-        the kernel trips, runs the distributed decode + join chain."""
+        driver_max_postings the slot kernel (_phrase_kernel) runs on the
+        driver (_phrase_local); every other case, and every guard the
+        driver trips, runs the same kernel on the distributed executor
+        (_grouped), without the guards."""
         empty = self._empty_df("doc_id long, phrase_tf long")
         lattice = self._class_lattice(meta, avgdl)
         present = np.ones(self.nb_max, dtype=bool)
@@ -1211,54 +1237,24 @@ class SegmentIndex:
         classes = [int(x) for x in np.flatnonzero(present)]
         if not classes:
             return empty
-        keys = self._keys_for_classes(meta, classes)
-        if (self.driver_max_postings > 0 and self._fast_eligible(None)
-                and self._keys_volume(meta, keys)
-                <= self.driver_max_postings):
-            rows = self._phrase_local(slots, slop, keys, within_classes)
-            if rows is not None:
-                return self._values_df(rows, "doc_id long, phrase_tf long")
-        terms = sorted({t for slot in slots for t in slot})
-        segs = self._filter_keys(self._segments(terms), keys)
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = segs.select("term", "gen", "docs_vb", "tfs_vb", "pos_vb") \
-            .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        if within_classes is not None:
-            # the block-level cut is a SUPERSET when a low-df term's
-            # nb_t < nb_max (one block salt covers several global
-            # classes); this columnar re-derivation makes the cut exact
-            decoded = decoded.filter(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.nb_max))
-                .cast("int").isin([int(c) for c in within_classes]))
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
-        cur = decoded.filter(F.col("term").isin(slots[0])).select(
-            "doc_id", F.col("pos").alias("p0"))
-        for i in range(1, len(slots)):
-            nxt = decoded.filter(F.col("term").isin(slots[i])).select(
-                F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}")
-            )
-            if slop <= 0:
-                pos_cond = F.col(f"p{i}") == F.col("p0") + i
-            else:
-                pos_cond = (F.col(f"p{i}") > F.col(f"p{i - 1}" if i > 1 else "p0")) & (
-                    F.col(f"p{i}") <= F.col("p0") + i + slop
-                )
-            cur = cur.join(
-                nxt,
-                (F.col("doc_id") == F.col(f"d{i}")) & pos_cond,
-            ).drop(f"d{i}")
-        return (
-            cur.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("phrase_tf"))
-            .orderBy("doc_id")
-        )
+        if self.driver_max_postings > 0 and self._fast_eligible(None):
+            keys = self._keys_for_classes(meta, classes)
+            if self._keys_volume(meta, keys) <= self.driver_max_postings:
+                rows = self._phrase_local(slots, slop, keys, within_classes)
+                if rows is not None:
+                    return self._values_df(rows,
+                                           "doc_id long, phrase_tf long")
+        tomb, cuts = self._tomb(), self._cuts(within_classes)
+
+        def kernel(blocks, group_cut):
+            docs, tf = _phrase_kernel(blocks, slots, slop, tomb,
+                                      cuts + [group_cut], None)
+            return pd.DataFrame({"doc_id": docs, "phrase_tf": tf})
+
+        return self._grouped(
+            sorted({t for slot in slots for t in slot}), meta, classes,
+            ["term", "gen", "docs_vb", "tfs_vb", "pos_vb"], kernel,
+            "doc_id long, phrase_tf long").orderBy("doc_id")
 
     def _prefix_expansions_local(self, last: str,
                                  max_expansions: int) -> list[str]:
@@ -1304,12 +1300,13 @@ class SegmentIndex:
         and delta segments that reads only the term column (the
         term-sorted segment layout row-group-prunes the range) — a
         pyarrow read on a fast-path eligible (local) index, otherwise a
-        Spark job with a bounded collect of <= max_expansions terms. The positional decode then reads only
-        the exact terms + expansions, restricted to salt classes where
-        every exact term AND at least one expansion is present — the
-        feasibility lattice phrase_search uses, with an OR corner for the
-        expansion slot — and takes the same driver fast path or
-        distributed chain as phrase_search at slop 0."""
+        Spark job with a bounded collect of <= max_expansions terms. The
+        positional decode then reads only the exact terms + expansions,
+        restricted to salt classes where every exact term AND at least
+        one expansion is present — the feasibility lattice phrase_search
+        uses, with an OR corner for the expansion slot — and runs the
+        same slot kernel on the same executor choice as phrase_search at
+        slop 0."""
         if not self.positions:
             raise ValueError(
                 "phrase_prefix_search requires a positional index — "
@@ -1385,25 +1382,11 @@ class SegmentIndex:
             # salt classes of the <= k hits, derived driver-side with the
             # parity-pinned hash (was a distinct+collect Spark job over a
             # local relation — pure round-trip overhead)
-            from ..functions.hashing import xxh64_long
             classes = sorted(
                 {pmod(xxh64_long(d), self.nb_max) for d in hit_ids})
             segs = self._filter_keys(segs,
                                      self._keys_for_classes(meta, classes))
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            segs
-            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb")
-            .coalesce(max(1, par))
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        )
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
+        decoded = self._decoded(segs, positions=True)
         from .highlight import highlight_topk
 
         return highlight_topk(
@@ -1486,13 +1469,6 @@ class SegmentIndex:
         if need > len(found):
             return empty
         decoded = self._decode(sorted(found), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         return (
             decoded.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("nterms"))
@@ -1560,9 +1536,8 @@ class SegmentIndex:
         # but costs two extra driver round-trips; at nb_max=256 the same
         # window covers <= 20% of classes and the decode cut dominates):
         #   * window_size <= nb_max/4 — MATERIALIZE the window (bounded
-        #     <= window_size rows), derive its classes with one tiny
-        #     local-relation job, and restrict the phrase + doc_len
-        #     decodes to those classes;
+        #     <= window_size rows), derive its classes on the driver, and
+        #     restrict the phrase + doc_len decodes to those classes;
         #   * otherwise — keep the window lazy (no extra jobs) and decode
         #     all AND-feasible classes, the pre-optimization shape.
         use_classes = (int(window_size) <= self.nb_max // 4
@@ -1571,9 +1546,8 @@ class SegmentIndex:
             win_rows = self.search(query, k=window_size, mode=mode).collect()
             if not win_rows:
                 return self._empty_df("doc_id long, score double")
-            win = self.spark.createDataFrame(
-                [(int(r["doc_id"]), float(r["score"])) for r in win_rows],
-                "doc_id long, score double")
+            win = self._rows_df(
+                [(int(r["doc_id"]), float(r["score"])) for r in win_rows])
         else:
             win = self.search(query, k=window_size, mode=mode)
         prefix, n_docs, avgdl = self._resolve_field(None)
@@ -1599,12 +1573,10 @@ class SegmentIndex:
         idf_sum = sum(self._idf(term_df[t], n_docs) for t in pterms)
         win_classes = None
         if use_classes:
-            win_classes = [
-                int(r["c"]) for r in
-                win.select(F.pmod(F.xxhash64(F.col("doc_id")),
-                                  F.lit(self.nb_max)).cast("int").alias("c"))
-                .distinct().collect()
-            ]
+            # salt classes of the materialized window, derived driver-side
+            # with the parity-pinned hash (as highlight does)
+            win_classes = sorted({pmod(xxh64_long(int(r["doc_id"])),
+                                       self.nb_max) for r in win_rows})
         win_ids = F.broadcast(win.select("doc_id"))
         ph = (self.phrase_search(phrase, slop=slop,
                                  within_classes=win_classes)
@@ -1617,12 +1589,6 @@ class SegmentIndex:
             [pterms[0]],
             None if win_classes is None else self._keys_for_classes(
                 meta[meta["term"] == pterms[0]], win_classes))
-        tomb = self._tombstones()
-        if tomb is not None:
-            dl = (dl.join(F.broadcast(tomb), "doc_id", "left")
-                  .filter(F.col("tgen").isNull()
-                          | (F.col("tgen") <= F.col("gen")))
-                  .drop("tgen"))
         dl = (dl.join(win_ids, "doc_id", "left_semi")
               .groupBy("doc_id").agg(F.max("doc_len").alias("doc_len")))
         ptf = F.col("phrase_tf").cast("double")
@@ -1662,8 +1628,8 @@ class SegmentIndex:
         terms = sorted(found)
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
         required = len(terms) if is_and else None
-        return self._score(self._decode(terms, None), term_df, required,
-                           None, n_docs=n_docs, avgdl=avgdl)
+        return self._bm25(meta, terms, term_df, required, None, None,
+                          n_docs, avgdl)
 
     def count(self, query: str, mode: str = "AND",
               field: str | None = None,
@@ -1698,11 +1664,13 @@ class SegmentIndex:
         # replaced/deleted ids out); true deletions = tombstoned ids with
         # no live row — tombstones that merely superseded an upsert have
         # a live replacement
-        tomb = self._tombstones()
-        if tomb is None:
+        if not self.generations:
             del_stats = self.spark.range(1).select(
                 F.lit(0).cast("long").alias("docs_deleted"))
         else:
+            tomb = self.spark.read.parquet(*(
+                pjoin(self.path, "delta", f"gen={g}", "tombstones")
+                for g in self.generations)).select("doc_id").distinct()
             del_stats = (
                 tomb.join(docs.select("doc_id").distinct(),
                           "doc_id", "left_anti")
@@ -2084,14 +2052,6 @@ class SegmentIndex:
         if not mapping:
             return empty
         decoded = self._decode(sorted({t for t, _ in mapping}), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         mdf = self.spark.createDataFrame(mapping, "term string, gid int")
         gstats = self.spark.createDataFrame(
             [(g, d) for g, d in gid_df.items()], "gid int, df long")
@@ -2180,13 +2140,6 @@ class SegmentIndex:
             rows, "term string, base string, widf double, favgdl double"
         )
         decoded = self._decode(found, None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         cand = decoded.join(F.broadcast(params), "term")
         tf = F.col("tf").cast("double")
         dl = F.col("doc_len").cast("double")
@@ -2224,20 +2177,8 @@ class SegmentIndex:
         stripped of the field prefix, ordered for determinism."""
         fprefix, _, _ = self._resolve_field(field)
         full = fprefix + prefix
-        segs = self._all_segments().filter(F.col("term").startswith(full))
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            segs.select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb")
-            .coalesce(max(1, par))
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-        )
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
+        decoded = self._decoded(
+            self._all_segments().filter(F.col("term").startswith(full)))
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2271,14 +2212,6 @@ class SegmentIndex:
         found = sorted(set(meta["term"].unique()))
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
         decoded = self._decode(found, None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         stats = self.spark.createDataFrame(
             [(t, d) for t, d in term_df.items()], "term string, df long")
         return explain_score(
@@ -2291,33 +2224,14 @@ class SegmentIndex:
         """ES field collapsing over the persisted store: best hit per
         ``docs[group_col]``, groups ranked by that best score. Like
         facets, collapse aggregates over the ENTIRE match set, so
-        block-max pruning is inapplicable by definition — one exhaustive
-        decode of the query terms feeds the full scored set (k=None),
-        then the shared struct-argmax kernel
+        block-max pruning is inapplicable by definition — the full scored
+        set (_scored_match_set) feeds the shared argmax kernel
         (search_ext.collapse_scored). The ``docs`` join carries only the
         (doc_id, group_col) columns of matching docs."""
         from .search_ext import collapse_scored
 
-        prefix, n_docs, avgdl = self._resolve_field(None)
-        terms = sorted(
-            {prefix + t for t in analyze_query_py(query, self.analyzer)}
-        )
-        empty = self._empty_df("group_key string, doc_id long, score double")
-        if not terms or n_docs == 0:
-            return empty
-        meta = self._meta(terms)
-        if meta.empty:
-            return empty
-        found = set(meta["term"].unique())
-        is_and = mode.upper() == "AND"
-        if is_and and found != set(terms):
-            return empty
-        terms = sorted(found)
-        term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        full = self._score(self._decode(terms, None), term_df,
-                           len(terms) if is_and else None, None,
-                           n_docs=n_docs, avgdl=avgdl)
-        return collapse_scored(full, docs, group_col, k, doc_col=doc_col)
+        return collapse_scored(self._scored_match_set(query, mode), docs,
+                               group_col, k, doc_col=doc_col)
 
     def suggest(self, prefix: str, k: int = 10,
                 field: str | None = None) -> DataFrame:
@@ -2384,13 +2298,6 @@ class SegmentIndex:
         if not exp:
             return self._empty_df("term string, doc_id long, tf long")
         decoded = self._decode(sorted(fprefix + t for t in exp), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2437,13 +2344,6 @@ class SegmentIndex:
         if not exp:
             return self._empty_df("term string, doc_id long, tf long")
         decoded = self._decode(sorted(fprefix + t for t in exp), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2474,8 +2374,8 @@ class SegmentIndex:
         if meta.empty:
             return empty
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        return self._score(self._decode(sorted(term_df), None), term_df,
-                           None, k, n_docs=n_docs, avgdl=avgdl)
+        return self._as_df(self._bm25(meta, sorted(term_df), term_df, None,
+                                      k, None, n_docs, avgdl))
 
     def prefix_search(self, prefix: str, k: int = 10,
                       field: str | None = None) -> DataFrame:
@@ -2495,12 +2395,6 @@ class SegmentIndex:
         ``field`` scopes the lookup on a fielded index."""
         prefix, _, _ = self._resolve_field(field)
         decoded = self._decode([prefix + term], None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-            )
         return decoded.select("doc_id", "tf").orderBy("doc_id")
 
     @staticmethod
@@ -2535,22 +2429,23 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
         avgdl = Σ(n_docsᵢ·avgdlᵢ)/Σ n_docsᵢ (i.e. total tokens over total
         docs), per-term df = Σ shard metadata counts — so idf and length
         norms are identical to the union index's;
-      * each shard contributes its tombstone-filtered decoded postings;
-        AND-mode shards missing a query term are skipped outright (a doc
-        matching ALL terms must find every term in its OWN shard);
-      * ONE global aggregation scores the union — doc_ids are required to
-        be globally unique across shards (the partitioned-build contract:
-        disjoint id ranges per shard, recorded in each manifest's lineage).
+      * each shard runs the BM25 executor (SegmentIndex._bm25) with
+        those global stats and returns its exact top-k; AND-mode shards
+        missing a query term are skipped outright (a doc matching ALL
+        terms must find every term in its OWN shard);
+      * ONE global top-k over the shards' top-k — exact because doc_ids
+        are required to be globally unique across shards (the
+        partitioned-build contract: disjoint id ranges per shard,
+        recorded in each manifest's lineage), so every doc's score is
+        complete in its own shard.
 
     Scale shape: per-shard work is the same metadata-pruned, column-pruned
-    decode a single-shard query does; the union is a no-shuffle
-    concatenation; the (term → global df) join is a broadcast of |q| rows;
-    top-k is TakeOrderedAndProject. Shards are never copied or merged to
-    serve a query.
+    decode + score a single-shard query does (on the driver or
+    distributed, each shard by its own admission); the union is at most
+    k rows per shard. Shards are never copied or merged to serve a query.
     """
     if not indexes:
         raise ValueError("search_sharded needs at least one index")
-    spark = indexes[0].spark
     an = indexes[0].analyzer
     if any(ix.analyzer != an for ix in indexes):
         raise ValueError(
@@ -2587,7 +2482,8 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
             msm = None  # plain OR
         elif msm > len(term_df):
             return empty  # fewer matchable terms than required
-    decoded = None
+    required = len(terms) if is_and else None
+    parts = []
     for ix, meta in zip(indexes, metas):
         if meta.empty:
             continue
@@ -2596,41 +2492,12 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
             continue  # this shard cannot host an all-terms doc
         if msm is not None and len(shard_terms) < msm:
             continue  # a doc's terms live in ITS shard: < msm present
-        d = ix._decode(shard_terms, None)
-        tomb = ix._tombstones()
-        if tomb is not None:
-            d = (d.join(F.broadcast(tomb), "doc_id", "left")
-                 .filter(F.col("tgen").isNull()
-                         | (F.col("tgen") <= F.col("gen")))
-                 .drop("tgen"))
-        decoded = d if decoded is None else decoded.unionByName(d)
-    if decoded is None:
+        parts.append(ix._as_df(ix._bm25(
+            meta, shard_terms, term_df, required, k, None, n_docs, avgdl,
+            msm, None, filter_ids)))
+    if not parts:
         return empty
-    if filter_ids is not None:
-        # ES bool.filter across the alias: one semi-join on the UNIONED
-        # decode (same pre-aggregation placement as the single-index
-        # path; scores untouched)
-        decoded = decoded.join(filter_ids.select("doc_id"),
-                               "doc_id", "left_semi")
-    stats = spark.createDataFrame(
-        [(t, d) for t, d in term_df.items()], "term string, df long")
-    partial = bm25_partial_col(
-        F.col("tf").cast("double"), F.col("doc_len").cast("double"),
-        F.col("df").cast("double"), n_docs, avgdl)
-    scored = (
-        decoded.join(F.broadcast(stats), "term")
-        .select("doc_id", partial.alias("partial"))
-        .groupBy("doc_id")
-        .agg(F.sum("partial").alias("raw"),
-             F.count(F.lit(1)).alias("nterms"))
-    )
-    if is_and:
-        scored = scored.filter(F.col("nterms") == len(terms))
-    elif msm is not None:
-        scored = scored.filter(F.col("nterms") >= msm)
-    return (
-        scored.select("doc_id",
-                      F.round(F.col("raw"), ROUND_DECIMALS).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    cur = parts[0]
+    for p in parts[1:]:
+        cur = cur.unionByName(p)
+    return cur.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

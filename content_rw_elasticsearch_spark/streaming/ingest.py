@@ -32,6 +32,7 @@ amortized merge, run off-peak.
 
 from __future__ import annotations
 
+import functools
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -297,32 +298,26 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     dirs are orphans rebuilt on retry); a crash after it leaves stale
     old dirs/manifests that readers ignore (min_gen) and the next fold's
     GC removes."""
-    from ..operators.wand import _DECODED_SCHEMA, SegmentIndex, _decode_blocks
+    from ..operators.wand import (
+        _DECODED_SCHEMA,
+        _POS_SCHEMA,
+        SegmentIndex,
+        _decode_blocks,
+    )
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
     idx = SegmentIndex.load(spark, index_dir)
     with_pos = bool(m.get("positions", False))
     fielded = bool(m.get("field_stats"))
-    tomb = idx._tombstones()
-
-    def drop_superseded(df):
-        if tomb is None:
-            return df
-        return (
-            df.join(F.broadcast(tomb), "doc_id", "left")
-            .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-            .drop("tgen")
-        )
+    # the decoders drop superseded versions (the tombstone rule)
+    tomb = idx._tomb()
 
     if with_pos:
-        from ..operators.wand import _POS_SCHEMA, _decode_blocks_positions
-
-        pos_rows = drop_superseded(
-            idx._segments(None)
-            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb")
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        )
+        pos_rows = idx._segments(None) \
+            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb") \
+            .mapInPandas(functools.partial(_decode_blocks, tomb=tomb,
+                                           positions=True), _POS_SCHEMA)
         # re-aggregate per-(term, doc) positions; exact doc_len from the
         # live docs table. A fielded docs table is keyed (doc, field) —
         # the composite term's prefix recovers the field for the join, so
@@ -344,12 +339,11 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
                 .select("doc_id", "doc_len")
             post = regrouped.join(doc_lens, "doc_id")
     else:
-        decoded = drop_superseded(
-            idx._segments(None)
-            .select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb")
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-        )
-        post = decoded.select("term", "doc_id", "tf", "doc_len")
+        post = idx._segments(None) \
+            .select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb") \
+            .mapInPandas(functools.partial(_decode_blocks, tomb=tomb),
+                         _DECODED_SCHEMA) \
+            .select("term", "doc_id", "tf", "doc_len")
     old_seg_dir = m.get("seg_dir", "segments")
     old_stats = m.get("stats_file", "stats.parquet")
     version = int(m.get("base_version", 0)) + 1
@@ -482,12 +476,14 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     A crash between 2 and 3 is healed by the next call (it re-commits
     the pointer without re-merging). Time travel into the merged range
     raises on load, exactly like pre-fold generations."""
+    import pandas as pd
+
     from ..operators.segments import SEGMENT_READ_SCHEMA
     from ..operators.wand import (
         _DECODED_SCHEMA,
         _POS_SCHEMA,
         _decode_blocks,
-        _decode_blocks_positions,
+        _read_tombstones,
     )
 
     fs = storage.fs_for(index_dir, spark)
@@ -524,40 +520,29 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     t0 = time.time()
     with_pos = bool(m.get("positions", False))
 
-    seg_parts, tomb_parts = [], []
-    for g in gens:
-        seg_parts.append(
-            spark.read.schema(SEGMENT_READ_SCHEMA)
-            .parquet(pjoin(index_dir, "delta", f"gen={g}", "segments"))
-            .withColumn("gen", F.lit(g))
-        )
-        tomb_parts.append(
-            spark.read.parquet(pjoin(index_dir, "delta", f"gen={g}",
-                                     "tombstones"))
-            .select("doc_id", F.lit(g).alias("tgen"))
-        )
+    seg_parts = [
+        spark.read.schema(SEGMENT_READ_SCHEMA)
+        .parquet(pjoin(index_dir, "delta", f"gen={g}", "segments"))
+        .withColumn("gen", F.lit(g))
+        for g in gens
+    ]
     segs = seg_parts[0]
     for p in seg_parts[1:]:
         segs = segs.unionByName(p)
-    tomb_all = tomb_parts[0]
-    for p in tomb_parts[1:]:
-        tomb_all = tomb_all.unionByName(p)
-    tomb = tomb_all.groupBy("doc_id").agg(F.max("tgen").alias("tgen"))
+    # the decoders drop in-set superseded versions (the tombstone rule)
+    tomb = _read_tombstones(spark, index_dir, gens)
 
-    decoded = segs.select(
+    live = segs.select(
         "term", "gen", "docs_vb", "tfs_vb", "dlens_vb"
-    ).mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-    live = (
-        decoded.join(F.broadcast(tomb), "doc_id", "left")
-        .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-        .drop("tgen")
-    )
+    ).mapInPandas(functools.partial(_decode_blocks, tomb=tomb),
+                  _DECODED_SCHEMA)
     if with_pos:
         # positions rejoin their (term, gen, doc): after the in-set
         # supersede each (term, doc) survives in exactly one generation
         pos = segs.select(
             "term", "gen", "docs_vb", "tfs_vb", "pos_vb"
-        ).mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
+        ).mapInPandas(functools.partial(_decode_blocks, tomb=tomb,
+                                        positions=True), _POS_SCHEMA)
         pos_grp = pos.groupBy("term", "gen", "doc_id").agg(
             F.sort_array(F.collect_list("pos")).alias("positions")
         )
@@ -583,7 +568,8 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     )
     merged_segs.coalesce(2).sortWithinPartitions("bucket", "term", "salt") \
         .write.partitionBy("bucket").parquet(pjoin(merged_dir, "segments"))
-    tomb.select("doc_id").write.parquet(pjoin(merged_dir, "tombstones"))
+    spark.createDataFrame(pd.DataFrame({"doc_id": tomb[0]}), "doc_id long") \
+        .write.parquet(pjoin(merged_dir, "tombstones"))
 
     posting_count = int(
         spark.read.schema(SEGMENT_READ_SCHEMA)

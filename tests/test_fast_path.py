@@ -523,3 +523,69 @@ def test_delta_delete_only_generation(monkeypatch, spark, tmp_path):
     assert fast == slow and fast and victim not in dict(fast)
     monkeypatch.setattr(idx, "driver_max_postings", 2_000_000)
     assert victim not in dict(_run(idx, "return self", "OR", 1000))
+
+
+# -- the distributed executor ---------------------------------------------
+# With driver_max_postings = 0 every query runs the same numpy kernels as
+# the fast path, once per salt-class group in one groupBy(grp).
+# applyInPandas. Job bounds are the distributed-arm counts before the
+# kernels moved there (the Spark-expression scorer, the phrase self-join
+# and the tombstone joins); each call runs once to warm up first.
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_distributed_phrase_plan_is_one_grouped_kernel(monkeypatch,
+                                                       hashed_pos_idx):
+    monkeypatch.setattr(hashed_pos_idx, "driver_max_postings", 0)
+    plan = _executed(hashed_pos_idx.phrase_search("return self", slop=1))
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "Join" not in plan, plan
+
+
+@pytest.mark.parametrize("kind,bound", [
+    ("exhaustive", 4), ("pruned", 9), ("phrase0", 7), ("phrase1", 7),
+    ("phrase_prefix", 9),
+])
+def test_distributed_arm_job_counts(monkeypatch, spark, seg_idx,
+                                    hashed_pos_idx, kind, bound):
+    monkeypatch.setattr(seg_idx, "driver_max_postings", 0)
+    monkeypatch.setattr(hashed_pos_idx, "driver_max_postings", 0)
+    if kind == "pruned":
+        monkeypatch.setattr(seg_idx, "prune_min_postings", 0)
+    call = {
+        "exhaustive": lambda: seg_idx.search(
+            "hash join", k=10, prune=False).collect(),
+        "pruned": lambda: seg_idx.search("hash join", k=10).collect(),
+        "phrase0": lambda: hashed_pos_idx.phrase_search(
+            "return self").collect(),
+        "phrase1": lambda: hashed_pos_idx.phrase_search(
+            "return self", slop=1).collect(),
+        "phrase_prefix": lambda: hashed_pos_idx.phrase_prefix_search(
+            "import re").collect(),
+    }[kind]
+    call()
+    assert _jobs_launched(spark, call) <= bound
+
+
+# Spark jobs of the materialized-window rescore below when its classes
+# came from a Spark distinct+collect
+RESCORE_WINDOW_JOBS = 8
+
+
+def test_rescore_window_classes_cost_no_job(monkeypatch, spark,
+                                            hashed_pos_idx):
+    """The materialized-window rescore derives the window's salt classes
+    on the driver: one job fewer than the Spark distinct+collect it
+    replaced, and the same answer as the lazy-window branch."""
+    idx = hashed_pos_idx
+
+    def call():
+        return [(r["doc_id"], r["score"]) for r in idx.rescore(
+            "return self", "return self", k=5, window_size=8).collect()]
+
+    lazy = call()
+    monkeypatch.setattr(idx, "pos_classes_min_docs", 0)
+    assert call() == lazy and lazy
+    assert _jobs_launched(spark, call) <= RESCORE_WINDOW_JOBS - 1

@@ -137,8 +137,18 @@ def test_msm_bounds(spark, corpus, seg):
     idx.unpersist()
 
 
-@pytest.mark.parametrize("msm", [2, 3])
-def test_msm_segment_paths_identical(spark, corpus, seg, msm):
+# Both executors against brute force: as routed (this corpus fits the
+# driver executor) and with driver_max_postings = 0 (the same kernels per
+# salt-class group on the distributed executor).
+
+MSM = [2, 3]
+SLOPS = [
+    (0, "alpha beta"), (1, "alpha beta"), (2, "alpha beta"),
+    (1, "alpha beta gamma"), (3, "alpha gamma"),
+]
+
+
+def _check_msm_paths(seg, msm):
     q = "alpha beta delta"
     want = _brute_msm(DOCS, q.split(), msm)
     for prune in (False, True):
@@ -148,15 +158,33 @@ def test_msm_segment_paths_identical(spark, corpus, seg, msm):
         assert got == want, f"prune={prune}"
 
 
-@pytest.mark.parametrize("slop,phrase", [
-    (0, "alpha beta"), (1, "alpha beta"), (2, "alpha beta"),
-    (1, "alpha beta gamma"), (3, "alpha gamma"),
-])
-def test_slop_vs_brute(seg, slop, phrase):
+def _check_slop(seg, slop, phrase):
     got = [(r["doc_id"], r["phrase_tf"]) for r in
            seg.phrase_search(phrase, slop=slop).collect()]
     want = _brute_slop(DOCS, phrase.split(), slop)
     assert got == want
+
+
+@pytest.mark.parametrize("msm", MSM)
+def test_msm_segment_paths_identical(spark, corpus, seg, msm):
+    _check_msm_paths(seg, msm)
+
+
+@pytest.mark.parametrize("msm", MSM)
+def test_msm_segment_paths_identical_distributed(monkeypatch, seg, msm):
+    monkeypatch.setattr(seg, "driver_max_postings", 0)
+    _check_msm_paths(seg, msm)
+
+
+@pytest.mark.parametrize("slop,phrase", SLOPS)
+def test_slop_vs_brute(seg, slop, phrase):
+    _check_slop(seg, slop, phrase)
+
+
+@pytest.mark.parametrize("slop,phrase", SLOPS)
+def test_slop_vs_brute_distributed(monkeypatch, seg, slop, phrase):
+    monkeypatch.setattr(seg, "driver_max_postings", 0)
+    _check_slop(seg, slop, phrase)
 
 
 def test_slop_semantics_pinned(seg):

@@ -144,3 +144,35 @@ def test_rollover_ingest_and_alias_search(spark, tmp_path):
     got = {r["doc_id"] for r in
            search_sharded(shards, "hash join", k=10, mode="AND").collect()}
     assert 6 not in got and got
+
+
+def _tree(root):
+    import os
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(
+            os.path.join(d, f)))
+        for d, _dirs, fs in os.walk(root) for f in fs)
+
+
+def test_snapshot_never_writes_to_the_source(spark, tmp_path):
+    """A docs/ missing from the source is a docs-table swap in flight
+    (apply_upserts moved it to docs.bak and is about to rename docs.tmp
+    in). Snapshot is a read path: it must not 'heal' the swap by renaming
+    docs.bak back — that would break the ingest's own rename — so the
+    source tree stays byte-for-byte as it was, and a swap that never
+    completes fails the snapshot instead of shipping a copy without a
+    docs table."""
+    import os
+
+    src = str(tmp_path / "idx3")
+    corpus = spark.createDataFrame(DOCS, "doc_id long, text string")
+    build_segments(corpus, src, text_col="text", doc_col="doc_id",
+                   n_buckets=1, target_block=8, nb_max=2)
+    os.rename(os.path.join(src, "docs"), os.path.join(src, "docs.bak"))
+    before = _tree(src)
+    snap = str(tmp_path / "snap3")
+    with pytest.raises(RuntimeError, match="kept changing"):
+        snapshot_index(src, snap)
+    assert _tree(src) == before
+    assert not os.path.exists(os.path.join(src, "docs"))
+    assert not os.path.exists(snap) or not os.listdir(snap)

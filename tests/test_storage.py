@@ -58,6 +58,42 @@ def test_build_and_query_at_file_uri(spark):
     shutil.rmtree("/tmp/spark_graft_uri_build", ignore_errors=True)
 
 
+def test_uri_store_delta_generations_match_local(spark, tmp_path):
+    """Tombstones on a URI store come from one collected Spark read (no
+    pyarrow path there) and feed the same decoders and kernels: after a
+    batch that deletes, updates and inserts, searches and phrases at a
+    file:// root answer exactly like the same index at a plain path
+    (which the driver executor serves)."""
+    from content_rw_elasticsearch_spark.streaming.ingest import apply_upserts
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma_{i % 7} delta{i % 3} alpha") for i in range(80)],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(0, None, True), (1, "alpha beta", False), (2, None, True),
+         (500, "alpha delta0 beta alpha", False)],
+        "doc_id long, text string, deleted boolean")
+    answers = []
+    for out in (f"file://{tmp_path}/uri", str(tmp_path / "local")):
+        build_segments(docs, out, text_col="text", doc_col="doc_id",
+                       n_buckets=2, target_block=16, nb_max=8,
+                       with_positions=True)
+        apply_upserts(spark, out, batch, text_col="text",
+                      deleted_col="deleted")
+        idx = SegmentIndex.load(spark, out)
+        assert idx.generations == [1]
+        answers.append((
+            [tuple(r) for r in idx.search("alpha delta0", k=50).collect()],
+            [tuple(r) for r in idx.search("beta", k=100).collect()],
+            [tuple(r) for r in idx.phrase_search("alpha beta").collect()],
+        ))
+    uri, local = answers
+    assert uri == local
+    hits = {d for d, _ in uri[1]}
+    assert 0 not in hits and 2 not in hits and {1, 500} <= hits
+
+
 def test_swap_dir_crash_recovery(tmp_path):
     fs = storage.LocalFS()
     dst = str(tmp_path / "live")
