@@ -4,16 +4,18 @@ NOT the driver's bench — bench.py stays frozen. This harness builds the
 same segment index once, then times each reference query repeatedly on
 BOTH query arms: as routed (small queries run the kernels on the driver)
 and with ``driver_max_postings = 0`` (the same kernels per salt-class
-group on the distributed executor), each exhaustive and forced-pruned.
-A positional build adds slop-0 / slop-1 ``phrase_search`` and
-``phrase_prefix_search`` on both arms. Every timing reports min, median
+group on the distributed executor), each exhaustive and forced-pruned,
+plus ``search_synonyms`` and ``segment_bool_topk`` (the same BM25 kernel
+through its score and match groups). A positional build adds slop-0 /
+slop-1 ``phrase_search`` and ``phrase_prefix_search`` on both arms.
+Every timing reports min, median
 and the Spark jobs one call launches (job group + status tracker), so a
 change that trades a job for driver work shows up either way.
 
 Usage:  SPARK_GRAFT_SF_DIR=<dir holding documents.parquet> \\
         SPARK_GRAFT_CPUS=4 python bench_extra.py [reps]
 Prints one JSON line: per query {arm: {exhaustive, pruned}, meta}, per
-phrase kind {arm: timing}; arm is "routed" or "distributed".
+scorer and phrase kind {arm: timing}; arm is "routed" or "distributed".
 """
 
 from __future__ import annotations
@@ -29,12 +31,19 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from content_rw_elasticsearch_spark.operators.boolquery import segment_bool_topk  # noqa: E402
 from content_rw_elasticsearch_spark.operators.segments import build_segments  # noqa: E402
 from content_rw_elasticsearch_spark.operators.wand import SegmentIndex  # noqa: E402
 from content_rw_elasticsearch_spark.queries import REFERENCE_QUERIES  # noqa: E402
 from content_rw_elasticsearch_spark.session import get_spark  # noqa: E402
 
 ARMS = {"routed": None, "distributed": 0}  # driver_max_postings override
+SCORERS = {
+    "synonyms": lambda ix: ix.search_synonyms(
+        "hash scan", {"hash": ["join", "table"], "scan": ["vector"]}, k=10),
+    "bool": lambda ix: segment_bool_topk(
+        ix, must="hash", should="join row scan", must_not="dup", k=10),
+}
 PHRASES = {
     "phrase0": lambda ix: ix.phrase_search("hash join"),
     "phrase1": lambda ix: ix.phrase_search("hash join", slop=1),
@@ -134,6 +143,12 @@ def main():
         sc.setJobDescription(None)
         qres[name] = row
     res["queries"] = qres
+    res["scorers"] = {
+        kind: {arm: timed(spark, on_arm(idx, arm,
+                                        lambda: call(idx).collect()), reps)
+               for arm in ARMS}
+        for kind, call in SCORERS.items()
+    }
 
     pos_dir = "/tmp/bx_pos_idx"
     shutil.rmtree(pos_dir, ignore_errors=True)

@@ -45,9 +45,10 @@ def idf_col(df_col, n_docs: int):
 def bm25_partial_col(tf_col, dl_col, df_col, n_docs: int, avgdl: float,
                      k1: float = BM25_K1, b: float = BM25_B):
     """Per-(term, doc) partial score — a pure columnar expression
-    (whole-stage codegen) for the DataFrame scorers (logical plans, bool,
-    synonym, fielded, explain). SegmentIndex search / phrase scoring runs
-    the numpy kernel of operators/wand.py instead."""
+    (whole-stage codegen) for the DataFrame scorers over postings frames
+    (bm25_topk, bool_topk, FieldedIndex, explain). Every SegmentIndex
+    scorer — search, synonyms, multi-field, bool, match sets — runs the
+    numpy kernel of operators/wand.py instead."""
     denom = tf_col + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl_col / F.lit(avgdl))
     return idf_col(df_col, n_docs) * (tf_col * F.lit(k1 + 1.0)) / denom
 

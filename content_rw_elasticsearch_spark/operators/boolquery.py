@@ -13,11 +13,15 @@ corners of this operator. Semantics follow ES:
     (must_not never contributes; should terms present add score even
     when must alone decides the match).
 
-Scale shape: one decode of must ∪ should ∪ must_not postings (the same
-metadata-pruned segment scan a plain query uses), one per-doc aggregate
-with conditional counts — no extra shuffle versus a plain OR query, and
-the must_not exclusion is a CASE-count inside the same aggregate, not a
-second anti-join pass.
+Scale shape: bool_topk (the InMemoryIndex-shaped reference) is one
+per-doc aggregate with conditional counts over the postings frame.
+segment_bool_topk runs the segment store's one BM25 kernel
+(wand._bm25_kernel) over must ∪ should ∪ must_not blocks, each term its
+own match group: on the driver for a local index under
+driver_max_postings (no Spark job), else once per salt-class group in
+one groupBy(grp).applyInPandas — the executor SegmentIndex.search uses.
+The must_not exclusion is a per-doc group count inside the kernel, not
+an anti-join pass.
 """
 
 from __future__ import annotations
@@ -99,14 +103,14 @@ def segment_bool_topk(
     min_should_match: int | None = None,
     field: str | None = None,
 ) -> DataFrame:
-    """Bool query over the persisted segment store (a SegmentIndex):
-    one tombstone-aware decode of all three clause sets' postings, then
-    the same conditional-count aggregate as bool_topk. df is
-    Lucene-faithful approximate (superseded postings counted until
-    fold), matching SegmentIndex.search. On a fielded index ``field``
-    scopes every clause to that field's composite keys and norms."""
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    """Bool query over the persisted segment store (a SegmentIndex): each
+    present term is its own match group — must, should or not — scored
+    by the index's BM25 kernel on the executor search() uses (driver or
+    salt-class groups), exhaustively. df is Lucene-faithful approximate
+    (superseded postings counted until fold), matching
+    SegmentIndex.search. On a fielded index ``field`` scopes every clause
+    to that field's composite keys and norms."""
+    empty = index._empty_df("doc_id long, score double")
     fprefix, n_docs, avgdl = index._resolve_field(field)
     if n_docs == 0:
         return empty
@@ -124,36 +128,10 @@ def segment_bool_topk(
         return empty  # a required term is absent from the corpus
     if msm > len(set(s) & found):
         return empty
-    live = sorted(found)
-    if not live:
+    if not found:
         return empty
     term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-    decoded = index._decode(live, None)
-    stats = spark.createDataFrame(
-        [(t, d) for t, d in term_df.items()], "term string, df long")
-    cand = decoded.join(F.broadcast(stats), "term")
-    partial = bm25_partial_col(
-        F.col("tf").cast("double"), F.col("doc_len").cast("double"),
-        F.col("df").cast("double"), n_docs, avgdl,
-    )
-    scoring = F.when(F.col("term").isin(m + s), partial).otherwise(F.lit(0.0))
-    in_set = lambda ts: F.when(  # noqa: E731
-        F.col("term").isin(ts), F.lit(1)).otherwise(F.lit(0))
-    scored = (
-        cand.select("doc_id", scoring.alias("partial"),
-                    in_set(m).alias("im"), in_set(s).alias("is_"),
-                    in_set(n).alias("in_"))
-        .groupBy("doc_id")
-        .agg(F.sum("partial").alias("raw"),
-             F.sum("im").alias("n_must"),
-             F.sum("is_").alias("n_should"),
-             F.sum("in_").alias("n_not"))
-        .filter((F.col("n_must") == len(m)) & (F.col("n_not") == 0)
-                & (F.col("n_should") >= msm))
-    )
-    return (
-        scored.select("doc_id",
-                      F.round(F.col("raw"), ROUND_DECIMALS).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    clauses = {t: c for c, ts in (("must", m), ("should", s), ("not", n))
+               for t in ts if t in found}
+    groups = index._term_groups(clauses, term_df, n_docs, avgdl)
+    return index._as_df(index._bm25(meta, groups, msm, k))

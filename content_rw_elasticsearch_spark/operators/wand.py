@@ -49,6 +49,10 @@ postings for every term meet in exactly one group — and runs the same
 kernel once per group in one groupBy(grp).applyInPandas. URI stores,
 filter context and over-bound queries take it. The tombstone arrays are
 read once per query (_read_tombstones) and shipped with the kernel.
+Every BM25 scorer over the segment store — search, search_synonyms,
+search_multi, boolquery.segment_bool_topk and the match sets behind
+match_ids / count — runs _bm25_kernel, its score and match groups
+covering their score shapes.
 """
 
 from __future__ import annotations
@@ -75,7 +79,7 @@ from ..functions.analyzer import analyze_query_py, analyzer_column
 from ..functions.hashing import pmod, xxh64_long, xxh64_long_np, xxh64_string
 from ..storage import join as pjoin
 from . import codec
-from .bm25 import ROUND_DECIMALS, bm25_partial_col
+from .bm25 import ROUND_DECIMALS
 from .fields import FIELD_SEP
 from .segments import SEGMENT_READ_SCHEMA
 
@@ -260,35 +264,77 @@ def _decode_postings(blocks: pd.DataFrame, tomb
     return (*out, uniq)
 
 
-def _bm25_kernel(blocks: pd.DataFrame, tomb, idf: "dict[str, float]",
-                 avgdl: float, required: "int | None", msm: "int | None",
+_CLAUSES = ("must", "should", "not")
+
+
+def _bm25_kernel(blocks: pd.DataFrame, tomb, groups: list, msm: int,
                  cuts: "list[tuple[int, list[int]]]"
                  ) -> "tuple[np.ndarray, np.ndarray]":
     """BM25 over segment rows → (doc_ids, raw scores) of the docs that
-    survive the class ``cuts`` (_class_mask) and the term-count filters:
-    exactly ``required`` distinct terms (AND) or at least ``msm``."""
+    survive the class ``cuts`` (_class_mask) and the match rule.
+
+    ``groups`` lists match groups (clause, score groups), clause one of
+    _CLAUSES; a score group (weight, avgdl, terms) sums its terms' tfs
+    before saturation and scores weight·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl))
+    (a "not" group scores nothing). A doc is kept iff it has postings in
+    every must group, in no not group and in at least ``msm`` should
+    groups. Plain AND/OR/msm search is the corner where every term is its
+    own score group and match group (_term_groups).
+
+    Postings are laid out in (match group, score group, term) order — a
+    term listed in two groups (overlapping synonym sets) is counted in
+    both — so the stable doc sort leaves each doc's run of a group
+    contiguous: one reduceat folds tf per (doc, score group), another the
+    partials per doc, in the same order on both executors."""
     doc_ids, tfs, dls, tidx, uniq = _decode_postings(blocks, tomb)
     m = _class_mask(doc_ids, cuts)
     if m is not None:
         doc_ids, tfs, dls, tidx = doc_ids[m], tfs[m], dls[m], tidx[m]
-    if doc_ids.size == 0:
-        return doc_ids, np.empty(0, np.float64)
-    w = np.array([idf[t] for t in uniq])
-    tf = tfs.astype(np.float64)
-    dl = dls.astype(np.float64)
-    denom = tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / avgdl)
-    partial = w[tidx] * (tf * (BM25_K1 + 1.0)) / denom
-    order = np.argsort(doc_ids, kind="stable")
-    ds = doc_ids[order]
-    starts = np.concatenate(([0], np.flatnonzero(ds[1:] != ds[:-1]) + 1))
-    raw = np.add.reduceat(partial[order], starts)
-    nterms = np.diff(np.concatenate((starts, [ds.size])))
-    docs_u = ds[starts]
-    keep = np.ones(docs_u.size, dtype=bool)
-    if required is not None:
-        keep &= nterms == required
-    if msm is not None:
-        keep &= nterms >= msm
+    # blocks decode in term order, so term i's postings are one slice
+    bounds = np.searchsorted(tidx, np.arange(uniq.size + 1))
+    code = {t: i for i, t in enumerate(uniq)}
+    w, avg, sg_mg, mg_clause, parts, part_sg = [], [], [], [], [], []
+    for mg, (clause, sgs) in enumerate(groups):
+        mg_clause.append(_CLAUSES.index(clause))
+        for weight, avgdl, terms in sgs:
+            for t in terms:
+                if t in code:
+                    parts.append(np.arange(bounds[code[t]],
+                                           bounds[code[t] + 1]))
+                    part_sg.append(len(w))
+            w.append(0.0 if clause == "not" else weight)
+            avg.append(avgdl)
+            sg_mg.append(mg)
+    idx = np.concatenate(parts) if parts else np.empty(0, np.int64)
+    if idx.size == 0:
+        return idx, np.empty(0, np.float64)
+    sg = np.repeat(np.array(part_sg, np.int64), [p.size for p in parts])
+    order = np.argsort(doc_ids[idx], kind="stable")
+    idx, sg = idx[order], sg[order]
+    ds = doc_ids[idx]
+    first = np.concatenate(([True], ds[1:] != ds[:-1]))
+    runs = np.flatnonzero(first | np.concatenate(([True], sg[1:] != sg[:-1])))
+    tf = tfs[idx]
+    if runs.size < idx.size:  # a score group of several terms
+        tf, idx, sg, first = (np.add.reduceat(tf, runs), idx[runs],
+                              sg[runs], first[runs])
+    tf = tf.astype(np.float64)
+    dl = dls[idx].astype(np.float64)
+    denom = tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / np.array(avg)[sg])
+    partial = np.array(w)[sg] * (tf * (BM25_K1 + 1.0)) / denom
+    starts = np.flatnonzero(first)
+    raw = np.add.reduceat(partial, starts)
+    docs_u = doc_ids[idx[starts]]
+    # a (doc, match group) run starts at a new doc or a new match group;
+    # count each doc's runs per clause
+    mg = np.array(sg_mg)[sg]
+    hit = first | np.concatenate(([True], mg[1:] != mg[:-1]))
+    nc = len(_CLAUSES)
+    n = np.bincount((np.cumsum(first) - 1)[hit] * nc
+                    + np.array(mg_clause)[mg[hit]],
+                    minlength=nc * docs_u.size).reshape(-1, nc)
+    keep = ((n[:, 0] == mg_clause.count(0)) & (n[:, 2] == 0)
+            & (n[:, 1] >= msm))
     return docs_u[keep], raw[keep]
 
 
@@ -639,9 +685,10 @@ class SegmentIndex:
         index the scan is a direct pyarrow read of the base and every
         loaded delta generation (row-group pruned by the term-sorted
         layout, no Spark job — the same file set, filters and gen column
-        the Spark plan reads); URI stores keep the Spark path.
-        Equivalence is pinned by tests/test_fast_path.py."""
-        if self._local_seg_dirs() is not None and self.driver_max_postings > 0:
+        the Spark plan reads), whichever executor then runs the query;
+        URI stores keep the Spark path. Equivalence is pinned by
+        tests/test_fast_path.py."""
+        if self._local_seg_dirs() is not None:
             return self._meta_local(terms)
         return (
             self._segments(terms)
@@ -908,27 +955,35 @@ class SegmentIndex:
         return rows.groupBy("grp").applyInPandas(
             lambda key, blocks: kernel(blocks, (G, [int(key[0])])), schema)
 
-    def _bm25(self, meta: pd.DataFrame, terms: list[str],
-              term_df: dict[str, int], required: "int | None",
-              k: "int | None", classes: "list[int] | None",
-              n_docs: int, avgdl: float, msm: "int | None" = None,
+    def _term_groups(self, clauses: "dict[str, str]",
+                     term_df: dict[str, int], n_docs: int, avgdl: float
+                     ) -> list:
+        """_bm25_kernel groups of a term query: each term (in sorted
+        order) its own match group, with clause ``clauses[term]``, and
+        its own score group weighted by its idf."""
+        return [(c, [(self._idf(term_df[t], n_docs), avgdl, [t])])
+                for t, c in sorted(clauses.items())]
+
+    def _bm25(self, meta: pd.DataFrame, groups: list, msm: int,
+              k: "int | None", classes: "list[int] | None" = None,
               after: "tuple[float, int] | None" = None,
               filter_ids: DataFrame | None = None
               ) -> "list[tuple[int, float]] | DataFrame":
-        """Rounded BM25 (doc_id, score) of ``terms`` — top-k in (score
-        desc, doc_id asc) order, or the full match set with k=None —
-        restricted to the global salt ``classes`` when given, after the
-        ``after`` cursor, within ``filter_ids``. One kernel
-        (_bm25_kernel), two executors: a top-k over candidate postings
-        (base and delta) under driver_max_postings on a local store runs
-        it on the driver and returns [(doc_id, score)]; everything else
-        runs it per salt-class group (_grouped) and returns a DataFrame.
-        There each group cuts its own exact rounded top-k (every doc
-        lives in one group, so the global top-k of the groups' top-k is
-        exact); with filter_ids or k=None the groups return raw scores,
-        semi-joined to the filter before Spark rounds and cuts (a filter
-        only removes docs)."""
-        idf = {t: self._idf(term_df[t], n_docs) for t in terms}
+        """Rounded BM25 (doc_id, score) of the match ``groups`` (see
+        _bm25_kernel) — top-k in (score desc, doc_id asc) order, or the
+        full match set with k=None — restricted to the global salt
+        ``classes`` when given, after the ``after`` cursor, within
+        ``filter_ids``. One kernel (_bm25_kernel), two executors: a top-k
+        over candidate postings (base and delta) under
+        driver_max_postings on a local store runs it on the driver and
+        returns [(doc_id, score)]; everything else runs it per salt-class
+        group (_grouped) and returns a DataFrame. There each group cuts
+        its own exact rounded top-k (every doc lives in one group, so the
+        global top-k of the groups' top-k is exact); with filter_ids or
+        k=None the groups return raw scores, semi-joined to the filter
+        before Spark rounds and cuts (a filter only removes docs)."""
+        terms = sorted({t for _c, sgs in groups for *_w, ts in sgs
+                        for t in ts})
         cuts, tomb = self._cuts(classes), self._tomb()
         if (k is not None and self.driver_max_postings > 0
                 and self._fast_eligible(filter_ids)):
@@ -936,13 +991,13 @@ class SegmentIndex:
                     else self._keys_for_classes(meta, classes))
             if self._keys_volume(meta, keys) <= self.driver_max_postings:
                 return _topk_rounded(*_bm25_kernel(
-                    self._blocks_local(terms, keys), tomb, idf, avgdl,
-                    required, msm, cuts), k, after)
+                    self._blocks_local(terms, keys), tomb, groups, msm,
+                    cuts), k, after)
         cut = k is not None and filter_ids is None
 
         def kernel(blocks, group_cut):
-            docs_u, raw = _bm25_kernel(blocks, tomb, idf, avgdl, required,
-                                       msm, cuts + [group_cut])
+            docs_u, raw = _bm25_kernel(blocks, tomb, groups, msm,
+                                       cuts + [group_cut])
             if cut:
                 top = _topk_rounded(docs_u, raw, k, after)
                 docs_u = np.array([d for d, _ in top], dtype=np.int64)
@@ -1035,12 +1090,14 @@ class SegmentIndex:
                 return empty  # fewer matchable terms than required
         # Lucene-faithful df: includes superseded postings until fold
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        required = len(terms) if is_and else None
+        groups = self._term_groups(
+            dict.fromkeys(terms, "must" if is_and else "should"), term_df,
+            n_docs, avgdl)
         total = sum(term_df.values())
 
         def bm25(classes):
-            return self._bm25(meta, terms, term_df, required, k, classes,
-                              n_docs, avgdl, msm, after, filter_ids)
+            return self._bm25(meta, groups, 0 if is_and else msm or 1, k,
+                              classes, after, filter_ids)
 
         if not prune or total <= self.prune_min_postings:
             return self._as_df(bm25(None))
@@ -1224,7 +1281,10 @@ class SegmentIndex:
         driver_max_postings the slot kernel (_phrase_kernel) runs on the
         driver (_phrase_local); every other case, and every guard the
         driver trips, runs the same kernel on the distributed executor
-        (_grouped), without the guards."""
+        (_grouped), without the guards. Its groups' doc-ordered outputs
+        are merged by one single-partition sort — every phrase match
+        passes through one task, which saves the range-sampling job a
+        global orderBy costs."""
         empty = self._empty_df("doc_id long, phrase_tf long")
         lattice = self._class_lattice(meta, avgdl)
         present = np.ones(self.nb_max, dtype=bool)
@@ -1254,7 +1314,8 @@ class SegmentIndex:
         return self._grouped(
             sorted({t for slot in slots for t in slot}), meta, classes,
             ["term", "gen", "docs_vb", "tfs_vb", "pos_vb"], kernel,
-            "doc_id long, phrase_tf long").orderBy("doc_id")
+            "doc_id long, phrase_tf long"
+        ).repartition(1).sortWithinPartitions("doc_id")
 
     def _prefix_expansions_local(self, last: str,
                                  max_expansions: int) -> list[str]:
@@ -1299,7 +1360,7 @@ class SegmentIndex:
         Cost shape: the expansion is a term-dictionary scan of the base
         and delta segments that reads only the term column (the
         term-sorted segment layout row-group-prunes the range) — a
-        pyarrow read on a fast-path eligible (local) index, otherwise a
+        pyarrow read on a local index (on either executor), otherwise a
         Spark job with a bounded collect of <= max_expansions terms. The
         positional decode then reads only the exact terms + expansions,
         restricted to salt classes where every exact term AND at least
@@ -1319,7 +1380,7 @@ class SegmentIndex:
             return empty
         exact = [prefix + t for t in toks[:-1]]
         last = prefix + toks[-1]
-        if self.driver_max_postings > 0 and self._fast_eligible(None):
+        if self._local_seg_dirs() is not None:
             expansions = self._prefix_expansions_local(last, max_expansions)
         else:
             expansions = [
@@ -1447,34 +1508,10 @@ class SegmentIndex:
                   field: str | None = None,
                   min_should_match: int | None = None) -> DataFrame:
         """The FULL match set (doc_id only, no top-k cut) — what facet
-        aggregation runs over. Exhaustive decode of the query terms'
-        postings (block-max pruning is inapplicable: every match is
-        needed, not just the best k), tombstone-aware, with the same
-        AND/OR/msm predicate as search()."""
-        prefix, n_docs, _ = self._resolve_field(field)
-        terms = sorted(
-            {prefix + t for t in analyze_query_py(query, self.analyzer)}
-        )
-        empty = self._empty_df("doc_id long")
-        if not terms or n_docs == 0:
-            return empty
-        meta = self._meta(terms)
-        if meta.empty:
-            return empty
-        found = set(meta["term"].unique())
-        is_and = mode.upper() == "AND"
-        if is_and and found != set(terms):
-            return empty
-        need = len(found) if is_and else max(1, int(min_should_match or 1))
-        if need > len(found):
-            return empty
-        decoded = self._decode(sorted(found), None)
-        return (
-            decoded.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("nterms"))
-            .filter(F.col("nterms") >= need)
-            .select("doc_id")
-        )
+        aggregation runs over: the doc ids of _scored_match_set, with the
+        same AND/OR/msm predicate as search()."""
+        return self._scored_match_set(query, mode, field,
+                                      min_should_match).select("doc_id")
 
     def search_facets(self, query: str, docs: DataFrame,
                       facet_cols: list[str], mode: str = "AND",
@@ -1605,12 +1642,14 @@ class SegmentIndex:
         return rank(combined)
 
     def _scored_match_set(self, query: str, mode: str = "AND",
-                          field: str | None = None) -> DataFrame:
+                          field: str | None = None,
+                          min_should_match: int | None = None
+                          ) -> DataFrame:
         """Full rounded (doc_id, score) BM25 match set — no top-k cut and
         NO block-max pruning, because every consumer (function_score,
-        boosting, dis_max) applies a per-document transform that voids
-        the per-class score upper bounds. Exhaustive decode, same
-        tombstone/df semantics as search()."""
+        boosting, dis_max, match_ids) applies a per-document transform or
+        needs every match, which voids the per-class score upper bounds.
+        Exhaustive decode, same tombstone/df/msm semantics as search()."""
         prefix, n_docs, avgdl = self._resolve_field(field)
         terms = sorted(
             {prefix + t for t in analyze_query_py(query, self.analyzer)}
@@ -1625,11 +1664,14 @@ class SegmentIndex:
         is_and = mode.upper() == "AND"
         if is_and and found != set(terms):
             return empty
-        terms = sorted(found)
+        msm = 0 if is_and else max(1, int(min_should_match or 1))
+        if msm > len(found):
+            return empty  # fewer matchable terms than required
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        required = len(terms) if is_and else None
-        return self._bm25(meta, terms, term_df, required, None, None,
-                          n_docs, avgdl)
+        groups = self._term_groups(
+            dict.fromkeys(found, "must" if is_and else "should"), term_df,
+            n_docs, avgdl)
+        return self._bm25(meta, groups, msm, None)
 
     def count(self, query: str, mode: str = "AND",
               field: str | None = None,
@@ -1804,7 +1846,6 @@ class SegmentIndex:
         tb = float(tie_breaker)
         empty = self._empty_df("doc_id long, score double")
         sets = [self._scored_match_set(q, "OR", field) for q in queries]
-        sets = [s for s in sets if s is not None]
         if not sets:
             return empty
         cur = sets[0]
@@ -2011,15 +2052,15 @@ class SegmentIndex:
         (by any member), not every member; a set with no member in the
         corpus makes an AND query empty and is skipped under OR.
 
-        Plan shape: decode of exactly the member terms' postings, a
-        broadcast (term → set) mapping join, a (doc_id, set) partial-
-        aggregable sum (the synonym fold), a broadcast per-set df join,
-        then the same doc-level aggregation every query pays. The extra
-        exchange vs plain search is the (doc_id, set) groupBy — bounded
-        by the decoded posting count, never corpus-sized."""
+        Plan shape: each set is one match group holding one score group
+        of its present members (_bm25_kernel sums their tfs before
+        saturation), so the query runs the BM25 executor search() uses —
+        on the driver for a local index under driver_max_postings, else
+        per salt-class group — over exactly the member terms' blocks.
+        Exhaustive: no block-max pruning."""
         prefix, n_docs, avgdl = self._resolve_field(field)
         base = analyze_query_py(query, self.analyzer)
-        groups: list[set[str]] = []
+        sets: list[set[str]] = []
         seen: set[str] = set()
         for t in base:
             if t in seen:
@@ -2028,57 +2069,29 @@ class SegmentIndex:
             members = {t}
             for s in synonyms.get(t, []):
                 members.update(analyze_query_py(s, self.analyzer))
-            groups.append({prefix + m for m in members})
+            sets.append({prefix + m for m in members})
         empty = self._empty_df("doc_id long, score double")
-        if not groups or n_docs == 0:
+        if not sets or n_docs == 0:
             return empty
-        meta = self._meta(sorted(set().union(*groups)))
+        meta = self._meta(sorted(set().union(*sets)))
         if meta.empty:
             return empty
         df_by_term = {t: int(g["count"].sum())
                       for t, g in meta.groupby("term")}
         is_and = mode.upper() == "AND"
-        mapping: list[tuple[str, int]] = []
-        gid_df: dict[int, int] = {}
-        for g in groups:
-            present = sorted(g & set(df_by_term))
+        groups = []
+        for members in sets:
+            present = sorted(members & set(df_by_term))
             if not present:
                 if is_and:
                     return empty  # a whole set absent => no AND match
                 continue
-            gid = len(gid_df)
-            mapping.extend((t, gid) for t in present)
-            gid_df[gid] = max(df_by_term[t] for t in present)
-        if not mapping:
+            idf = self._idf(max(df_by_term[t] for t in present), n_docs)
+            groups.append(("must" if is_and else "should",
+                           [(idf, avgdl, present)]))
+        if not groups:
             return empty
-        decoded = self._decode(sorted({t for t, _ in mapping}), None)
-        mdf = self.spark.createDataFrame(mapping, "term string, gid int")
-        gstats = self.spark.createDataFrame(
-            [(g, d) for g, d in gid_df.items()], "gid int, df long")
-        grouped = (
-            decoded.join(F.broadcast(mdf), "term")
-            .groupBy("doc_id", "gid")
-            .agg(F.sum("tf").alias("tf"), F.max("doc_len").alias("doc_len"))
-        )
-        partial = bm25_partial_col(
-            F.col("tf").cast("double"), F.col("doc_len").cast("double"),
-            F.col("df").cast("double"), n_docs, avgdl)
-        scored = (
-            grouped.join(F.broadcast(gstats), "gid")
-            .select("doc_id", partial.alias("partial"))
-            .groupBy("doc_id")
-            .agg(F.sum("partial").alias("raw"),
-                 F.count(F.lit(1)).alias("ngroups"))
-        )
-        if is_and:
-            scored = scored.filter(F.col("ngroups") == len(gid_df))
-        return (
-            scored.select("doc_id",
-                          F.round(F.col("raw"), ROUND_DECIMALS)
-                          .alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._as_df(self._bm25(meta, groups, 0 if is_and else 1, k))
 
     def search_multi(self, query: str, weights: dict[str, float],
                      k: int = 10, mode: str = "AND") -> DataFrame:
@@ -2092,12 +2105,12 @@ class SegmentIndex:
         at least one queried field (ES most_fields + operator=and);
         "OR" keeps any doc with any (field, term) hit.
 
-        One scan serves all fields: the composite ``field\\x1fterm`` keys
-        of every (field, term) pair go through the same metadata-pruned
-        decode as a single-field query, and the per-field idf·boost is
-        precomputed driver-side into a |fields|·|terms|-row broadcast —
-        scoring stays 100% columnar. Fields whose delta field_stats say
-        n_docs == 0 (fully deleted) contribute nothing."""
+        Plan shape: each base term is one match group whose score groups
+        are its composite ``field\x1fterm`` keys, weighted boost·idf over
+        the field's docCount and saturated with the field's avgdl; the
+        query runs the BM25 executor search() uses (_bm25), exhaustive.
+        Fields whose delta field_stats say n_docs == 0 (fully deleted)
+        contribute nothing."""
         if not self.field_stats:
             raise ValueError(
                 "search_multi requires an index built with "
@@ -2123,44 +2136,20 @@ class SegmentIndex:
         meta = self._meta(comp)
         if meta.empty:
             return empty
-        found = sorted(meta["term"].unique())
         is_and = mode.upper() == "AND"
-        matched_base = {c.split(FIELD_SEP, 1)[1] for c in found}
-        if is_and and matched_base != set(base_terms):
-            return empty  # a required term is absent from every field
         # Lucene-faithful df per composite key (superseded postings count
         # until fold, same as search()); idf uses the FIELD's docCount
-        term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        rows = []
-        for c in found:
+        by_base: dict[str, list] = {}
+        for c, g in meta.groupby("term"):
             f, t = c.split(FIELD_SEP, 1)
             w, n_f, avgdl_f = fparams[f]
-            rows.append((c, t, w * self._idf(term_df[c], n_f), avgdl_f))
-        params = self.spark.createDataFrame(
-            rows, "term string, base string, widf double, favgdl double"
-        )
-        decoded = self._decode(found, None)
-        cand = decoded.join(F.broadcast(params), "term")
-        tf = F.col("tf").cast("double")
-        dl = F.col("doc_len").cast("double")
-        partial = (
-            F.col("widf") * tf * (BM25_K1 + 1.0)
-            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.col("favgdl")))
-        )
-        scored = (
-            cand.select("doc_id", "base", partial.alias("partial"))
-            .groupBy("doc_id")
-            .agg(F.sum("partial").alias("raw"),
-                 F.countDistinct("base").alias("nbase"))
-        )
-        if is_and:
-            scored = scored.filter(F.col("nbase") == len(base_terms))
-        return (
-            scored.select(
-                "doc_id", F.round(F.col("raw"), ROUND_DECIMALS).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+            by_base.setdefault(t, []).append(
+                (w * self._idf(int(g["count"].sum()), n_f), avgdl_f, [c]))
+        if is_and and set(by_base) != set(base_terms):
+            return empty  # a required term is absent from every field
+        groups = [("must" if is_and else "should", by_base[t])
+                  for t in sorted(by_base)]
+        return self._as_df(self._bm25(meta, groups, 0 if is_and else 1, k))
 
     def prefix_postings(self, prefix: str,
                         field: str | None = None) -> DataFrame:
@@ -2374,8 +2363,9 @@ class SegmentIndex:
         if meta.empty:
             return empty
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
-        return self._as_df(self._bm25(meta, sorted(term_df), term_df, None,
-                                      k, None, n_docs, avgdl))
+        groups = self._term_groups(dict.fromkeys(term_df, "should"),
+                                   term_df, n_docs, avgdl)
+        return self._as_df(self._bm25(meta, groups, 1, k))
 
     def prefix_search(self, prefix: str, k: int = 10,
                       field: str | None = None) -> DataFrame:
@@ -2482,7 +2472,6 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
             msm = None  # plain OR
         elif msm > len(term_df):
             return empty  # fewer matchable terms than required
-    required = len(terms) if is_and else None
     parts = []
     for ix, meta in zip(indexes, metas):
         if meta.empty:
@@ -2492,9 +2481,12 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
             continue  # this shard cannot host an all-terms doc
         if msm is not None and len(shard_terms) < msm:
             continue  # a doc's terms live in ITS shard: < msm present
+        groups = ix._term_groups(
+            dict.fromkeys(shard_terms, "must" if is_and else "should"),
+            term_df, n_docs, avgdl)
         parts.append(ix._as_df(ix._bm25(
-            meta, shard_terms, term_df, required, k, None, n_docs, avgdl,
-            msm, None, filter_ids)))
+            meta, groups, 0 if is_and else msm or 1, k,
+            filter_ids=filter_ids)))
     if not parts:
         return empty
     cur = parts[0]

@@ -1,10 +1,11 @@
 """Driver fast-path parity (round 6): the bounded pyarrow read + numpy
 scoring path must return EXACTLY what the distributed plan returns, for
 every branch of search() — exhaustive, forced-prune (θ-seed + keep
-decode), AND/OR/msm, search_after cursors, and the empty corner — and
-for the phrase slot kernel behind phrase_search (any slop) and
-phrase_prefix_search, including its volume guards. The distributed twin
-is forced with driver_max_postings = 0."""
+decode), AND/OR/msm, search_after cursors, and the empty corner — for
+the scorers that share its BM25 kernel (synonyms, multi-field, bool,
+match_ids, count), and for the phrase slot kernel behind phrase_search
+(any slop) and phrase_prefix_search, including its volume guards. The
+distributed twin is forced with driver_max_postings = 0."""
 
 from __future__ import annotations
 
@@ -17,6 +18,9 @@ import pytest
 from content_rw_elasticsearch_spark.functions.hashing import (
     xxh64_long,
     xxh64_long_np,
+)
+from content_rw_elasticsearch_spark.operators.boolquery import (
+    segment_bool_topk,
 )
 from content_rw_elasticsearch_spark.operators.segments import build_segments
 from content_rw_elasticsearch_spark.operators.wand import SegmentIndex
@@ -75,6 +79,37 @@ def test_fast_path_matches_distributed(seg_idx, q, mode, k, msm, forced):
     finally:
         seg_idx.driver_max_postings = 2_000_000
     assert fast == slow
+
+
+# The other scorers over the segment store run the same BM25 kernel
+# through its score groups (a synonym set sums its members' tfs) and
+# match groups (must / should / not clauses, msm): top-k ones on either
+# executor, match sets (match_ids, count) on the distributed one.
+SYN = {"hash": ["join", "table"], "scan": ["vector"]}
+SCORERS = {
+    "syn_and": lambda ix: ix.search_synonyms("hash scan", SYN, k=10),
+    "syn_or": lambda ix: ix.search_synonyms("hash scan zzzabsent", SYN,
+                                            k=20, mode="OR"),
+    "bool": lambda ix: segment_bool_topk(
+        ix, must="hash", should="join row scan", must_not="dup", k=10),
+    "bool_msm": lambda ix: segment_bool_topk(
+        ix, should="hash join row scan", min_should_match=2, k=20),
+    "match_ids": lambda ix: ix.match_ids("hash join").orderBy("doc_id"),
+    "match_ids_msm": lambda ix: ix.match_ids(
+        "vector batch scan", mode="OR", min_should_match=2).orderBy("doc_id"),
+    "count": lambda ix: ix.count("vector batch scan", mode="OR"),
+}
+
+
+def _scorer_rows(idx, scorer):
+    return [tuple(r) for r in SCORERS[scorer](idx).collect()]
+
+
+@pytest.mark.parametrize("scorer", sorted(SCORERS))
+def test_scorers_fast_path_matches_distributed(monkeypatch, seg_idx, scorer):
+    fast = _scorer_rows(seg_idx, scorer)
+    monkeypatch.setattr(seg_idx, "driver_max_postings", 0)
+    assert fast == _scorer_rows(seg_idx, scorer) and fast
 
 
 def test_fast_path_search_after_parity(seg_idx):
@@ -427,6 +462,49 @@ def test_delta_fast_path_matches_distributed(monkeypatch, delta_idx, state,
 
 
 @pytest.mark.parametrize("state", DELTA_STATES)
+@pytest.mark.parametrize("scorer", sorted(SCORERS))
+def test_delta_scorers_fast_path_matches_distributed(monkeypatch, delta_idx,
+                                                     state, scorer):
+    idx = delta_idx[state]
+    fast = _scorer_rows(idx, scorer)
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    assert fast == _scorer_rows(idx, scorer) and fast
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
+@pytest.mark.parametrize("dmp", [2_000_000, 0])
+def test_delta_scorer_corners_match_search(monkeypatch, delta_idx, state,
+                                           dmp):
+    """The bool, synonym and match-set corners equal search() on every
+    delta state and executor: must-only is AND, should-only is OR, an
+    empty synonym map is the plain query, must_not removes exactly the
+    docs matching the excluded term, and match_ids / count are the
+    exhaustive search's doc set."""
+    idx = delta_idx[state]
+    monkeypatch.setattr(idx, "driver_max_postings", dmp)
+    top, dropped = delta_idx["hits"]
+
+    def rows(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    and_q = _run(idx, "hash join", "AND", 10)
+    or_q = _run(idx, "hash join window", "OR", 10)
+    assert rows(segment_bool_topk(idx, must="hash join")) == and_q
+    assert rows(segment_bool_topk(idx, should="hash join window")) == or_q
+    assert rows(idx.search_synonyms("hash join", {}, k=10)) == and_q
+    everything = _run(idx, "hash join", "AND", 10_000)
+    with_dup = {r["doc_id"] for r in idx.match_ids("dup").collect()}
+    assert with_dup & {d for d, _ in everything}  # insert 1003 has both
+    assert rows(segment_bool_topk(idx, must="hash join", must_not="dup",
+                                  k=10_000)) == [
+        (d, s) for d, s in everything if d not in with_dup]
+    ids = sorted(r["doc_id"] for r in idx.match_ids("hash join").collect())
+    assert ids == sorted(d for d, _ in everything)
+    assert dropped not in ids and (top in ids) == (state == "as_of_1")
+    assert idx.count("hash join").collect()[0]["count"] == len(ids)
+
+
+@pytest.mark.parametrize("state", DELTA_STATES)
 def test_delta_search_after_parity(monkeypatch, delta_idx, state):
     idx = delta_idx[state]
     p1 = _run(idx, "hash join", "OR", 5)
@@ -494,7 +572,9 @@ def test_delta_fast_path_launches_no_spark_jobs(spark, delta_idx, state):
     for call in (lambda: idx.search("hash join"),
                  lambda: idx.search("vector batch scan", mode="OR"),
                  lambda: idx.phrase_search("hash join"),
-                 lambda: idx.phrase_prefix_search("hash zzqd")):
+                 lambda: idx.phrase_prefix_search("hash zzqd"),
+                 *(lambda s=s: SCORERS[s](idx)
+                   for s in ("syn_and", "syn_or", "bool", "bool_msm"))):
         call().collect()  # warm
         assert _jobs_launched(spark, call) == 0
         assert _jobs_launched(spark, lambda: call().collect()) == 0
@@ -525,12 +605,76 @@ def test_delta_delete_only_generation(monkeypatch, spark, tmp_path):
     assert victim not in dict(_run(idx, "return self", "OR", 1000))
 
 
+MULTI_W = {"title": 2.0, "body": 1.0}
+FRESH = 9_999_999_301  # an insert with both query terms in its title
+
+
+@pytest.fixture(scope="module")
+def fielded_delta_idx(spark, sf_smoke, tmp_path_factory):
+    """A fielded index (title = the first 5 tokens, body = the text)
+    with one apply_upserts generation: the top multi-field "hash join"
+    hit re-written without "join", the second hit deleted, and one
+    insert."""
+    from pyspark.sql import functions as F
+
+    from content_rw_elasticsearch_spark.streaming import ingest
+
+    def fields():
+        return {"title": F.concat_ws(" ", F.slice(
+                    F.split(F.col("text"), " "), 1, 5)),
+                "body": F.col("text")}
+
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    out = str(tmp_path_factory.mktemp("fielded_delta") / "idx")
+    build_segments(docs, out, doc_col="doc_id", analyzer="simple",
+                   n_buckets=4, target_block=64, nb_max=16, fields=fields())
+    hits = [r["doc_id"] for r in SegmentIndex.load(spark, out).search_multi(
+        "hash join", MULTI_W, k=2).collect()]
+    ingest.apply_upserts(spark, out, spark.createDataFrame(
+        [(hits[0], "hash table probe " + "filler " * 20, False),
+         (FRESH, "hash join fresh insert", False),
+         (hits[1], "", True)],
+        "doc_id long, text string, deleted boolean"),
+        "text", "doc_id", "deleted", fields=fields())
+    return SegmentIndex.load(spark, out), hits
+
+
+@pytest.mark.parametrize("mode", ["AND", "OR"])
+def test_fielded_delta_multi_matches_distributed(monkeypatch, spark,
+                                                 fielded_delta_idx, mode):
+    """search_multi over a live delta generation: the routed call runs
+    on the driver (no Spark job), answers like the distributed executor,
+    applies the tombstones, and with one field at weight 1.0 is that
+    field's search() on both executors."""
+    idx, (updated, deleted) = fielded_delta_idx
+    assert idx.generations == [1]
+
+    def multi(weights):
+        return [(r["doc_id"], r["score"]) for r in idx.search_multi(
+            "hash join", weights, k=1000, mode=mode).collect()]
+
+    def fielded(f):
+        return [(r["doc_id"], r["score"]) for r in idx.search(
+            "hash join", field=f, k=1000, mode=mode, prune=False).collect()]
+
+    fast = multi(MULTI_W)
+    assert _jobs_launched(spark, lambda: multi(MULTI_W)) == 0
+    assert FRESH in dict(fast) and deleted not in dict(fast)
+    assert (updated in dict(fast)) == (mode == "OR")
+    for f in ("title", "body"):
+        assert multi({f: 1.0}) == fielded(f)
+    monkeypatch.setattr(idx, "driver_max_postings", 0)
+    assert multi(MULTI_W) == fast
+    for f in ("title", "body"):
+        assert multi({f: 1.0}) == fielded(f)
+
+
 # -- the distributed executor ---------------------------------------------
 # With driver_max_postings = 0 every query runs the same numpy kernels as
 # the fast path, once per salt-class group in one groupBy(grp).
-# applyInPandas. Job bounds are the distributed-arm counts before the
-# kernels moved there (the Spark-expression scorer, the phrase self-join
-# and the tombstone joins); each call runs once to warm up first.
+# applyInPandas; block metadata and prefix expansions of a local index
+# are still pyarrow reads. Job bounds are the counts measured on these
+# fixtures (local[4]); each call runs once to warm up first.
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -545,8 +689,8 @@ def test_distributed_phrase_plan_is_one_grouped_kernel(monkeypatch,
 
 
 @pytest.mark.parametrize("kind,bound", [
-    ("exhaustive", 4), ("pruned", 9), ("phrase0", 7), ("phrase1", 7),
-    ("phrase_prefix", 9),
+    ("exhaustive", 2), ("pruned", 4), ("phrase0", 3), ("phrase1", 3),
+    ("phrase_prefix", 3), ("synonyms", 2), ("bool", 2), ("match_ids", 2),
 ])
 def test_distributed_arm_job_counts(monkeypatch, spark, seg_idx,
                                     hashed_pos_idx, kind, bound):
@@ -564,6 +708,9 @@ def test_distributed_arm_job_counts(monkeypatch, spark, seg_idx,
             "return self", slop=1).collect(),
         "phrase_prefix": lambda: hashed_pos_idx.phrase_prefix_search(
             "import re").collect(),
+        "synonyms": lambda: SCORERS["syn_and"](seg_idx).collect(),
+        "bool": lambda: SCORERS["bool"](seg_idx).collect(),
+        "match_ids": lambda: seg_idx.match_ids("hash join").collect(),
     }[kind]
     call()
     assert _jobs_launched(spark, call) <= bound
