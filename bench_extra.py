@@ -11,11 +11,17 @@ slop-1 ``phrase_search`` and ``phrase_prefix_search`` on both arms.
 Every timing reports min, median
 and the Spark jobs one call launches (job group + status tracker), so a
 change that trades a job for driver work shows up either way.
+The lifecycle section times ``apply_upserts`` (two 2% batches of
+updates, deletes and inserts), ``merge_delta_tier`` and ``fold_deltas``
+on the plain and the positional index, each repetition on a fresh copy
+of the built index; jobs the engine submits from its own driver threads
+carry no job group and are counted too.
 
 Usage:  SPARK_GRAFT_SF_DIR=<dir holding documents.parquet> \\
         SPARK_GRAFT_CPUS=4 python bench_extra.py [reps]
 Prints one JSON line: per query {arm: {exhaustive, pruned}, meta}, per
-scorer and phrase kind {arm: timing}; arm is "routed" or "distributed".
+scorer and phrase kind {arm: timing}; arm is "routed" or "distributed";
+per index kind {lifecycle call: timing}.
 """
 
 from __future__ import annotations
@@ -36,6 +42,7 @@ from content_rw_elasticsearch_spark.operators.segments import build_segments  # 
 from content_rw_elasticsearch_spark.operators.wand import SegmentIndex  # noqa: E402
 from content_rw_elasticsearch_spark.queries import REFERENCE_QUERIES  # noqa: E402
 from content_rw_elasticsearch_spark.session import get_spark  # noqa: E402
+from content_rw_elasticsearch_spark.streaming import ingest  # noqa: E402
 
 ARMS = {"routed": None, "distributed": 0}  # driver_max_postings override
 SCORERS = {
@@ -69,6 +76,55 @@ def timed(spark, call, reps: int) -> dict:
     return {"min": round(min(secs), 4),
             "med": round(statistics.median(secs), 4), "n": len(secs),
             "jobs": jobs}
+
+
+def lifecycle(spark, corpus, index_dir: str, reps: int) -> dict:
+    """min / median seconds and Spark jobs per call of apply_upserts,
+    merge_delta_tier and fold_deltas, each repetition on a fresh copy of
+    ``index_dir``. The first repetition is a warm-up."""
+    from pyspark.sql import functions as F
+
+    tracker = spark.sparkContext.statusTracker()
+    batches = []
+    for k in range(2):  # 2% of the docs each: updates, deletes, inserts
+        part = corpus.filter(F.pmod("doc_id", F.lit(50)) == k)
+        kind = F.pmod(F.xxhash64("doc_id"), F.lit(4))
+        batches.append(part.select(
+            F.when(kind == 3, F.col("doc_id") + F.lit(10**12))
+            .otherwise(F.col("doc_id")).alias("doc_id"),
+            F.concat("text", F.lit(" lifecycle")).alias("text"),
+            (kind == 0).alias("deleted")).toPandas())
+    calls = {
+        "apply_upserts": lambda work, b: ingest.apply_upserts(
+            spark, work, spark.createDataFrame(b), "text", "doc_id",
+            "deleted"),
+        "merge_delta_tier": lambda work, _b: ingest.merge_delta_tier(
+            spark, work),
+        "fold_deltas": lambda work, _b: ingest.fold_deltas(spark, work),
+    }
+    secs: dict = {name: [] for name in calls}
+    jobs: dict = {}
+    work = index_dir + "_lifecycle"
+    for rep in range(reps + 1):
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.copytree(index_dir, work)
+        for name, b in [("apply_upserts", b) for b in batches] + [
+                ("merge_delta_tier", None), ("fold_deltas", None)]:
+            group = f"bx-{next(_GROUPS)}"
+            before = set(tracker.getJobIdsForGroup(None))
+            spark.sparkContext.setJobGroup(group, "bench_extra")
+            t = time.time()
+            calls[name](work, b)
+            dt = time.time() - t
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            if rep:
+                secs[name].append(dt)
+                jobs[name] = len(tracker.getJobIdsForGroup(group)) + len(
+                    set(tracker.getJobIdsForGroup(None)) - before)
+    shutil.rmtree(work, ignore_errors=True)
+    return {name: {"min": round(min(s), 4),
+                   "med": round(statistics.median(s), 4), "n": len(s),
+                   "jobs": jobs[name]} for name, s in secs.items()}
 
 
 def on_arm(ix: SegmentIndex, arm: str, call):
@@ -161,6 +217,8 @@ def main():
                for arm in ARMS}
         for kind, call in PHRASES.items()
     }
+    res["lifecycle"] = {"plain": lifecycle(spark, corpus, out_dir, reps),
+                        "positional": lifecycle(spark, corpus, pos_dir, reps)}
     spark.stop()
     print(json.dumps(res))
 

@@ -240,3 +240,17 @@ def parquet_num_rows(fs: IndexFS, path: str) -> int:
     if isinstance(fs, LocalFS):
         return pq.read_metadata(_local(path)).num_rows
     return pq.read_metadata(pa.BufferReader(fs.read_bytes(path))).num_rows
+
+
+def parquet_sum(spark, path: str, col: str) -> int:
+    """Sum of an integer column over a parquet dir: a pyarrow read on a
+    plain local path (no Spark job), one Spark aggregate on a URI store."""
+    if urlparse(path).scheme == "":
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        return int(pc.sum(pq.read_table(path, columns=[col])
+                          .column(col)).as_py() or 0)
+    from pyspark.sql import functions as F
+
+    return int(spark.read.parquet(path).agg(F.sum(col)).collect()[0][0] or 0)

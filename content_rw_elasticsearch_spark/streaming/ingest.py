@@ -19,44 +19,57 @@ Streaming's foreachBatch — micro-batch upserts with checkpointed offsets,
 the direct analog of the reference's Kafka consumer loop
 (message_handler.go:38-61) with consumer-group offsets.
 
-``fold_deltas`` is the compaction: decode base+deltas, drop superseded
-versions, re-encode into a fresh base with EXACT recomputed statistics
-(df approximation ends here — same lifecycle as a Lucene segment merge).
+``fold_deltas`` is the compaction: re-block base+deltas, drop superseded
+versions, into a fresh base with EXACT recomputed statistics (df
+approximation ends here — same lifecycle as a Lucene segment merge).
+``merge_delta_tier`` squashes the delta generations alone. Both run one
+block-level kernel (segments.compact_segments): segment rows group by
+(term, salt mod m) and the shuffle moves compressed blocks, never
+posting rows.
 
 Scale notes: the docs-table rewrite per batch is the sandbox stand-in for
 an Iceberg ``MERGE INTO`` (same dataflow, engine-managed file swap); delta
 segments are small and term-bucketed like the base, so query-side file
-pruning still applies; fold is a full shuffle by design — it is the
+pruning still applies; fold still rewrites the whole base — it is the
 amortized merge, run off-peak.
 """
 
 from __future__ import annotations
 
-import functools
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import storage
 from ..operators import postings as P
 from ..operators.segments import (
-    SEGMENT_SCHEMA,
+    SEGMENT_READ_SCHEMA,
+    compact_segments,
     encode_segments,
+    live_term_counts,
     plan_block_counts,
+    write_segments,
 )
 from ..storage import join as pjoin
 
 
-def _committed_gens(fs: storage.IndexFS, index_dir: str) -> list[int]:
-    gens = []
+def _committed_manifests(fs: storage.IndexFS, index_dir: str,
+                         m: dict | None = None) -> "dict[int, dict]":
+    """gen → manifest of every committed delta generation, each read once;
+    given the index manifest ``m``, only those a reader loads (past its
+    min_gen and tier_min_gen)."""
+    floor = max(int(m.get("min_gen", 0)),
+                int(m.get("tier_min_gen", 0))) if m else -1
+    out = {}
     for name in fs.listdir(index_dir):
-        if not (name.startswith("delta_manifest_") and name.endswith(".json")):
-            continue
-        dm = storage.read_json(fs, pjoin(index_dir, name))
-        if dm.get("committed"):
-            gens.append(int(dm["gen"]))
-    return sorted(gens)
+        if name.startswith("delta_manifest_") and name.endswith(".json"):
+            dm = storage.read_json(fs, pjoin(index_dir, name))
+            if dm.get("committed") and int(dm["gen"]) > floor:
+                out[int(dm["gen"])] = dm
+    return out
 
 
 def apply_upserts(
@@ -143,7 +156,8 @@ def apply_upserts(
             )
         n_deletes = int(r["ndel"])
         n_upserts = int(r["nup"])
-    gen = max(_committed_gens(fs, index_dir) + [int(m.get("min_gen", 0))]) + 1
+    gen = max(list(_committed_manifests(fs, index_dir))
+              + [int(m.get("min_gen", 0))]) + 1
     t0 = time.time()
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
     fs.rmtree(delta_dir)  # uncommitted partial batch: rebuild
@@ -217,8 +231,6 @@ def apply_upserts(
             .unionByName(new_rows)
         merged.write.mode("overwrite").parquet(docs_tmp)
 
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=3) as pool:
         for f_ in [pool.submit(job_segments), pool.submit(job_tombstones),
                    pool.submit(job_docs)]:
@@ -253,8 +265,6 @@ def apply_upserts(
         return row, field_stats
 
     def job_posting_count():
-        from ..operators.segments import SEGMENT_READ_SCHEMA
-
         spark.sparkContext.setJobDescription("ingest: posting count")
         return int(
             spark.read.schema(SEGMENT_READ_SCHEMA)
@@ -286,129 +296,87 @@ def apply_upserts(
     return manifest
 
 
+def _segment_rows(spark: SparkSession, dirs: "list[tuple[int, str]]"
+                  ) -> DataFrame:
+    """Segment rows of the given (gen, segment dir)s, each tagged with its
+    generation — the explicit schema keeps empty delta dirs (delete-only
+    batches) readable."""
+    rows = None
+    for g, d in dirs:
+        part = spark.read.schema(SEGMENT_READ_SCHEMA).parquet(d) \
+            .withColumn("gen", F.lit(g))
+        rows = part if rows is None else rows.unionByName(part)
+    return rows
+
+
+def _block_plan(spark: SparkSession, index_dir: str, stats_file: str
+                ) -> DataFrame:
+    """(term, nb) of a stats file (explicit schema: no inference job)."""
+    return spark.read.schema("term string, nb int").parquet(
+        pjoin(index_dir, stats_file))
+
+
 def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     """Compact all delta generations into a fresh exact base (the Lucene
-    segment-merge analog): decode, drop superseded versions, re-plan block
-    counts from exact df, re-encode into a NEW versioned base dir, commit
-    it with ONE index.json write, then garbage-collect the old base and
-    the folded deltas.
+    segment-merge analog) at block level: a counts pass (live postings
+    per block, summed per term) gives exact df and the new block plan
+    (stats_v{k}); compact_segments then re-blocks base and delta rows in
+    one grouped kernel — tombstoned postings dropped, positions carried
+    as bytes, doc_len from dlens_vb — into a NEW versioned base dir,
+    committed with ONE index.json write; the old base and the folded
+    deltas are garbage-collected after. Terms with no live posting are
+    dropped. n_docs/avgdl (and per-field norms) are the exact post-batch
+    statistics of the highest folded generation's manifest.
 
     Crash safety: the manifest commit is the only state transition — a
     crash before it leaves the old base + deltas fully live (the v{k}
     dirs are orphans rebuilt on retry); a crash after it leaves stale
     old dirs/manifests that readers ignore (min_gen) and the next fold's
     GC removes."""
-    from ..operators.wand import (
-        _DECODED_SCHEMA,
-        _POS_SCHEMA,
-        SegmentIndex,
-        _decode_blocks,
-    )
+    from ..operators.wand import _read_tombstones
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
-    idx = SegmentIndex.load(spark, index_dir)
-    with_pos = bool(m.get("positions", False))
-    fielded = bool(m.get("field_stats"))
-    # the decoders drop superseded versions (the tombstone rule)
-    tomb = idx._tomb()
-
-    if with_pos:
-        pos_rows = idx._segments(None) \
-            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb") \
-            .mapInPandas(functools.partial(_decode_blocks, tomb=tomb,
-                                           positions=True), _POS_SCHEMA)
-        # re-aggregate per-(term, doc) positions; exact doc_len from the
-        # live docs table. A fielded docs table is keyed (doc, field) —
-        # the composite term's prefix recovers the field for the join, so
-        # each posting gets ITS field's doc_len, not a cross product.
-        regrouped = pos_rows.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-        if fielded:
-            from ..operators.fields import FIELD_SEP
-
-            doc_lens = spark.read.parquet(pjoin(index_dir, "docs")) \
-                .select("doc_id", "field", "doc_len")
-            post = regrouped.withColumn(
-                "field", F.substring_index("term", FIELD_SEP, 1)
-            ).join(doc_lens, ["doc_id", "field"]).drop("field")
-        else:
-            doc_lens = spark.read.parquet(pjoin(index_dir, "docs")) \
-                .select("doc_id", "doc_len")
-            post = regrouped.join(doc_lens, "doc_id")
-    else:
-        post = idx._segments(None) \
-            .select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb") \
-            .mapInPandas(functools.partial(_decode_blocks, tomb=tomb),
-                         _DECODED_SCHEMA) \
-            .select("term", "doc_id", "tf", "doc_len")
+    live = _committed_manifests(fs, index_dir, m)
+    folded_gens = sorted(live)
     old_seg_dir = m.get("seg_dir", "segments")
     old_stats = m.get("stats_file", "stats.parquet")
     version = int(m.get("base_version", 0)) + 1
     new_seg_dir = f"segments_v{version}"
     new_stats = f"stats_v{version}.parquet"
+    rows = _segment_rows(spark, [(0, pjoin(index_dir, old_seg_dir))] + [
+        (g, pjoin(index_dir, "delta", f"gen={g}", "segments"))
+        for g in folded_gens])
+    # the tombstone rule drops superseded versions in both passes
+    tomb = _read_tombstones(spark, index_dir, folded_gens)
 
-    stats = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    planned = plan_block_counts(stats, m["target_block"], m["nb_max"])
+    spark.sparkContext.setJobDescription("fold: counts + block plan")
+    stats = live_term_counts(rows, tomb)
     fs.rmtree(pjoin(index_dir, new_stats))  # orphan of a crashed fold
-    planned.write.mode("overwrite").parquet(pjoin(index_dir, new_stats))
+    plan_block_counts(stats, m["target_block"], m["nb_max"]) \
+        .write.mode("overwrite").parquet(pjoin(index_dir, new_stats))
 
-    salted = post.join(
-        F.broadcast(
-            spark.read.parquet(pjoin(index_dir, new_stats)).select("term", "nb")
-        ), "term"
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.col("nb").cast("long")).cast("int")
-    )
-    new_segs = encode_segments(
-        salted, with_pos, est_postings=int(m.get("posting_count", 0)) or None
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(m["n_buckets"])).cast("int")
-    )
+    spark.sparkContext.setJobDescription("fold: compact segments")
     fs.rmtree(pjoin(index_dir, new_seg_dir))
-    new_segs.coalesce(4).sortWithinPartitions("bucket", "term", "salt") \
-        .write.partitionBy("bucket").mode("overwrite").parquet(pjoin(index_dir, new_seg_dir))
+    write_segments(
+        compact_segments(rows, _block_plan(spark, index_dir, new_stats),
+                         tomb, bool(m.get("positions", False)),
+                         prior=_block_plan(spark, index_dir, old_stats),
+                         est_postings=sum(int(dm.get("posting_count", 0))
+                                          for dm in [m, *live.values()])),
+        m["n_buckets"], pjoin(index_dir, new_seg_dir))
+    spark.sparkContext.setJobDescription(None)
+    pc = storage.parquet_sum(spark, pjoin(index_dir, new_stats), "df")
 
-    # independent scalar aggregates over different sources — overlap
-    # them (same driver-thread back-fill as apply_upserts / stage 1)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def agg_docs():
-        spark.sparkContext.setJobDescription("fold: docs stats")
-        return spark.read.parquet(pjoin(index_dir, "docs")).agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-
-    def agg_pc():
-        spark.sparkContext.setJobDescription("fold: posting count")
-        return int(
-            spark.read.parquet(pjoin(index_dir, new_seg_dir))
-            .agg(F.sum("count")).collect()[0][0] or 0
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_row, f_pc = pool.submit(agg_docs), pool.submit(agg_pc)
-        row, pc = f_row.result(), f_pc.result()
-
-    folded_gens = idx.generations
+    top = live[folded_gens[-1]] if folded_gens else m
     m.update(
-        n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0),
+        n_docs=int(top["n_docs"]), avgdl=float(top["avgdl"]),
         posting_count=pc, folded=True,
         seg_dir=new_seg_dir, stats_file=new_stats, base_version=version,
-        min_gen=max(folded_gens) if folded_gens else int(m.get("min_gen", 0)),
+        min_gen=folded_gens[-1] if folded_gens else int(m.get("min_gen", 0)),
     )
-    if fielded:  # per-field norms recomputed exactly from the live docs
-        fstats = {f: {"n_docs": 0, "avgdl": 0.0} for f in m["field_stats"]}
-        for r in spark.read.parquet(pjoin(index_dir, "docs")) \
-                .groupBy("field").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg("doc_len").alias("avgdl")).collect():
-            fstats[r["field"]] = {
-                "n_docs": int(r["n"]), "avgdl": float(r["avgdl"] or 0.0)
-            }
-        m["field_stats"] = fstats
+    if top.get("field_stats") is not None:
+        m["field_stats"] = top["field_stats"]
     # THE commit: one atomic manifest write flips base + retires deltas
     storage.write_json_atomic(fs, pjoin(index_dir, "index.json"), m)
 
@@ -460,7 +428,9 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     after the merge no generation exists strictly between the base and
     M+1: base postings a merged tombstone used to kill at gen g are
     killed at M+1 the same way, and in-set supersedes were resolved
-    during the merge itself.
+    during the merge itself. The delta blocks are re-blocked by
+    compact_segments with the base block plan (unseen terms one block,
+    the rule apply_upserts wrote them with) and the in-set tombstones.
 
     Crash safety — the commit ladder is correct at every step:
       1. merged segments + tombstones written under delta/gen={M+1}
@@ -476,21 +446,12 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     A crash between 2 and 3 is healed by the next call (it re-commits
     the pointer without re-merging). Time travel into the merged range
     raises on load, exactly like pre-fold generations."""
-    import pandas as pd
-
-    from ..operators.segments import SEGMENT_READ_SCHEMA
-    from ..operators.wand import (
-        _DECODED_SCHEMA,
-        _POS_SCHEMA,
-        _decode_blocks,
-        _read_tombstones,
-    )
+    from ..operators.wand import _read_tombstones
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
-    min_gen = int(m.get("min_gen", 0))
     tier_min = int(m.get("tier_min_gen", 0))
-    eff_min = max(min_gen, tier_min)
+    eff_min = max(int(m.get("min_gen", 0)), tier_min)
 
     def _commit_pointer(new_tier_min: int, retired: list[int]) -> None:
         m["tier_min_gen"] = new_tier_min
@@ -499,99 +460,58 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
             fs.rmtree(pjoin(index_dir, "delta", f"gen={g}"))
             fs.rmtree(pjoin(index_dir, f"delta_manifest_{g:06d}.json"))
 
-    manifests = {
-        int(storage.read_json(fs, pjoin(index_dir, name))["gen"]): name
-        for name in fs.listdir(index_dir)
-        if name.startswith("delta_manifest_") and name.endswith(".json")
-        and storage.read_json(fs, pjoin(index_dir, name)).get("committed")
-    }
+    manifests = _committed_manifests(fs, index_dir, m)
     # heal a crash between steps 2 and 3: a committed merged generation
     # whose merged_from are still live — re-commit the pointer only
-    for g, name in sorted(manifests.items()):
-        dm = storage.read_json(fs, pjoin(index_dir, name))
+    for g, dm in sorted(manifests.items()):
         mf = dm.get("merged_from")
-        if mf and g > eff_min and max(mf) > tier_min:
+        if mf and max(mf) > tier_min:
             _commit_pointer(max(mf), [x for x in mf if x > eff_min])
             return dm
-    gens = sorted(g for g in manifests if g > eff_min)
+    gens = sorted(manifests)
     if len(gens) < 2:
         return None
     new_gen = gens[-1] + 1
     t0 = time.time()
-    with_pos = bool(m.get("positions", False))
-
-    seg_parts = [
-        spark.read.schema(SEGMENT_READ_SCHEMA)
-        .parquet(pjoin(index_dir, "delta", f"gen={g}", "segments"))
-        .withColumn("gen", F.lit(g))
-        for g in gens
-    ]
-    segs = seg_parts[0]
-    for p in seg_parts[1:]:
-        segs = segs.unionByName(p)
-    # the decoders drop in-set superseded versions (the tombstone rule)
+    rows = _segment_rows(spark, [
+        (g, pjoin(index_dir, "delta", f"gen={g}", "segments")) for g in gens])
+    # the kernel drops in-set superseded versions (the tombstone rule)
     tomb = _read_tombstones(spark, index_dir, gens)
-
-    live = segs.select(
-        "term", "gen", "docs_vb", "tfs_vb", "dlens_vb"
-    ).mapInPandas(functools.partial(_decode_blocks, tomb=tomb),
-                  _DECODED_SCHEMA)
-    if with_pos:
-        # positions rejoin their (term, gen, doc): after the in-set
-        # supersede each (term, doc) survives in exactly one generation
-        pos = segs.select(
-            "term", "gen", "docs_vb", "tfs_vb", "pos_vb"
-        ).mapInPandas(functools.partial(_decode_blocks, tomb=tomb,
-                                        positions=True), _POS_SCHEMA)
-        pos_grp = pos.groupBy("term", "gen", "doc_id").agg(
-            F.sort_array(F.collect_list("pos")).alias("positions")
-        )
-        post = live.join(pos_grp, ["term", "gen", "doc_id"]).select(
-            "term", "doc_id", "tf", "positions", "doc_len")
-    else:
-        post = live.select("term", "doc_id", "tf", "doc_len")
-
-    # salt with the base block plan, unseen terms → one block (the same
-    # rule apply_upserts used when these postings were first written)
-    nbs = spark.read.parquet(
-        pjoin(index_dir, m.get("stats_file", "stats.parquet"))
-    ).select("term", "nb")
-    salted = post.join(F.broadcast(nbs), "term", "left").withColumn(
-        "nb", F.coalesce(F.col("nb"), F.lit(1))
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.col("nb").cast("long")).cast("int")
-    )
     merged_dir = pjoin(index_dir, "delta", f"gen={new_gen}")
     fs.rmtree(merged_dir)  # uncommitted orphan of a crashed merge
-    merged_segs = encode_segments(salted, with_pos, partitions=2).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(m["n_buckets"])).cast("int")
-    )
-    merged_segs.coalesce(2).sortWithinPartitions("bucket", "term", "salt") \
-        .write.partitionBy("bucket").parquet(pjoin(merged_dir, "segments"))
-    spark.createDataFrame(pd.DataFrame({"doc_id": tomb[0]}), "doc_id long") \
-        .write.parquet(pjoin(merged_dir, "tombstones"))
 
-    posting_count = int(
-        spark.read.schema(SEGMENT_READ_SCHEMA)
-        .parquet(pjoin(merged_dir, "segments"))
-        .agg(F.sum("count")).collect()[0][0] or 0
-    )
+    def job_segments():
+        spark.sparkContext.setJobDescription("tier merge: compact segments")
+        write_segments(
+            compact_segments(rows, _block_plan(
+                spark, index_dir, m.get("stats_file", "stats.parquet")),
+                tomb, bool(m.get("positions", False)),
+                est_postings=sum(int(manifests[g].get("posting_count", 0))
+                                 for g in gens)),
+            m["n_buckets"], pjoin(merged_dir, "segments"))
+
+    def job_tombstones():
+        spark.sparkContext.setJobDescription("tier merge: tombstones")
+        spark.createDataFrame(pd.DataFrame({"doc_id": tomb[0]}),
+                              "doc_id long") \
+            .write.parquet(pjoin(merged_dir, "tombstones"))
+
+    # independent writes overlap, as in apply_upserts
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f_ in [pool.submit(job_segments), pool.submit(job_tombstones)]:
+            f_.result()
+    posting_count = storage.parquet_sum(
+        spark, pjoin(merged_dir, "segments"), "count")
     # cumulative stats: the merge does not change the live doc set, so
     # the highest merged generation's exact post-batch stats still hold
-    top = storage.read_json(fs, pjoin(index_dir, manifests[gens[-1]]))
+    top = manifests[gens[-1]]
     manifest = {
         "gen": new_gen,
         "snapshot_id": top.get("snapshot_id", ""),
         "n_docs": int(top["n_docs"]),
         "avgdl": float(top["avgdl"]),
-        "n_upserts": sum(
-            int(storage.read_json(
-                fs, pjoin(index_dir, manifests[g])).get("n_upserts", 0))
-            for g in gens),
-        "n_deletes": sum(
-            int(storage.read_json(
-                fs, pjoin(index_dir, manifests[g])).get("n_deletes", 0))
-            for g in gens),
+        "n_upserts": sum(int(manifests[g].get("n_upserts", 0)) for g in gens),
+        "n_deletes": sum(int(manifests[g].get("n_deletes", 0)) for g in gens),
         "posting_count": posting_count,
         "merged_from": gens,
         **({"field_stats": top["field_stats"]}
@@ -618,9 +538,7 @@ def maybe_compact(spark: SparkSession, index_dir: str,
     merge. Returns the merged manifest or None."""
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
-    eff_min = max(int(m.get("min_gen", 0)), int(m.get("tier_min_gen", 0)))
-    live = [g for g in _committed_gens(fs, index_dir) if g > eff_min]
-    if len(live) < max_gens:
+    if len(_committed_manifests(fs, index_dir, m)) < max_gens:
         return None
     return merge_delta_tier(spark, index_dir)
 
