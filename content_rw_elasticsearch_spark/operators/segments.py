@@ -834,27 +834,17 @@ def _compact_rows(batches, tomb, with_positions: bool):
     belong to another one. Positions are never decoded: each posting's
     run in pos_vb restarts its delta at the doc boundary, so the varbyte
     terminators split the bytes per posting and _encode_groups joins
-    them unchanged. A lone row in its group that keeps its nb and loses
-    no posting is emitted as it is (re-encoding would give the same
-    bytes)."""
+    them unchanged."""
     pdfs = [b for b in batches if len(b)]
     if not pdfs:
         return
     pdf = pd.concat(pdfs, ignore_index=True)
-    n = len(pdf)
     row, docs, live = _decode_live(pdf, tomb)
     nb_out = pdf["nb_out"].to_numpy(np.int64)
     codes, uniq = pd.factorize(pdf["term"])
-    key = (codes.astype(np.int64) << 20) | pdf["grp"].to_numpy(np.int64)
-    _, inv, size = np.unique(key, return_inverse=True, return_counts=True)
-    whole = (size[inv] == 1) & (pdf["nb"].to_numpy(np.int64) == nb_out)
-    if live is not None:
-        whole &= np.bincount(row[~live], minlength=n) == 0
-    if whole.any():
-        yield pdf.loc[whole, SEGMENT_COLS]
     salt = xxh64_long_np(docs) % nb_out[row]
     keep = (salt % pdf["m"].to_numpy(np.int64)[row]
-            == pdf["grp"].to_numpy(np.int64)[row]) & ~whole[row]
+            == pdf["grp"].to_numpy(np.int64)[row])
     if live is not None:
         keep &= live
     if not keep.any():

@@ -562,33 +562,21 @@ class SegmentIndex:
                     f"<= {tier_min} were squashed into gen {tier_min + 1} "
                     "and cannot be reconstructed individually"
                 )
-        eff_min = max(min_gen, tier_min)
-        gens = []
+        live = {g: dm for g, dm in
+                storage.live_delta_manifests(fs, path, m).items()
+                if as_of_gen is None or g <= as_of_gen}
+        gens = sorted(live)
         # n_docs/avgdl (and field_stats for fielded indexes) come from the
         # HIGHEST committed delta generation — each batch writes the
         # post-batch exact stats — falling back to the base manifest
-        stats_src = m
-        best_gen = eff_min
-        for name in fs.listdir(path):
-            if not (name.startswith("delta_manifest_") and name.endswith(".json")):
-                continue
-            dm = storage.read_json(fs, pjoin(path, name))
-            g = int(dm["gen"])
-            if not dm.get("committed") or g <= eff_min:
-                continue
-            if as_of_gen is not None and g > as_of_gen:
-                continue
-            gens.append(g)
-            if g > best_gen:
-                best_gen = g
-                stats_src = dm
+        stats_src = live[gens[-1]] if gens else m
         return cls(
             spark=spark, path=path, n_docs=int(stats_src["n_docs"]),
             avgdl=float(stats_src["avgdl"]) or 1.0,
             nb_max=int(m["nb_max"]), n_buckets=int(m["n_buckets"]),
             analyzer=m.get("analyzer", "simple"),
             positions=bool(m.get("positions", False)),
-            generations=sorted(gens),
+            generations=gens,
             **({"prune_min_postings": crossover} if crossover else {}),
             seg_dir=m.get("seg_dir", "segments"),
             stats_file=m.get("stats_file", "stats.parquet"),

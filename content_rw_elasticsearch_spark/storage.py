@@ -242,15 +242,31 @@ def parquet_num_rows(fs: IndexFS, path: str) -> int:
     return pq.read_metadata(pa.BufferReader(fs.read_bytes(path))).num_rows
 
 
-def parquet_sum(spark, path: str, col: str) -> int:
+def parquet_sum(spark, fs: IndexFS, path: str, col: str) -> int:
     """Sum of an integer column over a parquet dir: a pyarrow read on a
-    plain local path (no Spark job), one Spark aggregate on a URI store."""
-    if urlparse(path).scheme == "":
+    local store (no Spark job), one Spark aggregate on any other."""
+    if isinstance(fs, LocalFS):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        return int(pc.sum(pq.read_table(path, columns=[col])
+        return int(pc.sum(pq.read_table(_local(path), columns=[col])
                           .column(col)).as_py() or 0)
     from pyspark.sql import functions as F
 
     return int(spark.read.parquet(path).agg(F.sum(col)).collect()[0][0] or 0)
+
+
+def live_delta_manifests(fs: IndexFS, index_dir: str,
+                         m: dict | None = None) -> "dict[int, dict]":
+    """gen → manifest of the committed delta generations, each read once.
+    Given the index manifest ``m``, only the live ones: past its min_gen
+    (folded into the base) and tier_min_gen (squashed by a tier merge)."""
+    floor = max(int(m.get("min_gen", 0)),
+                int(m.get("tier_min_gen", 0))) if m else -1
+    out = {}
+    for name in fs.listdir(index_dir):
+        if name.startswith("delta_manifest_") and name.endswith(".json"):
+            dm = read_json(fs, join(index_dir, name))
+            if dm.get("committed") and int(dm["gen"]) > floor:
+                out[int(dm["gen"])] = dm
+    return out

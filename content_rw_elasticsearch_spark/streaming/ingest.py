@@ -56,22 +56,6 @@ from ..operators.segments import (
 from ..storage import join as pjoin
 
 
-def _committed_manifests(fs: storage.IndexFS, index_dir: str,
-                         m: dict | None = None) -> "dict[int, dict]":
-    """gen → manifest of every committed delta generation, each read once;
-    given the index manifest ``m``, only those a reader loads (past its
-    min_gen and tier_min_gen)."""
-    floor = max(int(m.get("min_gen", 0)),
-                int(m.get("tier_min_gen", 0))) if m else -1
-    out = {}
-    for name in fs.listdir(index_dir):
-        if name.startswith("delta_manifest_") and name.endswith(".json"):
-            dm = storage.read_json(fs, pjoin(index_dir, name))
-            if dm.get("committed") and int(dm["gen"]) > floor:
-                out[int(dm["gen"])] = dm
-    return out
-
-
 def apply_upserts(
     spark: SparkSession,
     index_dir: str,
@@ -156,7 +140,7 @@ def apply_upserts(
             )
         n_deletes = int(r["ndel"])
         n_upserts = int(r["nup"])
-    gen = max(list(_committed_manifests(fs, index_dir))
+    gen = max(list(storage.live_delta_manifests(fs, index_dir))
               + [int(m.get("min_gen", 0))]) + 1
     t0 = time.time()
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
@@ -337,7 +321,7 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
-    live = _committed_manifests(fs, index_dir, m)
+    live = storage.live_delta_manifests(fs, index_dir, m)
     folded_gens = sorted(live)
     old_seg_dir = m.get("seg_dir", "segments")
     old_stats = m.get("stats_file", "stats.parquet")
@@ -366,7 +350,7 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
                                           for dm in [m, *live.values()])),
         m["n_buckets"], pjoin(index_dir, new_seg_dir))
     spark.sparkContext.setJobDescription(None)
-    pc = storage.parquet_sum(spark, pjoin(index_dir, new_stats), "df")
+    pc = storage.parquet_sum(spark, fs, pjoin(index_dir, new_stats), "df")
 
     top = live[folded_gens[-1]] if folded_gens else m
     m.update(
@@ -460,7 +444,7 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
             fs.rmtree(pjoin(index_dir, "delta", f"gen={g}"))
             fs.rmtree(pjoin(index_dir, f"delta_manifest_{g:06d}.json"))
 
-    manifests = _committed_manifests(fs, index_dir, m)
+    manifests = storage.live_delta_manifests(fs, index_dir, m)
     # heal a crash between steps 2 and 3: a committed merged generation
     # whose merged_from are still live — re-commit the pointer only
     for g, dm in sorted(manifests.items()):
@@ -501,7 +485,7 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
         for f_ in [pool.submit(job_segments), pool.submit(job_tombstones)]:
             f_.result()
     posting_count = storage.parquet_sum(
-        spark, pjoin(merged_dir, "segments"), "count")
+        spark, fs, pjoin(merged_dir, "segments"), "count")
     # cumulative stats: the merge does not change the live doc set, so
     # the highest merged generation's exact post-batch stats still hold
     top = manifests[gens[-1]]
@@ -538,7 +522,7 @@ def maybe_compact(spark: SparkSession, index_dir: str,
     merge. Returns the merged manifest or None."""
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
-    if len(_committed_manifests(fs, index_dir, m)) < max_gens:
+    if len(storage.live_delta_manifests(fs, index_dir, m)) < max_gens:
         return None
     return merge_delta_tier(spark, index_dir)
 
