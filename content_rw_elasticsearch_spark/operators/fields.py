@@ -45,14 +45,16 @@ def field_tokenized(df: DataFrame, fields: dict[str, Column | str],
     """(doc_id, field, tokens, doc_len) — every field tokenized in ONE scan
     of the corpus (a single select produces all token arrays; explode
     stacks them). doc_len is the per-field post-analysis token count."""
-    structs = [
-        F.struct(
-            F.lit(name).alias("field"),
-            analyzer_column(col if isinstance(col, str) else col, analyzer)
-            .alias("tokens"),
-        )
-        for name, col in fields.items()
-    ]
+    return _field_rows(df, {name: analyzer_column(col, analyzer)
+                            for name, col in fields.items()}, doc_col)
+
+
+def _field_rows(df: DataFrame, tokens: "dict[str, Column]",
+                doc_col: str) -> DataFrame:
+    """(doc_id, field, tokens, doc_len): one row per (doc, field) of the
+    per-field token columns ``tokens``."""
+    structs = [F.struct(F.lit(name).alias("field"), col.alias("tokens"))
+               for name, col in tokens.items()]
     return (
         df.select(F.col(doc_col).alias("doc_id"),
                   F.explode(F.array(*structs)).alias("ft"))
@@ -218,6 +220,13 @@ class FieldedIndex:
 FIELD_SEP = "\x1f"
 
 
+def prefixed_tokens(field: str, col: "Column | str",
+                    analyzer: str = "simple") -> Column:
+    """The tokens of ``col``, each prefixed ``field<FIELD_SEP>token``."""
+    return F.transform(analyzer_column(col, analyzer),
+                       lambda t: F.concat(F.lit(field + FIELD_SEP), t))
+
+
 def prefixed_field_tokenized(df: DataFrame, fields: dict[str, Column | str],
                              doc_col: str = "doc_id",
                              analyzer: str = "simple") -> DataFrame:
@@ -227,12 +236,8 @@ def prefixed_field_tokenized(df: DataFrame, fields: dict[str, Column | str],
     bucket routing (xxhash64 of the term), block planning, and the WAND
     metadata all become field-scoped without touching their code.
     doc_len stays the FIELD's token count (per-field norms)."""
-    tok = field_tokenized(df, fields, doc_col, analyzer)
-    return tok.withColumn(
-        "tokens",
-        F.transform("tokens",
-                    lambda t: F.concat(F.col("field"), F.lit(FIELD_SEP), t)),
-    )
+    return _field_rows(df, {name: prefixed_tokens(name, col, analyzer)
+                            for name, col in fields.items()}, doc_col)
 
 
 # --- DuckDB oracle ---------------------------------------------------------

@@ -72,11 +72,78 @@ DOCLOCAL_SCHEMA = "term string, doc_id long, tf long, doc_len int"
 POSITIONAL_VB_SCHEMA = DOCLOCAL_SCHEMA + ", pos_vb binary"
 
 
+def doc_local_postings(pdf, with_positions: bool):
+    """(term, doc_id, tf, doc_len[, pos_vb]) of one frame of token rows
+    (doc_id, tokens, doc_len), or None when it holds no token: the numpy
+    kernel of _doc_local_postings, also run in-process by the driver
+    route of apply_upserts. A NULL token list counts as zero tokens (no
+    posting; the row's doc_len stays as given), as the explode of
+    build_postings treats it."""
+    import numpy as np
+    import pandas as pd
+
+    from . import codec
+
+    toks = pdf["tokens"].to_numpy(dtype=object)
+    nrows = len(toks)
+    if not nrows:
+        return None
+    lens = np.fromiter((0 if t is None else len(t) for t in toks),
+                       dtype=np.int64, count=nrows)
+    total = int(lens.sum())
+    if total == 0:
+        return None
+    flat = np.concatenate([np.asarray(t, dtype=object) for t in toks
+                           if t is not None])
+    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), lens)
+    row_starts = np.zeros(nrows, dtype=np.int64)
+    np.cumsum(lens[:-1], out=row_starts[1:])
+    pos = np.arange(total, dtype=np.int64) - row_starts[row_idx]
+    # batch-local term codes; (row << 40) | code is collision-free
+    # for any realistic batch (codes < 2^40 per Arrow batch)
+    codes = pd.factorize(flat)[0].astype(np.int64)
+    # (row << 40) | code packing is exact only while both fit —
+    # a silent overflow would MERGE two postings' positions
+    # (corruption, not an error), same failure class as the
+    # encoder's salt guard (ADVICE r4). Arrow batches are capped
+    # at maxRecordsPerBatch (10k) rows and a batch's vocab is
+    # bounded by its token count, so these never fire in
+    # practice.
+    if nrows > (1 << 23) or int(codes.max()) >= (1 << 40):
+        raise ValueError(
+            f"batch too large for (row << 40) | code packing: "
+            f"{nrows} rows, {int(codes.max()) + 1} distinct terms"
+        )
+    key = (row_idx << 40) | codes
+    order = np.argsort(key, kind="stable")  # stable keeps pos sorted
+    ks = key[order]
+    change = np.flatnonzero(ks[1:] != ks[:-1]) + 1
+    gs = np.concatenate(([0], change))
+    ge = np.concatenate((change, [total]))
+    tfs = (ge - gs).astype(np.int64)
+    od = order[gs]
+    cols = {
+        "term": flat[od],
+        "doc_id": pdf["doc_id"].to_numpy()[row_idx[od]].astype(np.int64),
+        "tf": tfs,
+        "doc_len": pdf["doc_len"].to_numpy()[row_idx[od]].astype(np.int32),
+    }
+    if with_positions:
+        buf, nb = codec.positions_encode_with_lengths(
+            pos[order].astype(np.uint64), tfs)
+        bc = np.zeros(total + 1, dtype=np.int64)
+        np.cumsum(nb, out=bc[1:])
+        mv = memoryview(buf)
+        cols["pos_vb"] = [bytes(mv[s:e]) for s, e in zip(bc[gs], bc[ge])]
+    return pd.DataFrame(cols)
+
+
 def _doc_local_postings(tok_df: DataFrame, with_positions: bool) -> DataFrame:
     """(term, doc_id, tf, doc_len, pos_vb) — build_positional_postings
     with the positions PRE-ENCODED per posting (within-doc delta +
     varbyte, codec.positions_encode semantics), produced DOC-LOCALLY by
-    one mapInPandas pass with zero shuffle.
+    one mapInPandas pass (doc_local_postings per Arrow batch) with zero
+    shuffle.
 
     Why this exists (measured, BENCH/BASELINE.md round 5): (term, doc)
     grouping is doc-local — every posting's rows come from ONE source
@@ -99,64 +166,12 @@ def _doc_local_postings(tok_df: DataFrame, with_positions: bool) -> DataFrame:
     Works on fielded token frames too: grouping is per SOURCE ROW (a
     (doc, field) row), and field identity lives in the term prefix, so
     per-field doc_len rides through unchanged."""
-    import numpy as np
-    import pandas as pd
-
-    from . import codec
 
     def fn(it):
         for pdf in it:
-            toks = pdf["tokens"].to_numpy(dtype=object)
-            nrows = len(toks)
-            if not nrows:
-                continue
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                               count=nrows)
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            flat = np.concatenate([np.asarray(t, dtype=object) for t in toks])
-            row_idx = np.repeat(np.arange(nrows, dtype=np.int64), lens)
-            row_starts = np.zeros(nrows, dtype=np.int64)
-            np.cumsum(lens[:-1], out=row_starts[1:])
-            pos = np.arange(total, dtype=np.int64) - row_starts[row_idx]
-            # batch-local term codes; (row << 40) | code is collision-free
-            # for any realistic batch (codes < 2^40 per Arrow batch)
-            codes = pd.factorize(flat)[0].astype(np.int64)
-            # (row << 40) | code packing is exact only while both fit —
-            # a silent overflow would MERGE two postings' positions
-            # (corruption, not an error), same failure class as the
-            # encoder's salt guard (ADVICE r4). Arrow batches are capped
-            # at maxRecordsPerBatch (10k) rows and a batch's vocab is
-            # bounded by its token count, so these never fire in
-            # practice.
-            if nrows > (1 << 23) or int(codes.max()) >= (1 << 40):
-                raise ValueError(
-                    f"batch too large for (row << 40) | code packing: "
-                    f"{nrows} rows, {int(codes.max()) + 1} distinct terms"
-                )
-            key = (row_idx << 40) | codes
-            order = np.argsort(key, kind="stable")  # stable keeps pos sorted
-            ks = key[order]
-            change = np.flatnonzero(ks[1:] != ks[:-1]) + 1
-            gs = np.concatenate(([0], change))
-            ge = np.concatenate((change, [total]))
-            tfs = (ge - gs).astype(np.int64)
-            od = order[gs]
-            cols = {
-                "term": flat[od],
-                "doc_id": pdf["doc_id"].to_numpy()[row_idx[od]].astype(np.int64),
-                "tf": tfs,
-                "doc_len": pdf["doc_len"].to_numpy()[row_idx[od]].astype(np.int32),
-            }
-            if with_positions:
-                buf, nb = codec.positions_encode_with_lengths(
-                    pos[order].astype(np.uint64), tfs)
-                bc = np.zeros(total + 1, dtype=np.int64)
-                np.cumsum(nb, out=bc[1:])
-                mv = memoryview(buf)
-                cols["pos_vb"] = [bytes(mv[s:e]) for s, e in zip(bc[gs], bc[ge])]
-            yield pd.DataFrame(cols)
+            out = doc_local_postings(pdf, with_positions)
+            if out is not None:
+                yield out
 
     return tok_df.mapInPandas(
         fn, POSITIONAL_VB_SCHEMA if with_positions else DOCLOCAL_SCHEMA)
@@ -175,8 +190,9 @@ def build_postings_doclocal(tok_df: DataFrame) -> DataFrame:
     compresses the staging parquet 748 -> 469 MB. The round-6 2-vs-8
     core A/B closed the open scaling question (faster in absolute terms
     at every core count measured — OPTIMIZATION_r06.md), so this is
-    build_segments' only non-positional staging path; build_postings
-    stays as the declarative reference (ingest, InMemoryIndex)."""
+    the only non-positional posting builder of build_segments and
+    apply_upserts; build_postings stays as the declarative reference
+    (InMemoryIndex)."""
     return _doc_local_postings(tok_df, with_positions=False)
 
 

@@ -197,7 +197,7 @@ def _encode_groups(pdf: pd.DataFrame, with_positions: bool,
     max_tf = np.maximum.reduceat(tfs, starts).astype(np.int64)
     min_dl = np.minimum.reduceat(dls, starts).astype(np.int64)
 
-    if with_positions and "pos_vb" in pdf.columns and n:
+    if with_positions and n:
         # positions arrive PRE-ENCODED per posting (build_positional_
         # postings_vb): each blob is a self-delimiting varbyte run whose
         # delta restarts at its doc boundary, so the doc-ordered byte
@@ -210,21 +210,6 @@ def _encode_groups(pdf: pd.DataFrame, with_positions: bool,
         np.cumsum(plen, out=bc[1:])
         buf = b"".join(pvbs)
         pos_vb = [buf[s:e] for s, e in zip(bc[starts], bc[ends])]
-    elif with_positions and "positions" in pdf.columns and n:
-        plists = pdf["positions"].to_numpy(dtype=object)[order]
-        flat = np.concatenate(
-            [np.asarray(p, dtype=np.uint64) for p in plists]
-        ) if n else np.empty(0, np.uint64)
-        pos_buf, pos_nb = codec.positions_encode_with_lengths(flat, tfs)
-        # posting index -> flat-position index via cumsum(tfs), then to
-        # byte offsets via cumsum of the per-position byte counts
-        tf_cum = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tfs.astype(np.int64), out=tf_cum[1:])
-        byte_cum = np.zeros(flat.size + 1, dtype=np.int64)
-        np.cumsum(pos_nb, out=byte_cum[1:])
-        bs = byte_cum[tf_cum[starts]]
-        be = byte_cum[tf_cum[ends]]
-        pos_vb = [pos_buf[s:e] for s, e in zip(bs, be)]
     else:
         pos_vb = [b""] * starts.size
 
@@ -311,7 +296,7 @@ def encode_segments(salted: DataFrame, with_positions: bool = False,
                     partitions: int | None = None,
                     carry_cols: list[str] | None = None,
                     est_postings: int | None = None) -> DataFrame:
-    """salted postings (term, salt, nb, doc_id, tf, doc_len[, positions])
+    """salted postings (term, salt, nb, doc_id, tf, doc_len[, pos_vb])
     → segment rows, via the sorted-stream encoder. ``carry_cols`` are
     extra columns constant per (term, salt) group (e.g. bucket) emitted
     unchanged on the segment rows. ``est_postings`` (when the caller
@@ -342,15 +327,12 @@ def encode_segments(salted: DataFrame, with_positions: bool = False,
     # via the stats join instead of shipping it per posting); the output
     # then omits it too.
     has_nb = "nb" in salted.columns
-    # the positional column may be the pre-encoded per-posting varbyte
-    # (pos_vb, build_positional_postings_vb — ONE binary per posting
-    # through the shuffle and Arrow boundary) or the legacy array<int>
-    # (ingest delta path); _encode_groups handles both
-    pos_in = ([("pos_vb" if "pos_vb" in salted.columns else "positions")]
-              if with_positions else [])
+    # positions arrive pre-encoded per posting (pos_vb,
+    # build_positional_postings_vb — ONE binary per posting through the
+    # shuffle and Arrow boundary)
     cols = ["term", "salt"] + (["nb"] if has_nb else []) + [
         "doc_id", "tf", "doc_len"
-    ] + pos_in + carry_cols
+    ] + (["pos_vb"] if with_positions else []) + carry_cols
     schema = StructType(
         [StructField("term", salted.schema["term"].dataType)]
         + [f for f in list(SEGMENT_SCHEMA.fields)[1:]

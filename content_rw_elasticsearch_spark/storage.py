@@ -1,8 +1,9 @@
 """Index-store filesystem abstraction.
 
 The segment store's dataflow (operators/segments.py, streaming/ingest.py)
-is pure Spark; only its MANIFEST and DIRECTORY bookkeeping touches a
-filesystem directly. On the sandbox that is the driver-local POSIX tree,
+is Spark, except the driver executor of apply_upserts, whose parquet
+files go through ``write_parquet``; beyond that only MANIFEST and
+DIRECTORY bookkeeping touches a filesystem directly. On the sandbox that is the driver-local POSIX tree,
 but on a real cluster the store lives on HDFS/S3 — so every such
 operation goes through this small interface instead of bare ``os``/
 ``shutil`` calls:
@@ -229,6 +230,19 @@ def restore_swap(fs: IndexFS, dst: str) -> None:
             fs.rmtree(bak)
         else:
             fs.rename(bak, dst)
+
+
+def write_parquet(fs: IndexFS, path: str, table) -> None:
+    """Write a pyarrow table as ONE parquet file at ``path`` (parent dirs
+    created) — the one parquet write of the segment store that does not
+    go through Spark's writers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs.makedirs(posixpath.dirname(path))
+    fs.write_bytes(path, buf.getvalue())
 
 
 def parquet_num_rows(fs: IndexFS, path: str) -> int:

@@ -12,7 +12,12 @@ Batch form: ``apply_upserts`` writes one delta GENERATION:
     docs/                            exact (doc_id, doc_len, gen) bookkeeping
     delta_manifest_N.json            committed LAST (atomic restart point)
 A killed batch re-applies idempotently: the generation number is derived
-from committed manifests, uncommitted dirs are rebuilt.
+from committed manifests, uncommitted dirs are rebuilt. Two executors
+write the same rows: a small batch on a local store (under the query
+path's DRIVER_MAX_POSTINGS, checked by one bounded Arrow collect) runs
+the kernels in-process with pyarrow writes; any other batch runs them as
+Spark jobs. Both write segments, tombstones and docs.tmp, then swap
+docs/, then commit the manifest.
 
 Streaming form: ``stream_ingest`` wraps the same function in Structured
 Streaming's foreachBatch — micro-batch upserts with checkpointed offsets,
@@ -39,20 +44,30 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from .. import storage
+from ..functions.hashing import pmod, xxh64_long_np, xxh64_string
 from ..operators import postings as P
 from ..operators.segments import (
+    SEGMENT_COLS,
     SEGMENT_READ_SCHEMA,
+    SEGMENT_SCHEMA,
+    _encode_groups,
     compact_segments,
     encode_segments,
     live_term_counts,
     plan_block_counts,
     write_segments,
 )
+from ..operators.wand import DRIVER_MAX_POSTINGS
 from ..storage import join as pjoin
 
 
@@ -76,6 +91,18 @@ def apply_upserts(
     offset column for deterministic replays). Without it, duplicate
     doc_ids raise: letting both versions through would double-count
     postings in the delta generation and inflate n_docs/avgdl.
+
+    Two executors write the same rows, chosen by the query path's rule
+    (wand.DRIVER_MAX_POSTINGS). On a local store, one bounded Arrow
+    collect of the analyzed batch (the row limit is the bound over the
+    current avgdl) decides: when it holds at most DRIVER_MAX_POSTINGS
+    tokens and the docs table (the current n_docs rows) fits under the
+    bound too, the posting, salting and encoding kernels run in-process
+    and pyarrow writes the files (_apply_on_driver). Otherwise, and on
+    a URI store, the same kernels run as Spark jobs (_apply_on_spark).
+    Either way the crash order is: the delta segments, the tombstones
+    and the merged docs.tmp are written; docs/ is swapped in only after
+    all three succeed; the delta manifest is committed last.
 
     FIELDED indexes (build_segments(fields=...)): pass ``fields`` — the
     same field-name → Column/str mapping the build used (field
@@ -108,16 +135,183 @@ def apply_upserts(
         )
     updates = updates.withColumnRenamed(doc_col, "doc_id")
     is_deleted = F.col(deleted_col) if deleted_col else F.lit(False)
-    n_upserts: int | None = None
     if ts_col:
-        if updates.isEmpty():
-            return None
         w = Window.partitionBy("doc_id").orderBy(F.desc(ts_col))
         updates = (
             updates.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+    committed = storage.live_delta_manifests(fs, index_dir)
+    gen = max(list(committed) + [int(m.get("min_gen", 0))]) + 1
+    # the docs table as of now: the latest generation's stats
+    cur = committed.get(gen - 1, m)
+    t0 = time.time()
+    batch = None
+    if "://" not in index_dir and int(cur["n_docs"]) <= DRIVER_MAX_POSTINGS:
+        batch = _small_batch(updates, is_deleted, text_col, fields,
+                             m.get("analyzer", "simple"), float(cur["avgdl"]))
+    if batch is not None:
+        stats = _apply_on_driver(fs, index_dir, m, gen, batch, fields,
+                                 ts_col is not None)
+    else:
+        stats = _apply_on_spark(spark, fs, index_dir, m, gen, updates,
+                                is_deleted, text_col, fields, ts_col)
+    if stats is None:
+        return None
+    manifest = {
+        "gen": gen,
+        "snapshot_id": m.get("snapshot_id", ""),
+        **stats,
+        "build_metrics": {"secs": round(time.time() - t0, 3)},
+        "committed": True,
+    }
+    storage.write_json_atomic(
+        fs, pjoin(index_dir, f"delta_manifest_{gen:06d}.json"), manifest
+    )
+    return manifest
+
+
+def _small_batch(updates: DataFrame, is_deleted, text_col: str,
+                 fields: dict | None, analyzer: str, avgdl: float):
+    """The analyzed batch as one Arrow table — doc_id, deleted and the
+    token column(s): ``tokens``, or one prefixed column per field, NULL
+    on rows that are not live — when it holds at most
+    DRIVER_MAX_POSTINGS tokens; else None. The collect is bounded: its
+    row limit is the bound over the tokens a row is expected to carry."""
+    from ..functions.analyzer import analyzer_column
+    from ..operators.fields import prefixed_tokens
+
+    live = ~is_deleted
+    if fields:
+        toks = [F.when(live, prefixed_tokens(f, c, analyzer))
+                .alias(f"tokens{i}") for i, (f, c) in enumerate(fields.items())]
+    else:
+        toks = [F.when(live, analyzer_column(text_col, analyzer))
+                .alias("tokens")]
+    limit = max(1, int(DRIVER_MAX_POSTINGS / max(1.0, avgdl * len(toks))))
+    spark = updates.sparkSession
+    spark.sparkContext.setJobDescription("ingest: collect batch")
+    tab = updates.select("doc_id", is_deleted.alias("deleted"), *toks) \
+        .limit(limit + 1).toArrow()
+    spark.sparkContext.setJobDescription(None)
+    if tab.num_rows > limit:
+        return None
+    tokens = sum(int(pc.sum(pc.list_value_length(tab.column(i))).as_py() or 0)
+                 for i in range(2, tab.num_columns))
+    return tab if tokens <= DRIVER_MAX_POSTINGS else None
+
+
+def _apply_on_driver(fs, index_dir: str, m: dict, gen: int, batch,
+                     fields: dict | None, reduced: bool) -> dict | None:
+    """apply_upserts' driver executor over the collected batch
+    (_small_batch): the doc-local posting kernel, the stats file's block
+    counts, _encode_groups, and pyarrow writes through
+    storage.write_parquet. Returns the manifest's batch stats."""
+    if batch.num_rows == 0:
+        return None
+    ids = batch.column("doc_id").to_numpy()
+    upd_ids = np.unique(ids)
+    if not reduced and upd_ids.size != ids.size:
+        raise ValueError(
+            f"batch has {ids.size - upd_ids.size} duplicate doc_id rows; "
+            "pass ts_col= to reduce to last-writer-wins or pre-dedupe"
+        )
+    deleted = batch.column("deleted")
+    live = pc.fill_null(pc.invert(deleted), False)
+    tok = batch.filter(live)
+    # one (doc_id[, field], tokens, doc_len) row per live doc and field;
+    # the token columns follow doc_id and deleted, in field order
+    parts = [pa.table({
+        "doc_id": tok.column("doc_id"),
+        **({"field": pa.array([f] * tok.num_rows, pa.string())}
+           if fields else {}),
+        "tokens": tok.column(2 + i),
+        "doc_len": pc.list_value_length(tok.column(2 + i)),
+    }) for i, f in enumerate(fields or [None])]
+    rows = pa.concat_tables(parts)
+    with_pos = bool(m.get("positions", False))
+    segs = _encode_delta(
+        P.doc_local_postings(rows.to_pandas(), with_pos), with_pos,
+        pjoin(index_dir, m.get("stats_file", "stats.parquet")),
+        m["n_buckets"])
+
+    delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
+    fs.rmtree(delta_dir)  # uncommitted partial batch: rebuild
+    fs.makedirs(pjoin(delta_dir, "segments"))
+    seg_schema = to_arrow_schema(SEGMENT_SCHEMA)
+    for b, part in segs.groupby("bucket", sort=True):
+        storage.write_parquet(
+            fs, pjoin(delta_dir, "segments", f"bucket={b}", _PART),
+            pa.Table.from_pandas(part[SEGMENT_COLS], seg_schema,
+                                 preserve_index=False))
+    storage.write_parquet(fs, pjoin(delta_dir, "tombstones", _PART),
+                          pa.table({"doc_id": pa.array(upd_ids, pa.int64())}))
+    docs_path = pjoin(index_dir, "docs")
+    docs_tmp = docs_path + ".tmp"
+    storage.restore_swap(fs, docs_path)
+    schema = _docs_schema(bool(fields))
+    old = pq.read_table(docs_path, schema=schema)
+    new = rows.drop_columns(["tokens"]).append_column(
+        "gen", pa.array(np.full(rows.num_rows, gen, np.int32))
+    ).append_column("deleted", pa.array(np.zeros(rows.num_rows, bool)))
+    # the anti-join is on doc_id alone even when fielded: an upsert
+    # replaces the whole document, so every (doc, field) row dies
+    docs = pa.concat_tables([
+        old.filter(pc.invert(pc.is_in(old.column("doc_id"),
+                                      pa.array(upd_ids, pa.int64())))),
+        new.cast(schema)])
+    fs.rmtree(docs_tmp)
+    storage.write_parquet(fs, pjoin(docs_tmp, _PART), docs)
+    storage.swap_dir(fs, docs_tmp, docs_path)
+
+    def norms(lens) -> dict:
+        return {"n_docs": len(lens),
+                "avgdl": float(pc.mean(lens).as_py() or 0.0)}
+
+    return {
+        **norms(docs.column("doc_len")),
+        "n_upserts": int(pc.sum(live).as_py() or 0),
+        "n_deletes": int(pc.sum(deleted).as_py() or 0),
+        "posting_count": int(segs["count"].sum()),
+        **({"field_stats": {f: norms(docs.column("doc_len").filter(
+            pc.equal(docs.column("field"), f))) for f in m["field_stats"]}}
+           if fields else {}),
+    }
+
+
+def _encode_delta(post, with_pos: bool, stats_path: str,
+                  n_buckets: int) -> pd.DataFrame:
+    """Segment rows (plus their ``bucket``) of a delta generation's
+    postings (doc_local_postings; None when there is none), salted
+    with the stats file's block counts — one block for an unseen term."""
+    if post is None:
+        return pd.DataFrame(columns=SEGMENT_COLS + ["bucket"])
+    terms = pd.unique(post["term"])
+    plan = pq.read_table(stats_path, columns=["term", "nb"],
+                         filters=[("term", "in", list(terms))]).to_pandas()
+    nb = post["term"].map(plan.set_index("term")["nb"]).fillna(1) \
+        .to_numpy(np.int64)
+    post["nb"] = nb
+    post["salt"] = xxh64_long_np(post["doc_id"].to_numpy()) % nb
+    post["bucket"] = post["term"].map(pd.Series(
+        [pmod(xxh64_string(t), n_buckets) for t in terms], index=terms))
+    # the build's file layout: rows sorted by (term, salt) per bucket
+    return pd.concat(list(_encode_groups(post, with_pos, ["bucket"]))) \
+        .sort_values(["bucket", "term", "salt"], ignore_index=True)
+
+
+def _apply_on_spark(spark: SparkSession, fs, index_dir: str, m: dict,
+                    gen: int, updates: DataFrame, is_deleted,
+                    text_col: str, fields: dict | None,
+                    ts_col: str | None) -> dict | None:
+    """apply_upserts' distributed executor: the same kernels as Spark
+    jobs. Returns the manifest's batch stats."""
+    fielded = fields is not None
+    n_upserts: int | None = None
+    if ts_col:
+        if updates.isEmpty():
+            return None
         n_deletes = updates.filter(is_deleted).count()
     else:
         # ONE aggregate replaces three separate driver jobs (the
@@ -140,9 +334,6 @@ def apply_upserts(
             )
         n_deletes = int(r["ndel"])
         n_upserts = int(r["nup"])
-    gen = max(list(storage.live_delta_manifests(fs, index_dir))
-              + [int(m.get("min_gen", 0))]) + 1
-    t0 = time.time()
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
     fs.rmtree(delta_dir)  # uncommitted partial batch: rebuild
     live = updates.filter(~is_deleted)
@@ -158,13 +349,10 @@ def apply_upserts(
     else:
         tok = P.tokenized(live, text_col, "doc_id", m.get("analyzer", "simple"))
     post = (
-        P.build_positional_postings(tok) if with_pos else P.build_postings(tok)
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(m["n_buckets"])).cast("int")
+        P.build_positional_postings_vb(tok) if with_pos
+        else P.build_postings_doclocal(tok)
     )
-    nbs = spark.read.parquet(
-        pjoin(index_dir, m.get("stats_file", "stats.parquet"))
-    ).select("term", "nb")
+    nbs = _block_plan(spark, index_dir, m.get("stats_file", "stats.parquet"))
     salted = post.join(F.broadcast(nbs), "term", "left").withColumn(
         "nb", F.coalesce(F.col("nb"), F.lit(1))  # unseen term → one block
     ).withColumn(
@@ -180,13 +368,17 @@ def apply_upserts(
     # commit still leaves the batch's rows in docs/; retrying the batch
     # is idempotent (it rmtree-s the uncommitted delta dir and re-merges
     # docs/ with the same anti-join). The manifest commit remains the
-    # LAST, strictly-sequential step.
+    # LAST, strictly-sequential step. The posting count and the docs
+    # stats are Observation metrics of the writes, not read back.
+    seg_obs = Observation("ingest: posting count")
+
     def job_segments():
         spark.sparkContext.setJobDescription("ingest: delta segments")
         segs = encode_segments(salted, with_pos, partitions=2)
         segs.withColumn(
             "bucket",
             F.pmod(F.xxhash64("term"), F.lit(m["n_buckets"])).cast("int")) \
+            .observe(seg_obs, F.sum("count").alias("postings")) \
             .coalesce(2).sortWithinPartitions("bucket", "term", "salt") \
             .write.partitionBy("bucket").parquet(pjoin(delta_dir, "segments"))
 
@@ -201,11 +393,14 @@ def apply_upserts(
     docs_path = pjoin(index_dir, "docs")
     docs_tmp = docs_path + ".tmp"
     doc_cols = ["doc_id"] + (["field"] if fielded else []) + ["doc_len"]
+    names = list(m["field_stats"]) if fielded else []
+    docs_obs = Observation("ingest: docs stats")
 
     def job_docs():
         spark.sparkContext.setJobDescription("ingest: docs merge")
         storage.restore_swap(fs, docs_path)
-        old = spark.read.parquet(docs_path)
+        old = spark.read.schema(from_arrow_schema(_docs_schema(fielded))) \
+            .parquet(docs_path)
         upd_ids = updates.select("doc_id").distinct()
         new_rows = tok.select(*doc_cols).withColumn("gen", F.lit(gen)) \
             .withColumn("deleted", F.lit(False))
@@ -213,71 +408,48 @@ def apply_upserts(
         # replaces the whole document, so every (doc, field) row dies
         merged = old.join(upd_ids, "doc_id", "left_anti") \
             .unionByName(new_rows)
-        merged.write.mode("overwrite").parquet(docs_tmp)
+        # one count and mean per manifest field: a field whose last live
+        # documents this batch deletes must be written as n_docs == 0 —
+        # dropping it would make readers fall back to stale base-manifest
+        # norms (ADVICE r4)
+        per_field = [agg for i, f in enumerate(names) for agg in (
+            F.count(F.when(F.col("field") == f, 1)).alias(f"n{i}"),
+            F.avg(F.when(F.col("field") == f, F.col("doc_len")))
+            .alias(f"avgdl{i}"))]
+        merged.observe(docs_obs, F.count(F.lit(1)).alias("n"),
+                       F.avg("doc_len").alias("avgdl"), *per_field) \
+            .write.mode("overwrite").parquet(docs_tmp)
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         for f_ in [pool.submit(job_segments), pool.submit(job_tombstones),
                    pool.submit(job_docs)]:
             f_.result()
     storage.swap_dir(fs, docs_tmp, docs_path)
-
-    # follow-up aggregates (docs stats need the merged docs table; the
-    # posting count needs the written segments) — independent of each
-    # other, so they overlap too
-    def job_doc_stats():
-        spark.sparkContext.setJobDescription("ingest: docs stats")
-        row = spark.read.parquet(docs_path).agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        field_stats = None
-        if fielded:
-            # zero-fill from the manifest's field names first: a batch
-            # that deletes a field's last live documents must write that
-            # field as n_docs == 0 — dropping it (or writing {}) would
-            # make readers fall back to stale base-manifest norms
-            # (ADVICE r4)
-            field_stats = {
-                f: {"n_docs": 0, "avgdl": 0.0} for f in m["field_stats"]
-            }
-            for r in spark.read.parquet(docs_path).groupBy("field").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg("doc_len").alias("avgdl"),
-            ).collect():
-                field_stats[r["field"]] = {
-                    "n_docs": int(r["n"]), "avgdl": float(r["avgdl"] or 0.0)
-                }
-        return row, field_stats
-
-    def job_posting_count():
-        spark.sparkContext.setJobDescription("ingest: posting count")
-        return int(
-            spark.read.schema(SEGMENT_READ_SCHEMA)
-            .parquet(pjoin(delta_dir, "segments"))
-            .agg(F.sum("count")).collect()[0][0] or 0
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stats = pool.submit(job_doc_stats)
-        f_pc = pool.submit(job_posting_count)
-        row, field_stats = f_stats.result()
-        posting_count = f_pc.result()
-    manifest = {
-        "gen": gen,
-        "snapshot_id": m.get("snapshot_id", ""),
+    spark.sparkContext.setJobDescription(None)
+    row = docs_obs.get
+    return {
         "n_docs": int(row["n"]),
         "avgdl": float(row["avgdl"] or 0.0),
         "n_upserts": (n_upserts if n_upserts is not None
                       else int(live.count())),
         "n_deletes": int(n_deletes),
-        "posting_count": posting_count,
-        **({"field_stats": field_stats} if field_stats is not None else {}),
-        "build_metrics": {"secs": round(time.time() - t0, 3)},
-        "committed": True,
+        "posting_count": int(seg_obs.get["postings"] or 0),
+        **({"field_stats": {f: {"n_docs": int(row[f"n{i}"]),
+                                "avgdl": float(row[f"avgdl{i}"] or 0.0)}
+                            for i, f in enumerate(names)}}
+           if fielded else {}),
     }
-    storage.write_json_atomic(
-        fs, pjoin(index_dir, f"delta_manifest_{gen:06d}.json"), manifest
-    )
-    return manifest
+
+
+_PART = "part-00000.parquet"  # the one file of a pyarrow-written dir
+
+
+def _docs_schema(fielded: bool):
+    """Arrow schema of the docs table (the build's Spark types)."""
+    return pa.schema([("doc_id", pa.int64())]
+                     + ([("field", pa.string())] if fielded else [])
+                     + [("doc_len", pa.int32()), ("gen", pa.int32()),
+                        ("deleted", pa.bool_())])
 
 
 def _segment_rows(spark: SparkSession, dirs: "list[tuple[int, str]]"

@@ -193,7 +193,9 @@ def test_tier_merge_equals_one_batch(spark, corpus, bases, tmp_path, kind):
 # measured after block-level compaction (the posting-level pipeline they
 # replaced launched 9 and 22); jobs the engine submits from its own
 # driver threads carry no job group and are counted too
-LIFECYCLE_JOBS = {"tier_merge": 5, "fold": 7}
+# apply_upserts runs on the driver executor here: its jobs are the
+# bounded collect of the analyzed batch (the Spark route launched ~20)
+LIFECYCLE_JOBS = {"apply_upserts": 1, "tier_merge": 5, "fold": 7}
 _GROUPS = itertools.count()
 
 
@@ -218,6 +220,7 @@ def test_lifecycle_job_counts(spark, corpus, bases, tmp_path, kind):
     path = _copy(bases["positional"][0], str(tmp_path / "idx"))
     _upsert(spark, path, b1, "positional")
     _upsert(spark, path, b2, "positional")
-    call = {"tier_merge": lambda: merge_delta_tier(spark, path),
+    call = {"apply_upserts": lambda: _upsert(spark, path, b1, "positional"),
+            "tier_merge": lambda: merge_delta_tier(spark, path),
             "fold": lambda: fold_deltas(spark, path)}[kind]
     assert _jobs_launched(spark, call) <= LIFECYCLE_JOBS[kind]

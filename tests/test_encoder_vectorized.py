@@ -12,7 +12,10 @@ This test re-implements the original per-group encoder verbatim as the
 reference and asserts byte-identical output across every input shape:
 string/int64 terms, with/without nb, with/without positions, duplicate
 (term, salt) spread across the frame, single-group, and single-posting
-frames. No Spark session needed — the encoder is pure pandas/numpy.
+frames. The reference encodes each group's position lists; the encoder
+receives them as it does in the engine, pre-encoded per posting
+(pos_vb, the doc-local posting builder's output). No Spark session
+needed — the encoder is pure pandas/numpy.
 """
 
 from __future__ import annotations
@@ -92,6 +95,8 @@ def _make_input(n_groups: int, avg_sz: int, with_positions: bool,
             if with_positions:
                 row["positions"] = np.sort(
                     rng.integers(0, 5000, tf).astype(np.uint64))
+                row["pos_vb"] = codec.positions_encode(
+                    row["positions"], np.array([tf], np.uint64))
             rows.append(row)
     df = pd.DataFrame(rows)
     # scatter group members across the frame (hash repartition order)
@@ -99,6 +104,7 @@ def _make_input(n_groups: int, avg_sz: int, with_positions: bool,
 
 
 def _run_new(pdf, with_positions, carry):
+    pdf = pdf.drop(columns=["positions"], errors="ignore")
     return pd.concat(
         list(segments._encode_groups(pdf, with_positions, carry)),
         ignore_index=True,

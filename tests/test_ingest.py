@@ -372,7 +372,9 @@ def test_failed_segment_encode_leaves_docs_table_unchanged(spark, monkeypatch):
         raise RuntimeError("segment encode failed")
 
     with monkeypatch.context() as mp:
+        # the encoder of either executor: Spark's and the driver's
         mp.setattr(ingest, "encode_segments", broken_encode)
+        mp.setattr(ingest, "_encode_groups", broken_encode)
         with pytest.raises(RuntimeError, match="segment encode failed"):
             ingest.apply_upserts(spark, path, spark.createDataFrame(
                 [(ids[0], "zzzghost updated body", False),
