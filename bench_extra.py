@@ -14,10 +14,11 @@ change that trades a job for driver work shows up either way.
 The lifecycle section times ``apply_upserts`` (two 2% batches of
 updates, deletes and inserts), ``merge_delta_tier`` and ``fold_deltas``
 on the plain and the positional index, each repetition on a fresh copy
-of the built index, then the same batches on a fresh copy through a
-``file://`` URI (``apply_upserts_uri``: the Spark route; a local path
-takes the driver route); jobs the engine submits from its own driver
-threads carry no job group and are counted too.
+of the built index, then the same calls on a fresh copy through a
+``file://`` URI (``apply_upserts_uri``, ``merge_delta_tier_uri``,
+``fold_deltas_uri``: the Spark route; a local path under
+DRIVER_MAX_POSTINGS takes the driver route); jobs the engine submits
+from its own driver threads carry no job group and are counted too.
 
 Usage:  SPARK_GRAFT_SF_DIR=<dir holding documents.parquet> \\
         SPARK_GRAFT_CPUS=4 python bench_extra.py [reps]
@@ -100,13 +101,17 @@ def lifecycle(spark, corpus, index_dir: str, reps: int) -> dict:
         "apply_upserts": lambda work, b: ingest.apply_upserts(
             spark, work, spark.createDataFrame(b), "text", "doc_id",
             "deleted"),
-        # the same batches on a file:// URI take the Spark route
-        "apply_upserts_uri": lambda work, b: ingest.apply_upserts(
-            spark, "file://" + work + "_uri", spark.createDataFrame(b), "text",
-            "doc_id", "deleted"),
         "merge_delta_tier": lambda work, _b: ingest.merge_delta_tier(
             spark, work),
         "fold_deltas": lambda work, _b: ingest.fold_deltas(spark, work),
+        # the same calls on a file:// URI take the Spark route
+        "apply_upserts_uri": lambda work, b: ingest.apply_upserts(
+            spark, "file://" + work + "_uri", spark.createDataFrame(b), "text",
+            "doc_id", "deleted"),
+        "merge_delta_tier_uri": lambda work, _b: ingest.merge_delta_tier(
+            spark, "file://" + work + "_uri"),
+        "fold_deltas_uri": lambda work, _b: ingest.fold_deltas(
+            spark, "file://" + work + "_uri"),
     }
     secs: dict = {name: [] for name in calls}
     jobs: dict = {}
@@ -117,7 +122,8 @@ def lifecycle(spark, corpus, index_dir: str, reps: int) -> dict:
             shutil.copytree(index_dir, w)
         for name, b in [("apply_upserts", b) for b in batches] + [
                 ("merge_delta_tier", None), ("fold_deltas", None)] + [
-                ("apply_upserts_uri", b) for b in batches]:
+                ("apply_upserts_uri", b) for b in batches] + [
+                ("merge_delta_tier_uri", None), ("fold_deltas_uri", None)]:
             group = f"bx-{next(_GROUPS)}"
             before = set(tracker.getJobIdsForGroup(None))
             spark.sparkContext.setJobGroup(group, "bench_extra")

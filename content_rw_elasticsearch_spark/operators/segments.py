@@ -67,7 +67,7 @@ from pyspark.sql.types import (
 )
 
 from .. import storage
-from ..functions.hashing import xxh64_long_np
+from ..functions.hashing import pmod, xxh64_long_np, xxh64_string
 from ..storage import join as pjoin
 from . import codec
 from . import postings as P
@@ -112,6 +112,18 @@ def plan_block_counts(stats: DataFrame, target_block: int = TARGET_BLOCK,
     # would otherwise truncate to a non-power-of-two
     nb = F.least(F.lit(nb_max), F.round(F.pow(F.lit(2.0), raw)).cast("int"))
     return stats.withColumn("nb", F.greatest(F.lit(1), nb))
+
+
+def plan_block_counts_np(df: np.ndarray, target_block: int = TARGET_BLOCK,
+                         nb_max: int = NB_MAX) -> np.ndarray:
+    """plan_block_counts over a numpy df array, for the driver executor:
+    the same nb in integer arithmetic. For q = ceil(df/target) >= 2,
+    2^ceil(log2(q)) is 2 to the bit length of q - 1, which frexp gives
+    exactly (no float log to round at a power of two)."""
+    q = -(-np.asarray(df, np.int64) // target_block)
+    bits = np.frexp(np.maximum(q - 1, 0).astype(np.float64))[1]
+    return np.clip(np.left_shift(1, bits.astype(np.int64)), 1,
+                   nb_max).astype(np.int32)
 
 
 GROUPS_PER_YIELD = 8192  # bound the size of each output Arrow batch
@@ -784,16 +796,29 @@ def _decode_live(pdf: pd.DataFrame, tomb):
                                  tomb)
 
 
+def _live_counts(pdf: pd.DataFrame, tomb) -> np.ndarray:
+    """Postings per segment row that survive the tombstone rule."""
+    row, _docs, live = _decode_live(pdf, tomb)
+    return (pdf["count"].to_numpy(np.int64) if live is None
+            else np.bincount(row[live], minlength=len(pdf)))
+
+
+def live_term_counts_local(rows: pd.DataFrame, tomb) -> pd.Series:
+    """live_term_counts on the driver: df per term (sorted), terms with
+    no live posting left out."""
+    df = pd.Series(_live_counts(rows, tomb)).groupby(
+        rows["term"].to_numpy()).sum()
+    return df[df > 0]
+
+
 def live_term_counts(rows: DataFrame, tomb) -> DataFrame:
     """(term, df) over segment rows tagged with their ``gen``: the
     postings that survive the tombstone rule, per term; terms with none
     are left out. Reads only the docs_vb column of the blocks."""
     def run(batches):
         for pdf in batches:
-            row, _docs, live = _decode_live(pdf, tomb)
-            yield pd.DataFrame({"term": pdf["term"], "live": (
-                pdf["count"] if live is None
-                else np.bincount(row[live], minlength=len(pdf)))})
+            yield pd.DataFrame({"term": pdf["term"],
+                                "live": _live_counts(pdf, tomb)})
 
     # one Python task per core, not per segment file: each task start
     # costs more than its counting (SegmentIndex._decoded does the same)
@@ -856,9 +881,10 @@ def compact_segments(rows: DataFrame, plan: DataFrame, tomb,
     tagged with its ``gen`` — into the block counts of ``plan``
     (term, nb), live postings only (``tomb``: wand's _read_tombstones
     arrays). ``prior`` (term, nb) is the plan the input rows were salted
-    with, ``plan`` itself when None; a term either lacks has one block.
-    The one compaction behind fold_deltas, merge_delta_tier and
-    merge_segments.
+    with, ``plan`` itself when None; a term that either plan lacks has
+    one block there. The distributed executor of the compaction behind
+    fold_deltas, merge_delta_tier and merge_segments; compact_local is
+    the driver's.
 
     Rows group by (term, salt mod m), m the smaller of the term's output
     and prior block counts: salting is aligned and block counts are
@@ -895,14 +921,74 @@ def compact_segments(rows: DataFrame, plan: DataFrame, tomb,
             batches, tomb, with_positions), SEGMENT_SCHEMA)
 
 
-def write_segments(segs: DataFrame, n_buckets: int, path: str) -> None:
+def compact_local(rows: pd.DataFrame, nb_out, tomb,
+                  with_positions: bool) -> pd.DataFrame:
+    """compact_segments on the driver: the kernel once over every row as
+    one group (m = 1, grp 0). ``nb_out`` is each row's output block
+    count (aligned with ``rows``)."""
+    out = list(_compact_rows([rows.assign(nb_out=nb_out, m=1, grp=0)],
+                             tomb, with_positions))
+    return (pd.concat(out, ignore_index=True) if out
+            else pd.DataFrame(columns=SEGMENT_COLS))
+
+
+def read_local_segments(dirs: "list[tuple[int, str]]") -> pd.DataFrame:
+    """Segment rows of the given (gen, local segment dir)s via pyarrow,
+    each tagged with its ``gen`` — the driver executor's read. The
+    explicit schema keeps an empty dir (a delete-only batch) readable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(SEGMENT_SCHEMA)
+    tabs = [pq.read_table(d, schema=schema) for _g, d in dirs]
+    gens = np.repeat([g for g, _d in dirs], [t.num_rows for t in tabs])
+    return pa.concat_tables(tabs).to_pandas().assign(gen=gens)
+
+
+_PART = "part-00000.parquet"  # the one file of a pyarrow-written dir
+
+
+def write_local_segments(fs, segs: pd.DataFrame, n_buckets: int,
+                         path: str) -> int:
+    """Segment rows → ``path``/bucket=j/ with pyarrow, in write_segments'
+    layout: one file per bucket (``pmod(xxhash64(term), n_buckets)``),
+    rows sorted by (term, salt). ``path`` is made even without rows.
+    Returns the number of rows (blocks) written."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fs.makedirs(path)
+    terms = pd.unique(segs["term"])
+    segs = segs.assign(bucket=segs["term"].map(pd.Series(
+        [pmod(xxh64_string(t), n_buckets) for t in terms], index=terms,
+        dtype=np.int64))).sort_values(["bucket", "term", "salt"])
+    schema = to_arrow_schema(SEGMENT_SCHEMA)
+    for b, part in segs.groupby("bucket", sort=True):
+        storage.write_parquet(
+            fs, pjoin(path, f"bucket={b}", _PART),
+            pa.Table.from_pandas(part[SEGMENT_COLS], schema,
+                                 preserve_index=False))
+    return len(segs)
+
+
+def write_segments(segs: DataFrame, n_buckets: int, path: str
+                   ) -> "tuple[int, int]":
     """Segment rows → ``path``/bucket=j/ in the build's layout: one file
-    per bucket, rows sorted by (term, salt) for row-group pruning."""
+    per bucket, rows sorted by (term, salt) for row-group pruning.
+    Returns (blocks, postings) written, as metrics of the write itself
+    (no read-back)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
     segs.withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    ).repartition(n_buckets, "bucket") \
+    ).observe(obs, F.count(F.lit(1)).alias("blocks"),
+              F.sum("count").alias("postings")) \
+        .repartition(n_buckets, "bucket") \
         .sortWithinPartitions("bucket", "term", "salt") \
         .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    return int(obs.get["blocks"]), int(obs.get["postings"] or 0)
 
 
 def merge_segments(
@@ -910,12 +996,15 @@ def merge_segments(
 ) -> None:
     """Second-level merge: re-block each base term to the smallest
     power-of-two block count that still meets target_block, never more
-    than it has — compact_segments with no tombstones (delta generations
-    stay as they are). Block-max metadata is recomputed on the final
-    layout (SURVEY.md §7 hard part 3). The merged base lands in a NEW
+    than it has — the compaction kernel with no tombstones (delta
+    generations stay as they are). Block-max metadata is recomputed on
+    the final layout (SURVEY.md §7 hard part 3). A local base of at most
+    DRIVER_MAX_POSTINGS postings (the manifest's count) is merged on the
+    driver (compact_local, pyarrow reads and writes); any other runs
+    compact_segments as Spark jobs. The merged base lands in a NEW
     versioned dir committed by one index.json write (crash before the
     commit leaves the old base fully live; the orphan dir is rebuilt)."""
-    from .wand import _NO_TOMB
+    from .wand import _NO_TOMB, DRIVER_MAX_POSTINGS
 
     fs = storage.fs_for(out_dir, spark)
     manifest = storage.read_json(fs, pjoin(out_dir, "index.json"))
@@ -923,19 +1012,32 @@ def merge_segments(
     version = int(manifest.get("base_version", 0)) + 1
     new_seg_dir = f"segments_v{version}"
     seg_path = pjoin(out_dir, manifest.get("seg_dir", "segments"))
-    rows = spark.read.schema(SEGMENT_READ_SCHEMA).parquet(seg_path) \
-        .withColumn("gen", F.lit(0))
-    plan = plan_block_counts(rows.groupBy("term").agg(
-        F.sum("count").alias("df"), F.min("nb").alias("nb_in")),
-        tb, manifest["nb_max"]).select(
-            "term", F.least("nb", "nb_in").alias("nb"))
     new_path = pjoin(out_dir, new_seg_dir)
     fs.rmtree(new_path)  # orphan of a crashed merge
-    write_segments(compact_segments(
-        rows, plan, _NO_TOMB, bool(manifest.get("positions")),
-        est_postings=int(manifest.get("posting_count", 0))),
-        manifest["n_buckets"], new_path)
-    manifest["block_count"] = int(spark.read.parquet(new_path).count())
+    postings = int(manifest.get("posting_count", 0))
+    positions = bool(manifest.get("positions"))
+    if "://" not in out_dir and postings <= DRIVER_MAX_POSTINGS:
+        rows = read_local_segments([(0, seg_path)])
+        terms = rows.groupby("term")
+        df = terms["count"].sum()
+        nb = np.minimum(plan_block_counts_np(
+            df.to_numpy(), tb, manifest["nb_max"]),
+            terms["nb"].min().to_numpy())
+        segs = compact_local(rows, rows["term"].map(
+            pd.Series(nb, index=df.index)), _NO_TOMB, positions)
+        blocks = write_local_segments(fs, segs, manifest["n_buckets"],
+                                      new_path)
+    else:
+        rows = spark.read.schema(SEGMENT_READ_SCHEMA).parquet(seg_path) \
+            .withColumn("gen", F.lit(0))
+        plan = plan_block_counts(rows.groupBy("term").agg(
+            F.sum("count").alias("df"), F.min("nb").alias("nb_in")),
+            tb, manifest["nb_max"]).select(
+                "term", F.least("nb", "nb_in").alias("nb"))
+        blocks, _ = write_segments(compact_segments(
+            rows, plan, _NO_TOMB, positions, est_postings=postings),
+            manifest["n_buckets"], new_path)
+    manifest["block_count"] = blocks
     manifest["merged"] = True
     manifest["seg_dir"] = new_seg_dir
     manifest["base_version"] = version

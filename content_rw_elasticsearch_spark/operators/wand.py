@@ -143,29 +143,22 @@ def _read_tombstones(spark: SparkSession, path: str, gens: "list[int]"
     """(doc_id, tgen) of the given delta generations' tombstones as numpy
     arrays sorted by doc_id, tgen the max tombstone generation per doc —
     the one tombstone read every live-posting decode applies. A pyarrow
-    read on a local path, one collected Spark read on a URI store;
-    re-read on every call (no cache), like every other query read."""
+    read through the store (storage.read_parquet: no Spark job on any
+    store); re-read on every call (no cache), like every other query
+    read."""
+    import pyarrow as pa
+
     if not gens:
         return _NO_TOMB
+    fs = storage.fs_for(path, spark)
+    schema = pa.schema([("doc_id", pa.int64())])
     dirs = [(g, pjoin(path, "delta", f"gen={g}", "tombstones"))
             for g in gens]
-    if "://" in path:
-        parts = [spark.read.parquet(d).select("doc_id", F.lit(g).alias("g"))
-                 for g, d in dirs]
-        cur = parts[0]
-        for p in parts[1:]:
-            cur = cur.unionByName(p)
-        pdf = cur.dropna().toPandas()
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        tgen = pdf["g"].to_numpy(np.int64)
-    else:
-        import pyarrow.parquet as pq
-
-        cols = [pq.read_table(d, columns=["doc_id"]).column("doc_id")
-                .drop_null().to_numpy().astype(np.int64) for _g, d in dirs]
-        ids = np.concatenate(cols)
-        tgen = np.concatenate([np.full(c.size, g, np.int64)
-                               for (g, _d), c in zip(dirs, cols)])
+    cols = [storage.read_parquet(fs, d, schema).column("doc_id")
+            .drop_null().to_numpy().astype(np.int64) for _g, d in dirs]
+    ids = np.concatenate(cols)
+    tgen = np.concatenate([np.full(c.size, g, np.int64)
+                           for (g, _d), c in zip(dirs, cols)])
     # after a sort by (id, gen) the last row of each id run holds its max
     # tombstone generation
     order = np.lexsort((tgen, ids))

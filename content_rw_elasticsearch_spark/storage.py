@@ -1,9 +1,10 @@
 """Index-store filesystem abstraction.
 
 The segment store's dataflow (operators/segments.py, streaming/ingest.py)
-is Spark, except the driver executor of apply_upserts, whose parquet
-files go through ``write_parquet``; beyond that only MANIFEST and
-DIRECTORY bookkeeping touches a filesystem directly. On the sandbox that is the driver-local POSIX tree,
+is Spark, except the driver executors of apply_upserts and of the
+compactions (fold, tier merge, second-level merge), whose parquet files
+go through ``write_parquet``; beyond that only MANIFEST and DIRECTORY
+bookkeeping touches a filesystem directly. On the sandbox that is the driver-local POSIX tree,
 but on a real cluster the store lives on HDFS/S3 — so every such
 operation goes through this small interface instead of bare ``os``/
 ``shutil`` calls:
@@ -245,6 +246,23 @@ def write_parquet(fs: IndexFS, path: str, table) -> None:
     fs.write_bytes(path, buf.getvalue())
 
 
+def read_parquet(fs: IndexFS, path: str, schema):
+    """The parquet files of one flat dir as a pyarrow table of ``schema``
+    (no Spark job; an empty dir gives no rows). Local stores read in
+    place; remote stores fetch each file's bytes once — for small dirs
+    such as a generation's tombstones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if isinstance(fs, LocalFS):
+        return pq.read_table(_local(path), schema=schema)
+    return pa.concat_tables([schema.empty_table()] + [
+        pq.read_table(pa.BufferReader(fs.read_bytes(join(path, name))),
+                      schema=schema)
+        for name in fs.listdir(path)
+        if name.endswith(".parquet") and name[0] not in "._"])
+
+
 def parquet_num_rows(fs: IndexFS, path: str) -> int:
     """Row count from the parquet footer (no Spark job). Local paths read
     the footer directly; remote stores fetch the file bytes once."""
@@ -254,20 +272,6 @@ def parquet_num_rows(fs: IndexFS, path: str) -> int:
     if isinstance(fs, LocalFS):
         return pq.read_metadata(_local(path)).num_rows
     return pq.read_metadata(pa.BufferReader(fs.read_bytes(path))).num_rows
-
-
-def parquet_sum(spark, fs: IndexFS, path: str, col: str) -> int:
-    """Sum of an integer column over a parquet dir: a pyarrow read on a
-    local store (no Spark job), one Spark aggregate on any other."""
-    if isinstance(fs, LocalFS):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        return int(pc.sum(pq.read_table(_local(path), columns=[col])
-                          .column(col)).as_py() or 0)
-    from pyspark.sql import functions as F
-
-    return int(spark.read.parquet(path).agg(F.sum(col)).collect()[0][0] or 0)
 
 
 def live_delta_manifests(fs: IndexFS, index_dir: str,

@@ -12,12 +12,15 @@ Batch form: ``apply_upserts`` writes one delta GENERATION:
     docs/                            exact (doc_id, doc_len, gen) bookkeeping
     delta_manifest_N.json            committed LAST (atomic restart point)
 A killed batch re-applies idempotently: the generation number is derived
-from committed manifests, uncommitted dirs are rebuilt. Two executors
-write the same rows: a small batch on a local store (under the query
-path's DRIVER_MAX_POSTINGS, checked by one bounded Arrow collect) runs
-the kernels in-process with pyarrow writes; any other batch runs them as
-Spark jobs. Both write segments, tombstones and docs.tmp, then swap
-docs/, then commit the manifest.
+from committed manifests, uncommitted dirs are rebuilt.
+
+Two executors write the same rows, for ingest and compaction alike: on
+a local store, work under the query path's DRIVER_MAX_POSTINGS runs the
+kernels in-process with pyarrow reads and writes; anything else runs
+them as Spark jobs. An upsert batch is sized by one bounded Arrow
+collect; a fold or tier merge by its input postings, summed from the
+manifests (no scan). Both executors write the same files, and the
+commits that follow them (docs/ swap, manifests) are shared code.
 
 Streaming form: ``stream_ingest`` wraps the same function in Structured
 Streaming's foreachBatch — micro-batch upserts with checkpointed offsets,
@@ -28,15 +31,17 @@ the direct analog of the reference's Kafka consumer loop
 versions, into a fresh base with EXACT recomputed statistics (df
 approximation ends here — same lifecycle as a Lucene segment merge).
 ``merge_delta_tier`` squashes the delta generations alone. Both run one
-block-level kernel (segments.compact_segments): segment rows group by
-(term, salt mod m) and the shuffle moves compressed blocks, never
-posting rows.
+block-level kernel (segments._compact_rows): on the driver once over
+all input rows (segments.compact_local), on Spark per group of
+(term, salt mod m) (segments.compact_segments), where the shuffle moves
+compressed blocks, never posting rows.
 
 Scale notes: the docs-table rewrite per batch is the sandbox stand-in for
 an Iceberg ``MERGE INTO`` (same dataflow, engine-managed file swap); delta
 segments are small and term-bucketed like the base, so query-side file
 pruning still applies; fold still rewrites the whole base — it is the
-amortized merge, run off-peak.
+amortized merge, run off-peak. Only an index under DRIVER_MAX_POSTINGS
+folds in the driver; a large one folds on the cluster, as before.
 """
 
 from __future__ import annotations
@@ -51,20 +56,25 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import storage
-from ..functions.hashing import pmod, xxh64_long_np, xxh64_string
+from ..functions.hashing import xxh64_long_np
 from ..operators import postings as P
 from ..operators.segments import (
     SEGMENT_COLS,
     SEGMENT_READ_SCHEMA,
-    SEGMENT_SCHEMA,
+    _PART,
     _encode_groups,
+    compact_local,
     compact_segments,
     encode_segments,
     live_term_counts,
+    live_term_counts_local,
     plan_block_counts,
+    plan_block_counts_np,
+    read_local_segments,
+    write_local_segments,
     write_segments,
 )
 from ..operators.wand import DRIVER_MAX_POSTINGS
@@ -148,7 +158,7 @@ def apply_upserts(
     cur = committed.get(gen - 1, m)
     t0 = time.time()
     batch = None
-    if "://" not in index_dir and int(cur["n_docs"]) <= DRIVER_MAX_POSTINGS:
+    if _on_driver(index_dir, int(cur["n_docs"])):
         batch = _small_batch(updates, is_deleted, text_col, fields,
                              m.get("analyzer", "simple"), float(cur["avgdl"]))
     if batch is not None:
@@ -170,6 +180,13 @@ def apply_upserts(
         fs, pjoin(index_dir, f"delta_manifest_{gen:06d}.json"), manifest
     )
     return manifest
+
+
+def _on_driver(index_dir: str, postings: int) -> bool:
+    """The driver executor's admission rule (the query path's): a local
+    store and at most DRIVER_MAX_POSTINGS postings — or, for
+    apply_upserts' first check, docs-table rows."""
+    return "://" not in index_dir and postings <= DRIVER_MAX_POSTINGS
 
 
 def _small_batch(updates: DataFrame, is_deleted, text_col: str,
@@ -233,18 +250,12 @@ def _apply_on_driver(fs, index_dir: str, m: dict, gen: int, batch,
     with_pos = bool(m.get("positions", False))
     segs = _encode_delta(
         P.doc_local_postings(rows.to_pandas(), with_pos), with_pos,
-        pjoin(index_dir, m.get("stats_file", "stats.parquet")),
-        m["n_buckets"])
+        pjoin(index_dir, m.get("stats_file", "stats.parquet")))
 
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
     fs.rmtree(delta_dir)  # uncommitted partial batch: rebuild
-    fs.makedirs(pjoin(delta_dir, "segments"))
-    seg_schema = to_arrow_schema(SEGMENT_SCHEMA)
-    for b, part in segs.groupby("bucket", sort=True):
-        storage.write_parquet(
-            fs, pjoin(delta_dir, "segments", f"bucket={b}", _PART),
-            pa.Table.from_pandas(part[SEGMENT_COLS], seg_schema,
-                                 preserve_index=False))
+    write_local_segments(fs, segs, m["n_buckets"],
+                         pjoin(delta_dir, "segments"))
     storage.write_parquet(fs, pjoin(delta_dir, "tombstones", _PART),
                           pa.table({"doc_id": pa.array(upd_ids, pa.int64())}))
     docs_path = pjoin(index_dir, "docs")
@@ -280,25 +291,27 @@ def _apply_on_driver(fs, index_dir: str, m: dict, gen: int, batch,
     }
 
 
-def _encode_delta(post, with_pos: bool, stats_path: str,
-                  n_buckets: int) -> pd.DataFrame:
-    """Segment rows (plus their ``bucket``) of a delta generation's
-    postings (doc_local_postings; None when there is none), salted
-    with the stats file's block counts — one block for an unseen term."""
+def _encode_delta(post, with_pos: bool, stats_path: str) -> pd.DataFrame:
+    """Segment rows of a delta generation's postings (doc_local_postings;
+    None when there is none), salted with the stats file's block
+    counts."""
     if post is None:
-        return pd.DataFrame(columns=SEGMENT_COLS + ["bucket"])
-    terms = pd.unique(post["term"])
-    plan = pq.read_table(stats_path, columns=["term", "nb"],
-                         filters=[("term", "in", list(terms))]).to_pandas()
-    nb = post["term"].map(plan.set_index("term")["nb"]).fillna(1) \
-        .to_numpy(np.int64)
+        return pd.DataFrame(columns=SEGMENT_COLS)
+    nb = _stats_nb(stats_path, post["term"])
     post["nb"] = nb
     post["salt"] = xxh64_long_np(post["doc_id"].to_numpy()) % nb
-    post["bucket"] = post["term"].map(pd.Series(
-        [pmod(xxh64_string(t), n_buckets) for t in terms], index=terms))
-    # the build's file layout: rows sorted by (term, salt) per bucket
-    return pd.concat(list(_encode_groups(post, with_pos, ["bucket"]))) \
-        .sort_values(["bucket", "term", "salt"], ignore_index=True)
+    return pd.concat(list(_encode_groups(post, with_pos, [])))
+
+
+def _stats_nb(stats_path: str, terms: pd.Series) -> np.ndarray:
+    """The stats file's block count of each of ``terms`` (a pyarrow read
+    filtered to them) — one block for a term it lacks."""
+    if terms.empty:  # pyarrow refuses an empty "in" filter
+        return np.ones(0, np.int64)
+    plan = pq.read_table(stats_path, columns=["term", "nb"], filters=[
+        ("term", "in", list(pd.unique(terms)))]).to_pandas()
+    return terms.map(plan.set_index("term")["nb"]).fillna(1) \
+        .to_numpy(np.int64)
 
 
 def _apply_on_spark(spark: SparkSession, fs, index_dir: str, m: dict,
@@ -441,9 +454,6 @@ def _apply_on_spark(spark: SparkSession, fs, index_dir: str, m: dict,
     }
 
 
-_PART = "part-00000.parquet"  # the one file of a pyarrow-written dir
-
-
 def _docs_schema(fielded: bool):
     """Arrow schema of the docs table (the build's Spark types)."""
     return pa.schema([("doc_id", pa.int64())]
@@ -476,13 +486,20 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     """Compact all delta generations into a fresh exact base (the Lucene
     segment-merge analog) at block level: a counts pass (live postings
     per block, summed per term) gives exact df and the new block plan
-    (stats_v{k}); compact_segments then re-blocks base and delta rows in
-    one grouped kernel — tombstoned postings dropped, positions carried
-    as bytes, doc_len from dlens_vb — into a NEW versioned base dir,
-    committed with ONE index.json write; the old base and the folded
-    deltas are garbage-collected after. Terms with no live posting are
-    dropped. n_docs/avgdl (and per-field norms) are the exact post-batch
+    (stats_v{k}); the compaction kernel then re-blocks base and delta
+    rows — tombstoned postings dropped, positions carried as bytes,
+    doc_len from dlens_vb — into a NEW versioned base dir, committed
+    with ONE index.json write; the old base and the folded deltas are
+    garbage-collected after. Terms with no live posting are dropped.
+    n_docs/avgdl (and per-field norms) are the exact post-batch
     statistics of the highest folded generation's manifest.
+
+    Two executors write the same files, chosen by the query path's rule
+    from the manifests alone: on a local store whose base and live delta
+    postings (their manifests' posting_count) are at most
+    DRIVER_MAX_POSTINGS, the fold runs in-process with pyarrow reads and
+    writes (_fold_on_driver); otherwise, and on a URI store, as Spark
+    jobs (_fold_on_spark).
 
     Crash safety: the manifest commit is the only state transition — a
     crash before it leaves the old base + deltas fully live (the v{k}
@@ -500,29 +517,21 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     version = int(m.get("base_version", 0)) + 1
     new_seg_dir = f"segments_v{version}"
     new_stats = f"stats_v{version}.parquet"
-    rows = _segment_rows(spark, [(0, pjoin(index_dir, old_seg_dir))] + [
+    dirs = [(0, pjoin(index_dir, old_seg_dir))] + [
         (g, pjoin(index_dir, "delta", f"gen={g}", "segments"))
-        for g in folded_gens])
+        for g in folded_gens]
     # the tombstone rule drops superseded versions in both passes
     tomb = _read_tombstones(spark, index_dir, folded_gens)
-
-    spark.sparkContext.setJobDescription("fold: counts + block plan")
-    stats = live_term_counts(rows, tomb)
-    fs.rmtree(pjoin(index_dir, new_stats))  # orphan of a crashed fold
-    plan_block_counts(stats, m["target_block"], m["nb_max"]) \
-        .write.mode("overwrite").parquet(pjoin(index_dir, new_stats))
-
-    spark.sparkContext.setJobDescription("fold: compact segments")
+    fs.rmtree(pjoin(index_dir, new_stats))  # orphans of a crashed fold
     fs.rmtree(pjoin(index_dir, new_seg_dir))
-    write_segments(
-        compact_segments(rows, _block_plan(spark, index_dir, new_stats),
-                         tomb, bool(m.get("positions", False)),
-                         prior=_block_plan(spark, index_dir, old_stats),
-                         est_postings=sum(int(dm.get("posting_count", 0))
-                                          for dm in [m, *live.values()])),
-        m["n_buckets"], pjoin(index_dir, new_seg_dir))
-    spark.sparkContext.setJobDescription(None)
-    pc = storage.parquet_sum(spark, fs, pjoin(index_dir, new_stats), "df")
+    postings = sum(int(dm.get("posting_count", 0))
+                   for dm in [m, *live.values()])
+    if _on_driver(index_dir, postings):
+        pc = _fold_on_driver(fs, index_dir, m, dirs, tomb, new_seg_dir,
+                             new_stats)
+    else:
+        pc = _fold_on_spark(spark, index_dir, m, dirs, tomb, new_seg_dir,
+                            new_stats, postings)
 
     top = live[folded_gens[-1]] if folded_gens else m
     m.update(
@@ -570,6 +579,50 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     return m
 
 
+def _fold_on_driver(fs, index_dir: str, m: dict, dirs, tomb,
+                    new_seg_dir: str, new_stats: str) -> int:
+    """fold_deltas' driver executor: the segment rows of ``dirs`` read
+    with pyarrow, df from their live postings, the block plan, the
+    compaction kernel over them as one group, pyarrow writes. Returns
+    the posting count."""
+    rows = read_local_segments(dirs)
+    df = live_term_counts_local(rows, tomb)
+    nb = plan_block_counts_np(df.to_numpy(), m["target_block"], m["nb_max"])
+    storage.write_parquet(fs, pjoin(index_dir, new_stats, _PART), pa.table({
+        "term": pa.array(df.index, pa.string()),
+        "df": pa.array(df.to_numpy(), pa.int64()),
+        "nb": pa.array(nb, pa.int32())}))
+    # a term with no live posting writes no block
+    nb_out = rows["term"].map(pd.Series(nb, index=df.index)).fillna(1)
+    write_local_segments(
+        fs, compact_local(rows, nb_out.to_numpy(np.int64), tomb,
+                          bool(m.get("positions", False))),
+        m["n_buckets"], pjoin(index_dir, new_seg_dir))
+    return int(df.sum())
+
+
+def _fold_on_spark(spark: SparkSession, index_dir: str, m: dict, dirs,
+                   tomb, new_seg_dir: str, new_stats: str,
+                   postings: int) -> int:
+    """fold_deltas' distributed executor: live_term_counts and
+    compact_segments as Spark jobs. Returns the posting count."""
+    rows = _segment_rows(spark, dirs)
+    spark.sparkContext.setJobDescription("fold: counts + block plan")
+    plan_block_counts(live_term_counts(rows, tomb), m["target_block"],
+                      m["nb_max"]) \
+        .write.mode("overwrite").parquet(pjoin(index_dir, new_stats))
+    spark.sparkContext.setJobDescription("fold: compact segments")
+    _blocks, pc = write_segments(
+        compact_segments(rows, _block_plan(spark, index_dir, new_stats),
+                         tomb, bool(m.get("positions", False)),
+                         prior=_block_plan(spark, index_dir, m.get(
+                             "stats_file", "stats.parquet")),
+                         est_postings=postings),
+        m["n_buckets"], pjoin(index_dir, new_seg_dir))
+    spark.sparkContext.setJobDescription(None)
+    return pc
+
+
 def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     """Two-level merge (the north rule's delta-tier compaction): squash
     ALL live delta generations into ONE new generation WITHOUT touching
@@ -584,9 +637,15 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     after the merge no generation exists strictly between the base and
     M+1: base postings a merged tombstone used to kill at gen g are
     killed at M+1 the same way, and in-set supersedes were resolved
-    during the merge itself. The delta blocks are re-blocked by
-    compact_segments with the base block plan (unseen terms one block,
+    during the merge itself. The delta blocks are re-blocked by the
+    compaction kernel with the base block plan (unseen terms one block,
     the rule apply_upserts wrote them with) and the in-set tombstones.
+
+    Two executors write the same files, chosen from the manifests alone:
+    on a local store whose live delta postings (their manifests'
+    posting_count) are at most DRIVER_MAX_POSTINGS, the merge runs
+    in-process with pyarrow reads and writes (_merge_on_driver);
+    otherwise, and on a URI store, as Spark jobs (_merge_on_spark).
 
     Crash safety — the commit ladder is correct at every step:
       1. merged segments + tombstones written under delta/gen={M+1}
@@ -629,35 +688,19 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
         return None
     new_gen = gens[-1] + 1
     t0 = time.time()
-    rows = _segment_rows(spark, [
-        (g, pjoin(index_dir, "delta", f"gen={g}", "segments")) for g in gens])
+    dirs = [(g, pjoin(index_dir, "delta", f"gen={g}", "segments"))
+            for g in gens]
     # the kernel drops in-set superseded versions (the tombstone rule)
     tomb = _read_tombstones(spark, index_dir, gens)
     merged_dir = pjoin(index_dir, "delta", f"gen={new_gen}")
     fs.rmtree(merged_dir)  # uncommitted orphan of a crashed merge
-
-    def job_segments():
-        spark.sparkContext.setJobDescription("tier merge: compact segments")
-        write_segments(
-            compact_segments(rows, _block_plan(
-                spark, index_dir, m.get("stats_file", "stats.parquet")),
-                tomb, bool(m.get("positions", False)),
-                est_postings=sum(int(manifests[g].get("posting_count", 0))
-                                 for g in gens)),
-            m["n_buckets"], pjoin(merged_dir, "segments"))
-
-    def job_tombstones():
-        spark.sparkContext.setJobDescription("tier merge: tombstones")
-        spark.createDataFrame(pd.DataFrame({"doc_id": tomb[0]}),
-                              "doc_id long") \
-            .write.parquet(pjoin(merged_dir, "tombstones"))
-
-    # independent writes overlap, as in apply_upserts
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f_ in [pool.submit(job_segments), pool.submit(job_tombstones)]:
-            f_.result()
-    posting_count = storage.parquet_sum(
-        spark, fs, pjoin(merged_dir, "segments"), "count")
+    postings = sum(int(manifests[g].get("posting_count", 0)) for g in gens)
+    if _on_driver(index_dir, postings):
+        posting_count = _merge_on_driver(fs, index_dir, m, dirs, tomb,
+                                         merged_dir)
+    else:
+        posting_count = _merge_on_spark(spark, index_dir, m, dirs, tomb,
+                                        merged_dir, postings)
     # cumulative stats: the merge does not change the live doc set, so
     # the highest merged generation's exact post-batch stats still hold
     top = manifests[gens[-1]]
@@ -680,6 +723,51 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     )
     _commit_pointer(gens[-1], gens)
     return manifest
+
+
+def _merge_on_driver(fs, index_dir: str, m: dict, dirs, tomb,
+                     merged_dir: str) -> int:
+    """merge_delta_tier's driver executor: the delta rows read with
+    pyarrow, the compaction kernel over them as one group with the base
+    block plan, pyarrow writes of the segments and the merged
+    tombstones. Returns the posting count."""
+    rows = read_local_segments(dirs)
+    nb_out = _stats_nb(pjoin(index_dir, m.get("stats_file", "stats.parquet")),
+                       rows["term"])
+    segs = compact_local(rows, nb_out, tomb, bool(m.get("positions", False)))
+    write_local_segments(fs, segs, m["n_buckets"],
+                         pjoin(merged_dir, "segments"))
+    storage.write_parquet(fs, pjoin(merged_dir, "tombstones", _PART),
+                          pa.table({"doc_id": pa.array(tomb[0], pa.int64())}))
+    return int(segs["count"].sum())
+
+
+def _merge_on_spark(spark: SparkSession, index_dir: str, m: dict, dirs,
+                    tomb, merged_dir: str, postings: int) -> int:
+    """merge_delta_tier's distributed executor: compact_segments and the
+    tombstone write as Spark jobs. Returns the posting count."""
+    rows = _segment_rows(spark, dirs)
+
+    def job_segments() -> int:
+        spark.sparkContext.setJobDescription("tier merge: compact segments")
+        return write_segments(
+            compact_segments(rows, _block_plan(
+                spark, index_dir, m.get("stats_file", "stats.parquet")),
+                tomb, bool(m.get("positions", False)),
+                est_postings=postings),
+            m["n_buckets"], pjoin(merged_dir, "segments"))[1]
+
+    def job_tombstones():
+        spark.sparkContext.setJobDescription("tier merge: tombstones")
+        spark.createDataFrame(pd.DataFrame({"doc_id": tomb[0]}),
+                              "doc_id long") \
+            .write.parquet(pjoin(merged_dir, "tombstones"))
+
+    # independent writes overlap, as in apply_upserts
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        segs, tombs = pool.submit(job_segments), pool.submit(job_tombstones)
+        tombs.result()
+        return segs.result()
 
 
 def maybe_compact(spark: SparkSession, index_dir: str,
